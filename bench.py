@@ -255,23 +255,13 @@ def main() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 
-    from pyspark.sql import SparkSession
+    from etl_ch_destination_spark.session import get_spark
 
-    from etl_ch_destination_spark.session import ensure_session_defaults
-
-    spark = (
-        SparkSession.builder.appName("etl-ch-destination-spark-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", shuffle)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        "etl-ch-destination-spark-bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(shuffle),
     )
-    ensure_session_defaults(spark)
     spark.sparkContext.setLogLevel("ERROR")
 
     from etl_ch_destination_spark.registry import all_queries

@@ -17,20 +17,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
-
     from etl_ch_destination_spark.pbcompat import PB_SITE_DIR, ensure_protobuf
-    from etl_ch_destination_spark.session import ensure_session_defaults
+    from etl_ch_destination_spark.session import get_spark
 
-    builder = (
-        SparkSession.builder.appName("etl-ch-destination-spark-tests")
-        .master("local[4]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-    )
+    extra_conf = {}
     if ensure_protobuf():
         # workers are fresh interpreters: the sitecustomize hook in
         # PB_SITE_DIR re-applies the protobuf shim at worker start so
@@ -41,9 +31,13 @@ def spark():
         os.environ["PYTHONPATH"] = (
             PB_SITE_DIR + os.pathsep + os.environ.get("PYTHONPATH", "")
         ).rstrip(os.pathsep)
-        builder = builder.config("spark.executorEnv.PYTHONPATH", PB_SITE_DIR)
-    s = builder.getOrCreate()
-    ensure_session_defaults(s)
+        extra_conf["spark.executorEnv.PYTHONPATH"] = PB_SITE_DIR
+    s = get_spark(
+        "etl-ch-destination-spark-tests",
+        master="local[4]",
+        shuffle_partitions=8,
+        extra_conf=extra_conf,
+    )
     yield s
     s.stop()
 
