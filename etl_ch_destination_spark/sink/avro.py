@@ -64,6 +64,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from etl_ch_destination_spark.sink.wire import read_zigzag, write_zigzag
+
 AVRO_MAGIC = b"Obj\x01"
 # The spec says "randomly-generated" per file; a PINNED marker keeps
 # the writer deterministic (golden tests) and costs nothing — readers
@@ -83,51 +85,6 @@ try:  # pragma: no cover - exercised by the scan_avro_import worker path
     _cp.register_pickle_by_value(_av_mod)
 except Exception:  # noqa: BLE001  (older pickler without the hook)
     pass
-
-
-# --------------------------------------------------------------------
-# zigzag varint (spec: int/long binary encoding)
-# --------------------------------------------------------------------
-
-
-def zigzag(n: int) -> bytes:
-    """Encode a signed long as zigzag + unsigned LEB128 varint."""
-    u = (n << 1) ^ (n >> 63) if n >= -(1 << 63) else None
-    if u is None or not (0 <= u < 1 << 64):
-        raise ValueError(f"long out of range: {n}")
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def read_zigzag(buf: bytes, pos: int) -> tuple[int, int]:
-    """Decode zigzag varint at ``pos``; returns (value, next_pos).
-
-    Rejects encodings longer than 10 bytes AND a 10th byte carrying
-    anything beyond bit 0: shift 63 holds the last valid long bit, so
-    a 10th byte of e.g. 0x7F would silently accumulate u > 2^64 and
-    decode to a value outside Avro's long range — fail loudly instead
-    (the encoder's zigzag() rejects such values symmetrically)."""
-    shift = u = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("truncated varint")
-        b = buf[pos]
-        pos += 1
-        if shift == 63 and b & 0xFE:
-            raise ValueError("varint out of long range")
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return (u >> 1) ^ -(u & 1), pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("varint too long")
 
 
 # --------------------------------------------------------------------
@@ -185,20 +142,20 @@ def _encode_primitive(t, v) -> bytes:
                 raise TypeError(f"decimal field got {type(v).__name__}")
             unscaled = int(v.scaleb(t["scale"]))
             nbytes = max(1, (unscaled.bit_length() + 8) // 8)
-            return zigzag(nbytes) + unscaled.to_bytes(nbytes, "big", signed=True)
+            return write_zigzag(nbytes) + unscaled.to_bytes(nbytes, "big", signed=True)
         if lt == "timestamp-micros":
             import datetime as _dt
 
             micros = (v - _dt.datetime(1970, 1, 1)) // _dt.timedelta(
                 microseconds=1
             )
-            return zigzag(micros)
+            return write_zigzag(micros)
         raise NotImplementedError(f"logicalType {lt}")
     if t in ("long", "int"):
-        return zigzag(int(v))
+        return write_zigzag(int(v))
     if t == "string":
         raw = v.encode("utf-8")
-        return zigzag(len(raw)) + raw
+        return write_zigzag(len(raw)) + raw
     if t == "double":
         return struct.pack("<d", float(v))
     if t == "float":
@@ -215,9 +172,9 @@ def encode_record(schema: dict, row: tuple) -> bytes:
         t = f["type"]
         if isinstance(t, list):  # ["null", T] union
             if v is None:
-                out += zigzag(0)
+                out += write_zigzag(0)
                 continue
-            out += zigzag(1)
+            out += write_zigzag(1)
             t = t[1]
         elif v is None:
             raise ValueError(f"null in non-nullable field {f['name']}")
@@ -386,11 +343,11 @@ def decode_container_resolved(
 
 
 def _meta_map(schema_json: str, codec: str) -> bytes:
-    out = bytearray(zigzag(2))
+    out = bytearray(write_zigzag(2))
     for k, v in (("avro.schema", schema_json), ("avro.codec", codec)):
         kb, vb = k.encode(), v.encode()
-        out += zigzag(len(kb)) + kb + zigzag(len(vb)) + vb
-    out += zigzag(0)
+        out += write_zigzag(len(kb)) + kb + write_zigzag(len(vb)) + vb
+    out += write_zigzag(0)
     return bytes(out)
 
 
@@ -412,7 +369,7 @@ def encode_container(
         if codec == "deflate":
             c = zlib.compressobj(6, zlib.DEFLATED, -15)
             data = c.compress(data) + c.flush()
-        out += zigzag(len(chunk)) + zigzag(len(data)) + data + SYNC_MARKER
+        out += write_zigzag(len(chunk)) + write_zigzag(len(data)) + data + SYNC_MARKER
     return bytes(out)
 
 

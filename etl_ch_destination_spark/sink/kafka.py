@@ -49,6 +49,8 @@ import struct
 import sys as _sys
 from collections.abc import Iterator
 
+from etl_ch_destination_spark.sink.wire import read_zigzag, write_zigzag
+
 # Worker-cwd import trap (see sink/rowbinary.py): ship by value.
 try:  # pragma: no cover
     from pyspark import cloudpickle as _cp
@@ -114,48 +116,15 @@ def crc32c(data: bytes, crc: int = 0) -> int:
 
 
 # ------------------------------------------------------------------
-# zigzag varints (protocol "varint"/"varlong")
-# ------------------------------------------------------------------
-
-
+# zigzag varints (protocol "varint"/"varlong") come from sink/wire.py.
 # r15 (VERDICT r14 #8, guide §4): the varint hot loops were ~33% of
-# the codec's CPU after the CRC slice-by-8 work. The wire format is
-# unchanged; the common case — a SINGLE-BYTE varint (zigzag value in
-# [-64, 63]: record-internal deltas, small lengths, header counts) —
-# takes a precomputed-table path on encode and an inlined branch in
-# parse_batch on decode, while zz_encode/zz_decode remain the
-# validating general path (multi-byte values, truncation, >10-byte
-# overlong) that the malformed-framing gates exercise.
-_ZZ1 = [bytes([u]) for u in range(0x80)]
-
-
-def zz_encode(n: int) -> bytes:
-    u = (n << 1) ^ (n >> 63)
-    if u < 0x80:
-        return _ZZ1[u]
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def zz_decode(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = u = 0
-    for i in range(10):
-        if pos >= len(buf):
-            raise ValueError("truncated varint")
-        b = buf[pos]
-        pos += 1
-        u |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return (u >> 1) ^ -(u & 1), pos
-        shift += 7
-    raise ValueError("varint longer than 10 bytes")
+# the codec's CPU after the CRC slice-by-8 work. The common case — a
+# SINGLE-BYTE varint (zigzag value in [-64, 63]: record-internal
+# deltas, small lengths, header counts) — takes an inlined branch in
+# parse_batch, which falls through to the validating
+# wire.read_zigzag for every other case (multi-byte values,
+# truncation, overlong encodings).
+# ------------------------------------------------------------------
 
 
 # ------------------------------------------------------------------
@@ -167,17 +136,17 @@ def encode_record(ts_delta: int, offset_delta: int, key: bytes | None,
                   value: bytes | None,
                   headers: list[tuple[bytes, bytes]] = ()) -> bytes:
     body = bytearray(b"\x00")  # record attributes (unused, must be 0)
-    body += zz_encode(ts_delta)
-    body += zz_encode(offset_delta)
+    body += write_zigzag(ts_delta)
+    body += write_zigzag(offset_delta)
     for blob in (key, value):
         if blob is None:
-            body += zz_encode(-1)
+            body += write_zigzag(-1)
         else:
-            body += zz_encode(len(blob)) + blob
-    body += zz_encode(len(headers))
+            body += write_zigzag(len(blob)) + blob
+    body += write_zigzag(len(headers))
     for hk, hv in headers:
-        body += zz_encode(len(hk)) + hk + zz_encode(len(hv)) + hv
-    return zz_encode(len(body)) + bytes(body)
+        body += write_zigzag(len(hk)) + hk + write_zigzag(len(hv)) + hv
+    return write_zigzag(len(body)) + bytes(body)
 
 
 def encode_batch(base_offset: int, base_ts: int,
@@ -243,7 +212,7 @@ def parse_batch(buf: bytes, pos: int):
     n_ac = len(after_crc)
     # inlined single-byte-varint fast path (see the zigzag section
     # note): `p < n_ac and byte < 0x80` falls through to the validating
-    # zz_decode for every other case — truncation at the buffer end
+    # read_zigzag for every other case — truncation at the buffer end
     # raises the same ValueError there, so error behavior is identical
     for _ in range(n_records):
         b0 = after_crc[rpos] if rpos < n_ac else 0x80
@@ -251,7 +220,7 @@ def parse_batch(buf: bytes, pos: int):
             rlen = (b0 >> 1) ^ -(b0 & 1)
             rpos += 1
         else:
-            rlen, rpos = zz_decode(after_crc, rpos)
+            rlen, rpos = read_zigzag(after_crc, rpos)
         rend = rpos + rlen
         if rend > n_ac:
             raise ValueError("record length overruns batch")
@@ -263,19 +232,19 @@ def parse_batch(buf: bytes, pos: int):
             ts_delta = (b0 >> 1) ^ -(b0 & 1)
             p += 1
         else:
-            ts_delta, p = zz_decode(after_crc, p)
+            ts_delta, p = read_zigzag(after_crc, p)
         b0 = after_crc[p] if p < n_ac else 0x80
         if b0 < 0x80:
             off_delta = (b0 >> 1) ^ -(b0 & 1)
             p += 1
         else:
-            off_delta, p = zz_decode(after_crc, p)
+            off_delta, p = read_zigzag(after_crc, p)
         b0 = after_crc[p] if p < n_ac else 0x80
         if b0 < 0x80:
             klen = (b0 >> 1) ^ -(b0 & 1)
             p += 1
         else:
-            klen, p = zz_decode(after_crc, p)
+            klen, p = read_zigzag(after_crc, p)
         key = None
         if klen >= 0:
             key = after_crc[p:p + klen]
@@ -285,7 +254,7 @@ def parse_batch(buf: bytes, pos: int):
             vlen = (b0 >> 1) ^ -(b0 & 1)
             p += 1
         else:
-            vlen, p = zz_decode(after_crc, p)
+            vlen, p = read_zigzag(after_crc, p)
         value = None
         if vlen >= 0:
             value = after_crc[p:p + vlen]
@@ -295,7 +264,7 @@ def parse_batch(buf: bytes, pos: int):
             hcount = (b0 >> 1) ^ -(b0 & 1)
             p += 1
         else:
-            hcount, p = zz_decode(after_crc, p)
+            hcount, p = read_zigzag(after_crc, p)
         headers = {}
         for _h in range(hcount):
             b0 = after_crc[p] if p < n_ac else 0x80
@@ -303,7 +272,7 @@ def parse_batch(buf: bytes, pos: int):
                 hklen = (b0 >> 1) ^ -(b0 & 1)
                 p += 1
             else:
-                hklen, p = zz_decode(after_crc, p)
+                hklen, p = read_zigzag(after_crc, p)
             hk = after_crc[p:p + hklen]
             p += hklen
             b0 = after_crc[p] if p < n_ac else 0x80
@@ -311,7 +280,7 @@ def parse_batch(buf: bytes, pos: int):
                 hvlen = (b0 >> 1) ^ -(b0 & 1)
                 p += 1
             else:
-                hvlen, p = zz_decode(after_crc, p)
+                hvlen, p = read_zigzag(after_crc, p)
             headers[hk.decode()] = after_crc[p:p + hvlen]
             p += hvlen
         if p != rend:

@@ -22,14 +22,16 @@ the public clickhouse-driver implementations). Block layout:
                                              (0 / empty string) — unlike
                                              RowBinary, which omits them
 
-Scalar byte encodings are shared with ``rowbinary`` (same type map:
-Date32 Int32 days, DateTime64(6) Int64 µs, Decimal scaled-int by
-precision) so the two formats cannot drift apart. ``Array(T)`` of a
-flat element type is supported via Native's offsets layout (UInt64
-cumulative end-offsets, then flattened elements) — the shape the
-``embeddings.embedding`` array<float> egress needs. Nested
-arrays/maps/structs stay with ``rowbinary_blocks`` (row-wise); this
-encoder raises for them explicitly.
+Scalar values are encoded AND decoded by ``rowbinary``'s
+``_encode_nonnull`` / ``_decode_nonnull`` (same type map: Date32 Int32
+days, DateTime64(6) Int64 µs, Decimal scaled-int by precision), and
+varints come from ``sink/wire.py``, so the two formats cannot drift
+apart in either direction. ``Array(T)`` of a flat element type is
+supported via Native's offsets layout (UInt64 cumulative end-offsets,
+then flattened elements) — the shape the ``embeddings.embedding``
+array<float> egress needs. Nested arrays/maps/structs stay with
+``rowbinary_blocks`` (row-wise); the encoder and the decoder raise
+for them explicitly.
 
 Scale notes: same egress shape as rowbinary_blocks — per-partition
 encoding, `plan_insert_blocks`-sized blocks, one `dedup_token` per
@@ -39,20 +41,37 @@ batch, still embarrassingly parallel.
 
 from __future__ import annotations
 
+import datetime as _dt
+import decimal as _decimal
 from collections.abc import Iterable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
+    BooleanType,
+    ByteType,
     DataType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
     MapType,
+    ShortType,
     StringType,
     StructType,
+    TimestampType,
 )
 
 from etl_ch_destination_spark.sink.clickhouse import ch_type
-from etl_ch_destination_spark.sink.rowbinary import _encode_nonnull, _is_null, varint
+from etl_ch_destination_spark.sink.rowbinary import (
+    _decode_nonnull,
+    _encode_nonnull,
+    _is_null,
+)
+from etl_ch_destination_spark.sink.wire import read_uvarint, write_uvarint
 
 # Worker processes may not be able to import this package (the driver
 # contract runs from an arbitrary cwd — same reasoning as
@@ -75,19 +94,6 @@ except Exception:  # noqa: BLE001  (older pickler without the hook)
 
 def _default_value(dt: DataType):
     """ClickHouse default for a type — fills Nullable null slots."""
-    from pyspark.sql.types import (
-        BooleanType,
-        ByteType,
-        DateType,
-        DecimalType,
-        DoubleType,
-        FloatType,
-        IntegerType,
-        LongType,
-        ShortType,
-        TimestampType,
-    )
-
     if isinstance(dt, (StringType, BinaryType)):
         return ""
     if isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
@@ -97,16 +103,23 @@ def _default_value(dt: DataType):
     if isinstance(dt, BooleanType):
         return False
     if isinstance(dt, DateType):
-        import datetime
-
-        return datetime.date(1970, 1, 1)
+        return _dt.date(1970, 1, 1)
     if isinstance(dt, TimestampType):
         return 0  # integer tick count → 1970-01-01 00:00:00
     if isinstance(dt, DecimalType):
-        import decimal
-
-        return decimal.Decimal(0)
+        return _decimal.Decimal(0)
     raise TypeError(f"no Native default for {dt.simpleString()}")
+
+
+def _require_flat(dt: DataType) -> None:
+    """Native covers flat columns and Array(T) of a flat T, both ways;
+    nested arrays / maps / structs stay with the row-wise format."""
+    inner = dt.elementType if isinstance(dt, ArrayType) else dt
+    if isinstance(inner, (ArrayType, MapType, StructType)):
+        raise TypeError(
+            "Native covers flat columns and flat array elements only; use "
+            f"rowbinary_blocks for {dt.simpleString()}"
+        )
 
 
 def encode_native_column(dt: DataType, nullable: bool, values: list) -> bytes:
@@ -117,12 +130,8 @@ def encode_native_column(dt: DataType, nullable: bool, values: list) -> bytes:
     element data — the shape the ``embeddings.embedding``
     (array<float>) egress needs. Nested arrays / maps / structs stay
     with the row-wise encoder."""
+    _require_flat(dt)
     if isinstance(dt, ArrayType):
-        if isinstance(dt.elementType, (ArrayType, MapType, StructType)):
-            raise TypeError(
-                "Native encoder covers flat array elements only; use "
-                f"rowbinary_blocks for {dt.simpleString()}"
-            )
         # CH forbids Nullable(Array) (the array itself is never null)
         # but allows Array(Nullable(T)): when the Spark schema's
         # containsNull is set, ch_type declares Nullable elements and
@@ -151,11 +160,6 @@ def encode_native_column(dt: DataType, nullable: bool, values: list) -> bytes:
         for e in elems:
             out += _encode_nonnull(dt.elementType, e)
         return bytes(out)
-    if isinstance(dt, (MapType, StructType)):
-        raise TypeError(
-            f"Native encoder covers flat columns only; use rowbinary_blocks "
-            f"for {dt.simpleString()}"
-        )
     out = bytearray()
     if nullable:
         out += bytes(1 if _is_null(v) else 0 for v in values)
@@ -180,13 +184,13 @@ def encode_native_block(schema: StructType, rows: Iterable) -> bytes:
                 f"row width {len(r)} != schema width {len(schema.fields)}"
             )
     out = bytearray()
-    out += varint(len(schema.fields))
-    out += varint(len(mat))
+    out += write_uvarint(len(schema.fields))
+    out += write_uvarint(len(mat))
     for i, f in enumerate(schema.fields):
         name = f.name.encode("utf-8")
-        out += varint(len(name)) + name
+        out += write_uvarint(len(name)) + name
         typ = ch_type(f.dataType, f.nullable).encode("utf-8")
-        out += varint(len(typ)) + typ
+        out += write_uvarint(len(typ)) + typ
         out += encode_native_column(f.dataType, f.nullable, [r[i] for r in mat])
     return bytes(out)
 
@@ -259,65 +263,6 @@ def native_blocks(
 # ---------------------------------------------------------------------------
 
 
-def _decode_fixed(dt: DataType, buf: bytes, pos: int):
-    from pyspark.sql.types import (
-        BooleanType,
-        ByteType,
-        DateType,
-        DecimalType,
-        DoubleType,
-        FloatType,
-        IntegerType,
-        LongType,
-        ShortType,
-        TimestampType,
-    )
-    import datetime as _dt
-    import decimal as _decimal
-    import struct as _struct
-
-    if isinstance(dt, ByteType):
-        return _struct.unpack_from("<b", buf, pos)[0], pos + 1
-    if isinstance(dt, ShortType):
-        return _struct.unpack_from("<h", buf, pos)[0], pos + 2
-    if isinstance(dt, IntegerType):
-        return _struct.unpack_from("<i", buf, pos)[0], pos + 4
-    if isinstance(dt, LongType):
-        return _struct.unpack_from("<q", buf, pos)[0], pos + 8
-    if isinstance(dt, FloatType):
-        return _struct.unpack_from("<f", buf, pos)[0], pos + 4
-    if isinstance(dt, DoubleType):
-        return _struct.unpack_from("<d", buf, pos)[0], pos + 8
-    if isinstance(dt, BooleanType):
-        return buf[pos] == 1, pos + 1
-    if isinstance(dt, (StringType, BinaryType)):
-        n, pos = _read_varint(buf, pos)
-        raw = buf[pos : pos + n]
-        return (raw.decode("utf-8") if isinstance(dt, StringType) else bytes(raw)), pos + n
-    if isinstance(dt, DateType):
-        days = _struct.unpack_from("<i", buf, pos)[0]
-        return _dt.date(1970, 1, 1) + _dt.timedelta(days=days), pos + 4
-    if isinstance(dt, TimestampType):
-        micros = _struct.unpack_from("<q", buf, pos)[0]
-        return _dt.datetime(1970, 1, 1) + _dt.timedelta(microseconds=micros), pos + 8
-    if isinstance(dt, DecimalType):
-        w = 4 if dt.precision <= 9 else 8 if dt.precision <= 18 else 16
-        raw = int.from_bytes(buf[pos : pos + w], "little", signed=True)
-        return _decimal.Decimal(raw).scaleb(-dt.scale), pos + w
-    raise TypeError(f"no Native decoding for {dt.simpleString()}")
-
-
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = n = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, pos
-        shift += 7
-
-
 def decode_native_block(schema: StructType, payload: bytes) -> list[tuple]:
     """Parse a Native block back into row tuples under ``schema``.
 
@@ -327,23 +272,24 @@ def decode_native_block(schema: StructType, payload: bytes) -> list[tuple]:
     null masks, and rebuilds Array(T) columns from the cumulative
     offsets layout. Raises on trailing bytes."""
     pos = 0
-    n_cols, pos = _read_varint(payload, pos)
-    n_rows, pos = _read_varint(payload, pos)
+    n_cols, pos = read_uvarint(payload, pos)
+    n_rows, pos = read_uvarint(payload, pos)
     if n_cols != len(schema.fields):
         raise ValueError(f"block has {n_cols} columns, schema {len(schema.fields)}")
     cols: list[list] = []
     for f in schema.fields:
-        ln, pos = _read_varint(payload, pos)
+        ln, pos = read_uvarint(payload, pos)
         name = payload[pos : pos + ln].decode("utf-8")
         pos += ln
         if name != f.name:
             raise ValueError(f"column name {name!r} != schema {f.name!r}")
-        lt, pos = _read_varint(payload, pos)
+        lt, pos = read_uvarint(payload, pos)
         typ = payload[pos : pos + lt].decode("utf-8")
         pos += lt
         expect = ch_type(f.dataType, f.nullable)
         if typ != expect:
             raise ValueError(f"column {name}: type {typ!r} != {expect!r}")
+        _require_flat(f.dataType)
         if isinstance(f.dataType, ArrayType):
             offsets = []
             for _ in range(n_rows):
@@ -358,7 +304,7 @@ def decode_native_block(schema: StructType, payload: bytes) -> list[tuple]:
                 pos += total
             elems = []
             for i in range(total):
-                v, pos = _decode_fixed(f.dataType.elementType, payload, pos)
+                v, pos = _decode_nonnull(f.dataType.elementType, payload, pos)
                 elems.append(None if elem_nulls[i] else v)
             vals, start = [], 0
             for end in offsets:
@@ -372,7 +318,7 @@ def decode_native_block(schema: StructType, payload: bytes) -> list[tuple]:
             pos += n_rows
         vals = []
         for i in range(n_rows):
-            v, pos = _decode_fixed(f.dataType, payload, pos)
+            v, pos = _decode_nonnull(f.dataType, payload, pos)
             vals.append(None if nulls[i] else v)
         cols.append(vals)
     if pos != len(payload):

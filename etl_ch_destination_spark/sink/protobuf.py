@@ -58,6 +58,13 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
+from etl_ch_destination_spark.sink.wire import (
+    read_uvarint,
+    read_zigzag,
+    write_uvarint,
+    write_zigzag,
+)
+
 # wire types (spec §Message Structure)
 WT_VARINT = 0
 WT_I64 = 1
@@ -114,55 +121,8 @@ def pb_schema(fields: list[tuple[int, str, str, bool]]) -> list[tuple]:
 
 
 # --------------------------------------------------------------------
-# varint / zigzag
+# int64 two's complement (varints themselves: sink/wire.py)
 # --------------------------------------------------------------------
-
-
-def write_uvarint(u: int) -> bytes:
-    """Minimal base-128 varint of an unsigned 64-bit value."""
-    if not (0 <= u < 1 << 64):
-        raise ValueError(f"uvarint out of range: {u}")
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
-    """Decode a varint at ``pos``; returns (value, next_pos).
-
-    Rejects >10 bytes and a 10th byte carrying more than bit 0 (the
-    value would exceed 64 bits) — fail loudly, mirroring the Avro
-    module's read_zigzag hardening."""
-    shift = u = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("truncated varint")
-        b = buf[pos]
-        pos += 1
-        if shift == 63 and b > 1:
-            raise ValueError("varint exceeds 64 bits")
-        u |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            return u, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("varint longer than 10 bytes")
-
-
-def zigzag64(n: int) -> int:
-    if not (-(1 << 63) <= n < 1 << 63):
-        raise ValueError(f"sint64 out of range: {n}")
-    return ((n << 1) ^ (n >> 63)) & ((1 << 64) - 1)
-
-
-def unzigzag64(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
 
 
 def _int64_as_uvarint(n: int) -> int:
@@ -223,7 +183,7 @@ def encode_message(schema: list[tuple], row: tuple) -> bytes:
         if kind == "int64":
             out += write_uvarint(_int64_as_uvarint(v))
         elif kind == "sint64":
-            out += write_uvarint(zigzag64(v))
+            out += write_zigzag(v)
         elif kind == "bool":
             out += b"\x01" if v else b"\x00"
         elif kind == "string":
@@ -299,8 +259,7 @@ def decode_message(schema: list[tuple], buf: bytes) -> tuple:
             u, pos = read_uvarint(buf, pos)
             got[num] = _uvarint_as_int64(u)
         elif kind == "sint64":
-            u, pos = read_uvarint(buf, pos)
-            got[num] = unzigzag64(u)
+            got[num], pos = read_zigzag(buf, pos)
         elif kind == "bool":
             u, pos = read_uvarint(buf, pos)
             if u > 1:

@@ -75,6 +75,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from etl_ch_destination_spark.sink.wire import read_uvarint, write_uvarint
+
 _EPOCH_DATE = _dt.date(1970, 1, 1)
 _EPOCH_TS = _dt.datetime(1970, 1, 1)
 
@@ -95,21 +97,6 @@ try:  # pragma: no cover - exercised by the export keys' worker path
         _cp.register_pickle_by_value(_m)
 except Exception:  # noqa: BLE001  (older pickler without the hook)
     pass
-
-
-def varint(n: int) -> bytes:
-    """Unsigned LEB128 — ClickHouse's length prefix for strings/arrays."""
-    if n < 0:
-        raise ValueError(f"varint is unsigned, got {n}")
-    out = bytearray()
-    while True:
-        byte = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(byte | 0x80)
-        else:
-            out.append(byte)
-            return bytes(out)
 
 
 def _decimal_width(precision: int) -> int:
@@ -139,7 +126,7 @@ def _encode_nonnull(dt: DataType, v) -> bytes:  # noqa: C901 (flat type switch)
         return b"\x01" if v else b"\x00"
     if isinstance(dt, (StringType, BinaryType)):
         raw = v.encode("utf-8") if isinstance(v, str) else bytes(v)
-        return varint(len(raw)) + raw
+        return write_uvarint(len(raw)) + raw
     if isinstance(dt, DateType):
         # ch_type maps DateType -> Date32: Int32 days since epoch
         if isinstance(v, _dt.datetime):
@@ -164,12 +151,12 @@ def _encode_nonnull(dt: DataType, v) -> bytes:  # noqa: C901 (flat type switch)
         return scaled.to_bytes(_decimal_width(dt.precision), "little", signed=True)
     if isinstance(dt, ArrayType):
         elems = list(v)
-        return varint(len(elems)) + b"".join(
+        return write_uvarint(len(elems)) + b"".join(
             encode_value(dt.elementType, e, dt.containsNull) for e in elems
         )
     if isinstance(dt, MapType):
         items = list(v.items()) if isinstance(v, dict) else list(v)
-        return varint(len(items)) + b"".join(
+        return write_uvarint(len(items)) + b"".join(
             _encode_nonnull(dt.keyType, k)
             + encode_value(dt.valueType, val, dt.valueContainsNull)
             for k, val in items
@@ -222,13 +209,13 @@ def names_types_header(schema: StructType) -> bytes:
     headerless blocks, so this never runs on a worker.)"""
     from etl_ch_destination_spark.sink.clickhouse import ch_type
 
-    out = varint(len(schema.fields))
+    out = write_uvarint(len(schema.fields))
     for f in schema.fields:
         raw = f.name.encode("utf-8")
-        out += varint(len(raw)) + raw
+        out += write_uvarint(len(raw)) + raw
     for f in schema.fields:
         raw = ch_type(f.dataType, f.nullable).encode("utf-8")
-        out += varint(len(raw)) + raw
+        out += write_uvarint(len(raw)) + raw
     return out
 
 
@@ -293,18 +280,6 @@ def rowbinary_blocks(df: DataFrame, rows_per_block: int = 100_000) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    """Unsigned LEB128 at ``pos``; returns (value, next_pos)."""
-    shift = n = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, pos
-        shift += 7
-
-
 def _decode_nonnull(dt: DataType, buf: bytes, pos: int):  # noqa: C901
     if isinstance(dt, ByteType):
         return struct.unpack_from("<b", buf, pos)[0], pos + 1
@@ -321,10 +296,10 @@ def _decode_nonnull(dt: DataType, buf: bytes, pos: int):  # noqa: C901
     if isinstance(dt, BooleanType):
         return buf[pos] == 1, pos + 1
     if isinstance(dt, StringType):
-        n, pos = read_varint(buf, pos)
+        n, pos = read_uvarint(buf, pos)
         return buf[pos : pos + n].decode("utf-8"), pos + n
     if isinstance(dt, BinaryType):
-        n, pos = read_varint(buf, pos)
+        n, pos = read_uvarint(buf, pos)
         return bytes(buf[pos : pos + n]), pos + n
     if isinstance(dt, DateType):
         days = struct.unpack_from("<i", buf, pos)[0]
@@ -337,14 +312,14 @@ def _decode_nonnull(dt: DataType, buf: bytes, pos: int):  # noqa: C901
         raw = int.from_bytes(buf[pos : pos + w], "little", signed=True)
         return _decimal.Decimal(raw).scaleb(-dt.scale), pos + w
     if isinstance(dt, ArrayType):
-        n, pos = read_varint(buf, pos)
+        n, pos = read_uvarint(buf, pos)
         out = []
         for _ in range(n):
             v, pos = decode_value(dt.elementType, dt.containsNull, buf, pos)
             out.append(v)
         return out, pos
     if isinstance(dt, MapType):
-        n, pos = read_varint(buf, pos)
+        n, pos = read_uvarint(buf, pos)
         items = {}
         for _ in range(n):
             k, pos = _decode_nonnull(dt.keyType, buf, pos)

@@ -19,6 +19,7 @@ from pyspark.sql.types import (
     DoubleType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -59,6 +60,34 @@ class TestColumns:
 
         with pytest.raises(TypeError, match="rowbinary_blocks"):
             encode_native_column(MapType(StringType(), LongType()), False, [{"a": 1}])
+
+    @pytest.mark.parametrize(
+        "dt, value",
+        [
+            (MapType(StringType(), LongType(), False), {"k": 1}),
+            (ArrayType(ArrayType(IntegerType(), False), False), [[1]]),
+            (StructType([StructField("a", IntegerType(), False)]), (1,)),
+        ],
+        ids=["map", "nested_array", "struct"],
+    )
+    def test_decoder_rejects_nested_shapes(self, dt, value):
+        """The decoder shares RowBinary's row-wise value decoder, which
+        reads nested values; a Native block must still refuse them, as
+        the encoder does, even under a matching type header."""
+        from etl_ch_destination_spark.sink.clickhouse import ch_type
+        from etl_ch_destination_spark.sink.native import decode_native_block
+        from etl_ch_destination_spark.sink.rowbinary import encode_value
+        from etl_ch_destination_spark.sink.wire import write_uvarint
+
+        typ = ch_type(dt, False).encode()
+        payload = (
+            write_uvarint(1) + write_uvarint(1) + b"\x01c"
+            + write_uvarint(len(typ)) + typ
+            + encode_value(dt, value, False)
+        )
+        schema = StructType([StructField("c", dt, False)])
+        with pytest.raises(TypeError, match="rowbinary_blocks"):
+            decode_native_block(schema, payload)
 
 
 BLOCK_SCHEMA = StructType(

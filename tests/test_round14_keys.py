@@ -99,8 +99,8 @@ def test_protobuf_unknown_fields_skipped():
         decode_message,
         encode_message,
         pb_schema,
-        write_uvarint,
     )
+    from etl_ch_destination_spark.sink.wire import write_uvarint
 
     writer = pb_schema(
         [
@@ -124,8 +124,8 @@ def test_protobuf_last_one_wins():
     from etl_ch_destination_spark.sink.protobuf import (
         decode_message,
         pb_schema,
-        write_uvarint,
     )
+    from etl_ch_destination_spark.sink.wire import write_uvarint
 
     reader = pb_schema([(1, "k", "int64", False)])
     msg = (
@@ -146,8 +146,8 @@ def test_protobuf_malformed_inputs_raise():
         encode_message,
         encode_stream,
         pb_schema,
-        write_uvarint,
     )
+    from etl_ch_destination_spark.sink.wire import write_uvarint
 
     schema = _pb_schema()
     with pytest.raises(ValueError, match="truncated varint"):

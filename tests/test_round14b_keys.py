@@ -1110,17 +1110,6 @@ def test_kafka_crc32c_known_vectors():
     assert crc32c(b"\x00" * 32) == 0x8A9136AA
 
 
-def test_kafka_zigzag_varint_roundtrip():
-    from etl_ch_destination_spark.sink.kafka import zz_decode, zz_encode
-
-    for n in (0, 1, -1, 63, -64, 64, 300, -300, 2**31, -(2**31), 2**62):
-        buf = zz_encode(n)
-        got, pos = zz_decode(buf, 0)
-        assert (got, pos) == (n, len(buf))
-    with pytest.raises(ValueError, match="truncated"):
-        zz_decode(b"\x80\x80", 0)
-
-
 def test_kafka_batch_roundtrip_and_nulls():
     from etl_ch_destination_spark.sink.kafka import encode_batch, parse_batch
 

@@ -34,22 +34,7 @@ from etl_ch_destination_spark.sink.rowbinary import (
     encode_value,
     names_types_header,
     rowbinary_blocks,
-    varint,
 )
-
-
-class TestVarint:
-    def test_golden(self):
-        assert varint(0) == b"\x00"
-        assert varint(1) == b"\x01"
-        assert varint(127) == b"\x7f"
-        assert varint(128) == b"\x80\x01"
-        assert varint(300) == b"\xac\x02"
-        assert varint(100_000) == b"\xa0\x8d\x06"
-
-    def test_negative_rejected(self):
-        with pytest.raises(ValueError):
-            varint(-1)
 
 
 class TestScalars:

@@ -27,26 +27,9 @@ def main() -> int:
     args = ap.parse_args()
     os.makedirs(args.out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from etl_ch_destination_spark.session import get_spark
 
-    from etl_ch_destination_spark.session import ensure_session_defaults
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    spark = (
-        SparkSession.builder.appName("explain-key")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-        )
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    ensure_session_defaults(spark)
+    spark = get_spark(app_name="explain-key")
     spark.sparkContext.setLogLevel("ERROR")
 
     from etl_ch_destination_spark.registry import all_queries

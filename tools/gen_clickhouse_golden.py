@@ -53,14 +53,9 @@ def render() -> str:
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
+    from etl_ch_destination_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[2]")
-        .appName("gen-clickhouse-golden")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="gen-clickhouse-golden", master="local[2]")
     try:
         text = render()
     finally:
