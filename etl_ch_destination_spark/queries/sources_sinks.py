@@ -40,6 +40,7 @@ from etl_ch_destination_spark.sink.clickhouse import (
     ddl_for,
     stamp_batch,
 )
+from etl_ch_destination_spark.sink.wire import decode_blocks
 
 TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"  # µs-lossless JSONL round trip
 
@@ -48,6 +49,13 @@ def _scratch(sf_dir: str, key: str) -> str:
     """Per-(key, sf) scratch subdir so concurrent sfs never collide."""
     tag = os.path.basename(sf_dir.rstrip("/"))
     return scratch_dir(f"{key}/{tag}")
+
+
+def _staged(spark: SparkSession, path: str, blocks: DataFrame) -> DataFrame:
+    """Write a codec stager's blocks to ``path`` and read them back,
+    spread over the cores for the decode (see scan_rowbinary_import)."""
+    blocks.write.mode("overwrite").parquet(path)
+    return parallelize_codec_scan(spark.read.parquet(path), spark)
 
 
 @query(
@@ -486,6 +494,36 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 ROWBINARY_BLOCK = 100  # docs per insert block (doc_id div — deterministic)
 
 
+def _export_block_sizes(spark: SparkSession, sf_dir: str, encode) -> DataFrame:
+    """The plan both export keys share: one block_idx shuffle, then each
+    doc_id-range block of documents is encoded by ``encode(schema,
+    rows)`` inside an Arrow-batched applyInPandas and reported as
+    (block_idx, n_rows, n_bytes)."""
+    d = load_table(spark, sf_dir, "documents")
+    schema = d.schema
+    names = [f.name for f in schema.fields]
+    with_block = d.withColumn(
+        "block_idx", F.expr(f"doc_id div {ROWBINARY_BLOCK}").cast("bigint")
+    )
+
+    def encode_group(pdf):
+        import pandas as pd
+
+        pdf = pdf.sort_values("doc_id")
+        payload = encode(schema, pdf[names].itertuples(index=False, name=None))
+        return pd.DataFrame(
+            {
+                "block_idx": [int(pdf["block_idx"].iloc[0])],
+                "n_rows": [len(pdf)],
+                "n_bytes": [len(payload)],
+            }
+        )
+
+    return with_block.groupBy("block_idx").applyInPandas(
+        encode_group, schema="block_idx bigint, n_rows bigint, n_bytes bigint"
+    )
+
+
 @query(
     "sink_rowbinary_export",
     f"""
@@ -526,7 +564,7 @@ def sink_rowbinary_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     an INDEPENDENT size model: each insert block ({ROWBINARY_BLOCK}
     docs by doc_id range — deterministic under any partitioning, no
     global window) is encoded to real RowBinary bytes by
-    sink/rowbinary.encode_row inside an Arrow-batched applyInPandas,
+    sink/rowbinary.encode_block inside an Arrow-batched applyInPandas,
     and the report carries the block's actual encoded byte count. The
     oracle recomputes every block's size purely relationally (null
     flags + fixed widths + varint-length strings), so a hash match
@@ -540,35 +578,9 @@ def sink_rowbinary_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python encode — the same shape `rowbinary_blocks` ships at scale
     (tasks encode their partitions independently; blocks retry alone
     with per-block dedup tokens)."""
-    from etl_ch_destination_spark.sink.rowbinary import encode_row
+    from etl_ch_destination_spark.sink.rowbinary import encode_block
 
-    d = load_table(spark, sf_dir, "documents")
-    schema = d.schema
-    with_block = d.withColumn(
-        "block_idx", F.expr(f"doc_id div {ROWBINARY_BLOCK}").cast("bigint")
-    )
-
-    def encode_group(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("doc_id")
-        payload = b"".join(
-            encode_row(schema, row)
-            for row in pdf[[f.name for f in schema.fields]].itertuples(
-                index=False, name=None
-            )
-        )
-        return pd.DataFrame(
-            {
-                "block_idx": [int(pdf["block_idx"].iloc[0])],
-                "n_rows": [len(pdf)],
-                "n_bytes": [len(payload)],
-            }
-        )
-
-    return with_block.groupBy("block_idx").applyInPandas(
-        encode_group, schema="block_idx bigint, n_rows bigint, n_bytes bigint"
-    )
+    return _export_block_sizes(spark, sf_dir, encode_block)
 
 
 # Native block header+column-prelude size for the documents schema
@@ -631,31 +643,7 @@ def sink_native_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-block Arrow-batched Python encode."""
     from etl_ch_destination_spark.sink.native import encode_native_block
 
-    d = load_table(spark, sf_dir, "documents")
-    schema = d.schema
-    with_block = d.withColumn(
-        "block_idx", F.expr(f"doc_id div {ROWBINARY_BLOCK}").cast("bigint")
-    )
-
-    def encode_group(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("doc_id")
-        block = encode_native_block(
-            schema,
-            pdf[[f.name for f in schema.fields]].itertuples(index=False, name=None),
-        )
-        return pd.DataFrame(
-            {
-                "block_idx": [int(pdf["block_idx"].iloc[0])],
-                "n_rows": [len(pdf)],
-                "n_bytes": [len(block)],
-            }
-        )
-
-    return with_block.groupBy("block_idx").applyInPandas(
-        encode_group, schema="block_idx bigint, n_rows bigint, n_bytes bigint"
-    )
+    return _export_block_sizes(spark, sf_dir, encode_native_block)
 
 
 @query(
@@ -877,6 +865,8 @@ def scan_rowbinary_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent blocks (embarrassingly parallel at any scale); the
     timestamp egresses as exact epoch micros (int64) and money as
     cents so the gate compares pure scalars."""
+    import datetime as dt
+
     from pyspark.sql.types import (
         DecimalType,
         LongType,
@@ -914,34 +904,22 @@ def scan_rowbinary_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serialized locally. parallelize_scan is a no-op at real scale
     # (many splits) and block payloads are self-contained, so the
     # decoded values are identical under any partitioning.
-    rowbinary_blocks(
-        parallelize_codec_scan(src, spark), rows_per_block=4096
-    ).write.mode("overwrite").parquet(path)
+    blocks = _staged(
+        spark, path, rowbinary_blocks(parallelize_codec_scan(src, spark), rows_per_block=4096)
+    )
+    epoch = dt.datetime(1970, 1, 1)
+    us = dt.timedelta(microseconds=1)
 
-    blocks = parallelize_codec_scan(spark.read.parquet(path), spark)
+    def decode(payload):
+        return [
+            (k, s, int(p.scaleb(2)), (d - epoch) // us)
+            for k, s, p, d in decode_rows(wire_schema, payload)
+        ]
 
-    def decode_partition(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"o_orderkey": [], "o_orderstatus": [], "price_cents": [], "ts_us": []}
-            for payload, n in zip(pdf["payload"], pdf["block_rows"]):
-                rows = decode_rows(wire_schema, bytes(payload))
-                if len(rows) != int(n):
-                    raise ValueError(f"block row-count drift: {len(rows)} != {n}")
-                for k, s, p, d in rows:
-                    out["o_orderkey"].append(k)
-                    out["o_orderstatus"].append(s)
-                    out["price_cents"].append(int(p.scaleb(2)))
-                    out["ts_us"].append(
-                        (d - __import__("datetime").datetime(1970, 1, 1))
-                        // __import__("datetime").timedelta(microseconds=1)
-                    )
-            yield pd.DataFrame(out)
-
-    return blocks.mapInPandas(
-        decode_partition,
-        schema="o_orderkey bigint, o_orderstatus string, price_cents bigint, ts_us bigint",
+    return decode_blocks(
+        blocks,
+        decode,
+        "o_orderkey bigint, o_orderstatus string, price_cents bigint, ts_us bigint",
     )
 
 
@@ -1006,47 +984,30 @@ def scan_native_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the parquet read declares array elements nullable; the egress
     # pins the dense-vector wire type (Array(Float32), no element
     # masks) via the schema override — encode still raises if a null
-    # element ever violates the declaration
-    native_blocks(
-        parallelize_codec_scan(src, spark), rows_per_block=2048, wire_schema=wire_schema
-    ).write.mode("overwrite").parquet(path)
-    # spread encode AND decode over the cores (see scan_rowbinary_import)
-    blocks = parallelize_codec_scan(spark.read.parquet(path), spark)
-
-    def decode_partition(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "vec_id": [],
-                "label": [],
-                "n_dims": [],
-                "first_val": [],
-                "last_val": [],
-                "emb_sum": [],
-            }
-            for payload, n in zip(pdf["payload"], pdf["block_rows"]):
-                rows = decode_native_block(wire_schema, bytes(payload))
-                if len(rows) != int(n):
-                    raise ValueError(f"block row-count drift: {len(rows)} != {n}")
-                for vid, emb, lbl in rows:
-                    out["vec_id"].append(vid)
-                    out["label"].append(lbl)
-                    out["n_dims"].append(len(emb))
-                    out["first_val"].append(float(emb[0]))
-                    out["last_val"].append(float(emb[-1]))
-                    s = 0.0
-                    for x in emb:
-                        s += float(x)
-                    out["emb_sum"].append(s)
-            yield pd.DataFrame(out)
-
-    return blocks.mapInPandas(
-        decode_partition,
-        schema=(
-            "vec_id bigint, label int, n_dims int, first_val double,"
-            " last_val double, emb_sum double"
+    # element ever violates the declaration; spread encode AND decode
+    # over the cores (see scan_rowbinary_import)
+    blocks = _staged(
+        spark,
+        path,
+        native_blocks(
+            parallelize_codec_scan(src, spark), rows_per_block=2048, wire_schema=wire_schema
         ),
+    )
+
+    def decode(payload):
+        rows = []
+        for vid, emb, lbl in decode_native_block(wire_schema, payload):
+            s = 0.0
+            for x in emb:  # left-to-right, like the oracle's sequential sum
+                s += float(x)
+            rows.append((vid, lbl, len(emb), float(emb[0]), float(emb[-1]), s))
+        return rows
+
+    return decode_blocks(
+        blocks,
+        decode,
+        "vec_id bigint, label int, n_dims int, first_val double,"
+        " last_val double, emb_sum double",
     )
 
 
@@ -2348,6 +2309,8 @@ def scan_avro_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-value Python decode is interpreter-bound by design — the
     offline-env codec; a JVM spark-avro jar is the drop-in
     production fast path at the same plan position."""
+    import datetime as dt
+
     from etl_ch_destination_spark.sink.avro import avro_blocks, avro_schema, decode_container
 
     path = _scratch(sf_dir, "scan_avro_import")
@@ -2366,47 +2329,29 @@ def scan_avro_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-file decode across cores (see scan_rowbinary_import);
     # container files are self-contained, values identical under any
     # row-to-file packing
-    avro_blocks(
-        parallelize_codec_scan(src, spark),
-        rows_per_file=8192,
-        objects_per_block=2048,
-        codec="deflate",
-    ).write.mode("overwrite").parquet(path)
+    files = _staged(
+        spark,
+        path,
+        avro_blocks(
+            parallelize_codec_scan(src, spark),
+            rows_per_file=8192,
+            objects_per_block=2048,
+            codec="deflate",
+        ),
+    )
+    epoch = dt.datetime(1970, 1, 1)
+    us = dt.timedelta(microseconds=1)
 
-    files = parallelize_codec_scan(spark.read.parquet(path), spark)
+    def decode(payload):
+        return [
+            (k, s, int(p.scaleb(2)), (d - epoch) // us, note)
+            for k, s, p, d, note in decode_container(payload, expected)
+        ]
 
-    def decode_partition(batches):
-        import datetime as dt
-
-        import pandas as pd
-
-        epoch = dt.datetime(1970, 1, 1)
-        us = dt.timedelta(microseconds=1)
-        for pdf in batches:
-            out = {
-                "o_orderkey": [],
-                "o_orderstatus": [],
-                "price_cents": [],
-                "ts_us": [],
-                "note": [],
-            }
-            for payload, n in zip(pdf["payload"], pdf["block_rows"]):
-                rows = decode_container(bytes(payload), expected)
-                if len(rows) != int(n):
-                    raise ValueError(
-                        f"container row-count drift: {len(rows)} != {n}"
-                    )
-                for k, s, p, d, note in rows:
-                    out["o_orderkey"].append(k)
-                    out["o_orderstatus"].append(s)
-                    out["price_cents"].append(int(p.scaleb(2)))
-                    out["ts_us"].append((d - epoch) // us)
-                    out["note"].append(note)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(
-        decode_partition,
-        schema="o_orderkey bigint, o_orderstatus string, price_cents bigint,"
+    return decode_blocks(
+        files,
+        decode,
+        "o_orderkey bigint, o_orderstatus string, price_cents bigint,"
         " ts_us bigint, note string",
     )
 
@@ -2473,42 +2418,28 @@ def scan_avro_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"name": "discount_pct", "type": "double", "default": 0.0},
         ],
     }
-    avro_blocks(
-        parallelize_codec_scan(src, spark),
-        rows_per_file=8192,
-        objects_per_block=2048,
-        codec="deflate",
-    ).write.mode("overwrite").parquet(path)
     # spread encode AND decode over the cores (see scan_avro_import)
-    files = parallelize_codec_scan(spark.read.parquet(path), spark)
+    files = _staged(
+        spark,
+        path,
+        avro_blocks(
+            parallelize_codec_scan(src, spark),
+            rows_per_file=8192,
+            objects_per_block=2048,
+            codec="deflate",
+        ),
+    )
 
-    def decode_partition(batches):
-        import pandas as pd
+    def decode(payload):
+        return [
+            (k, y, int(p.scaleb(2)), disc)
+            for k, y, p, disc in decode_container_resolved(payload, reader, writer)
+        ]
 
-        for pdf in batches:
-            out = {
-                "o_orderkey": [],
-                "o_year": [],
-                "price_cents": [],
-                "discount_pct": [],
-            }
-            for payload, n in zip(pdf["payload"], pdf["block_rows"]):
-                rows = decode_container_resolved(bytes(payload), reader, writer)
-                if len(rows) != int(n):
-                    raise ValueError(
-                        f"container row-count drift: {len(rows)} != {n}"
-                    )
-                for k, y, p, disc in rows:
-                    out["o_orderkey"].append(k)
-                    out["o_year"].append(y)
-                    out["price_cents"].append(int(p.scaleb(2)))
-                    out["discount_pct"].append(disc)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(
-        decode_partition,
-        schema="o_orderkey bigint, o_year bigint, price_cents bigint,"
-        " discount_pct double",
+    return decode_blocks(
+        files,
+        decode,
+        "o_orderkey bigint, o_year bigint, price_cents bigint, discount_pct double",
     )
 
 
@@ -2593,40 +2524,15 @@ def scan_protobuf_import(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     # spread encode AND decode over the cores (see scan_rowbinary_import)
-    protobuf_blocks(
-        parallelize_codec_scan(src, spark), schema, rows_per_file=8192
-    ).write.mode("overwrite").parquet(path)
-
-    files = parallelize_codec_scan(spark.read.parquet(path), spark)
-
-    def decode_partition(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "c_custkey": [],
-                "c_name": [],
-                "bal_cents": [],
-                "c_nationkey": [],
-                "segment": [],
-                "is_auto": [],
-                "bal": [],
-            }
-            for payload, n in zip(pdf["payload"], pdf["block_rows"]):
-                rows = decode_stream(schema, bytes(payload), expected_rows=int(n))
-                for k, name, cents, nat, seg, auto, bal in rows:
-                    out["c_custkey"].append(k)
-                    out["c_name"].append(name)
-                    out["bal_cents"].append(cents)
-                    out["c_nationkey"].append(nat)
-                    out["segment"].append(seg)
-                    out["is_auto"].append(auto)
-                    out["bal"].append(bal)
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(
-        decode_partition,
-        schema="c_custkey bigint, c_name string, bal_cents bigint,"
+    files = _staged(
+        spark,
+        path,
+        protobuf_blocks(parallelize_codec_scan(src, spark), schema, rows_per_file=8192),
+    )
+    return decode_blocks(
+        files,
+        lambda payload: decode_stream(schema, payload),
+        "c_custkey bigint, c_name string, bal_cents bigint,"
         " c_nationkey bigint, segment string, is_auto boolean, bal double",
     )
 
@@ -3016,16 +2922,18 @@ def scan_protobuf_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         (F.col("bal_cents") / 100.0).alias("score"),
     )
-    p2 = _scratch(sf_dir, "scan_protobuf_evolution_v2")
-    # spread encode over the cores (see scan_rowbinary_import)
-    protobuf_blocks(
-        parallelize_codec_scan(src_v2, spark), v2, rows_per_file=8192
-    ).write.mode("overwrite").parquet(p2)
+    # spread encode AND decode over the cores (see scan_rowbinary_import)
+    files_v2 = _staged(
+        spark,
+        _scratch(sf_dir, "scan_protobuf_evolution_v2"),
+        protobuf_blocks(parallelize_codec_scan(src_v2, spark), v2, rows_per_file=8192),
+    )
     # stage v1-written bytes
-    p1 = _scratch(sf_dir, "scan_protobuf_evolution_v1")
-    protobuf_blocks(
-        parallelize_codec_scan(base, spark), v1, rows_per_file=8192
-    ).write.mode("overwrite").parquet(p1)
+    files_v1 = _staged(
+        spark,
+        _scratch(sf_dir, "scan_protobuf_evolution_v1"),
+        protobuf_blocks(parallelize_codec_scan(base, spark), v1, rows_per_file=8192),
+    )
 
     out_schema = (
         "direction string, c_custkey bigint, bal_cents bigint,"
@@ -3033,43 +2941,16 @@ def scan_protobuf_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def make_decoder(reader, tag, pad_v1):
-        def decode_partition(batches):
-            import pandas as pd
+        # the v1 view has no priority/score: pad them with NULLs
+        pad = (None, None) if pad_v1 else ()
 
-            for pdf in batches:
-                out = {
-                    "direction": [],
-                    "c_custkey": [],
-                    "bal_cents": [],
-                    "segment": [],
-                    "priority": [],
-                    "score": [],
-                }
-                for payload, n in zip(pdf["payload"], pdf["block_rows"]):
-                    rows = decode_stream(
-                        reader, bytes(payload), expected_rows=int(n)
-                    )
-                    for row in rows:
-                        out["direction"].append(tag)
-                        out["c_custkey"].append(row[0])
-                        out["bal_cents"].append(row[1])
-                        out["segment"].append(row[2])
-                        if pad_v1:
-                            out["priority"].append(None)
-                            out["score"].append(None)
-                        else:
-                            out["priority"].append(row[3])
-                            out["score"].append(row[4])
-                yield pd.DataFrame(out)
+        def decode(payload):
+            return [(tag, *row, *pad) for row in decode_stream(reader, payload)]
 
-        return decode_partition
+        return decode
 
-    fwd = parallelize_codec_scan(spark.read.parquet(p2), spark).mapInPandas(
-        make_decoder(v1, "fwd", pad_v1=True), schema=out_schema
-    )
-    bwd = parallelize_codec_scan(spark.read.parquet(p1), spark).mapInPandas(
-        make_decoder(v2, "bwd", pad_v1=False), schema=out_schema
-    )
+    fwd = decode_blocks(files_v2, make_decoder(v1, "fwd", pad_v1=True), out_schema)
+    bwd = decode_blocks(files_v1, make_decoder(v2, "bwd", pad_v1=False), out_schema)
     return fwd.unionByName(bwd)
 
 
@@ -3579,52 +3460,33 @@ def scan_warc_import(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "lang", "source"
     )
     # spread encode AND decode over the cores (see scan_rowbinary_import)
-    warc_files(
-        parallelize_codec_scan(d, spark), docs_per_file=256, request_every=5
-    ).write.mode("overwrite").parquet(path)
+    files = _staged(
+        spark,
+        path,
+        warc_files(parallelize_codec_scan(d, spark), docs_per_file=256, request_every=5),
+    )
 
-    files = parallelize_codec_scan(spark.read.parquet(path), spark)
+    def decode(payload):
+        # block_rows counts response records only
+        rows = []
+        for member in split_gzip_members(payload):
+            for headers, rec_payload in parse_warc(member):
+                if headers["warc-type"] != "response":
+                    continue
+                status, http_headers, body = parse_http_response(rec_payload)
+                uri = headers["warc-target-uri"]
+                _, _, tail = uri.partition("https://example.org/")
+                source, _, doc_id = tail.partition("/")
+                rows.append((
+                    int(doc_id), source, http_headers["x-doc-lang"], status,
+                    body.decode("utf-8"), len(body),
+                ))
+        return rows
 
-    def decode_partition(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "source": [],
-                "lang": [],
-                "http_status": [],
-                "body": [],
-                "body_bytes": [],
-            }
-            for payload, n in zip(pdf["payload"], pdf["block_rows"]):
-                n_resp = 0
-                for member in split_gzip_members(bytes(payload)):
-                    for headers, rec_payload in parse_warc(member):
-                        if headers["warc-type"] != "response":
-                            continue
-                        n_resp += 1
-                        status, http_headers, body = parse_http_response(
-                            rec_payload
-                        )
-                        uri = headers["warc-target-uri"]
-                        _, _, tail = uri.partition("https://example.org/")
-                        source, _, doc_id = tail.partition("/")
-                        out["doc_id"].append(int(doc_id))
-                        out["source"].append(source)
-                        out["lang"].append(http_headers["x-doc-lang"])
-                        out["http_status"].append(status)
-                        out["body"].append(body.decode("utf-8"))
-                        out["body_bytes"].append(len(body))
-                if n_resp != int(n):
-                    raise ValueError(
-                        f"response-count drift: {n_resp} != {n}"
-                    )
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(
-        decode_partition,
-        schema="doc_id bigint, source string, lang string,"
+    return decode_blocks(
+        files,
+        decode,
+        "doc_id bigint, source string, lang string,"
         " http_status bigint, body string, body_bytes bigint",
     )
 
@@ -4653,41 +4515,27 @@ def scan_kafka_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread encode AND decode over the cores (see scan_rowbinary_import);
     # offsets restart per segment and are not part of the decoded row,
     # so the values are identical under any record-to-segment packing
-    kafka_segments(
-        parallelize_codec_scan(src, spark), records_per_batch=512, batches_per_segment=8
-    ).write.mode("overwrite").parquet(path)
+    files = _staged(
+        spark,
+        path,
+        kafka_segments(
+            parallelize_codec_scan(src, spark), records_per_batch=512, batches_per_segment=8
+        ),
+    )
 
-    files = parallelize_codec_scan(spark.read.parquet(path), spark)
+    def decode(payload):
+        rows = []
+        for _off, ts, key, value, headers in parse_segment(payload):
+            eid, _, cents = value.decode().partition("|")
+            rows.append((
+                int(eid), int(key.decode()), ts, headers["src"].decode(), int(cents)
+            ))
+        return rows
 
-    def decode_partition(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "event_id": [],
-                "user_id": [],
-                "ts_ms": [],
-                "event_type": [],
-                "value_cents": [],
-            }
-            for payload, n in zip(pdf["payload"], pdf["block_rows"]):
-                records = parse_segment(bytes(payload))
-                if len(records) != int(n):
-                    raise ValueError(
-                        f"segment record-count drift: {len(records)} != {n}"
-                    )
-                for _off, ts, key, value, headers in records:
-                    eid, _, cents = value.decode().partition("|")
-                    out["event_id"].append(int(eid))
-                    out["user_id"].append(int(key.decode()))
-                    out["ts_ms"].append(ts)
-                    out["event_type"].append(headers["src"].decode())
-                    out["value_cents"].append(int(cents))
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(
-        decode_partition,
-        schema="event_id bigint, user_id bigint, ts_ms bigint,"
+    return decode_blocks(
+        files,
+        decode,
+        "event_id bigint, user_id bigint, ts_ms bigint,"
         " event_type string, value_cents bigint",
     )
 
@@ -4764,47 +4612,26 @@ def scan_kafka_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("hdr_src"),
     )
     # spread encode AND decode over the cores (see scan_kafka_import)
-    kafka_segments(
-        parallelize_codec_scan(src, spark), records_per_batch=512, batches_per_segment=8
-    ).write.mode("overwrite").parquet(path)
+    files = _staged(
+        spark,
+        path,
+        kafka_segments(
+            parallelize_codec_scan(src, spark), records_per_batch=512, batches_per_segment=8
+        ),
+    )
 
-    files = parallelize_codec_scan(spark.read.parquet(path), spark)
+    def decode(payload):
+        rows = []
+        for _off, ts, key, value, headers in parse_segment(payload):
+            eid, _, etype = headers["src"].decode().partition("|")
+            cents = None if value is None else int(value.decode().split("|")[2])
+            rows.append((int(key.decode()), int(eid), ts, etype, cents, value is None))
+        return rows
 
-    def decode_partition(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {
-                "user_id": [],
-                "event_id": [],
-                "ts_ms": [],
-                "event_type": [],
-                "value_cents": [],
-                "tombstone": [],
-            }
-            for payload, n in zip(pdf["payload"], pdf["block_rows"]):
-                records = parse_segment(bytes(payload))
-                if len(records) != int(n):
-                    raise ValueError("segment record-count drift")
-                for _off, ts, key, value, headers in records:
-                    eid, _, etype = headers["src"].decode().partition("|")
-                    out["user_id"].append(int(key.decode()))
-                    out["event_id"].append(int(eid))
-                    out["ts_ms"].append(ts)
-                    out["event_type"].append(etype)
-                    if value is None:
-                        out["value_cents"].append(None)
-                        out["tombstone"].append(True)
-                    else:
-                        out["value_cents"].append(
-                            int(value.decode().split("|")[2])
-                        )
-                        out["tombstone"].append(False)
-            yield pd.DataFrame(out)
-
-    decoded = files.mapInPandas(
-        decode_partition,
-        schema="user_id bigint, event_id bigint, ts_ms bigint,"
+    decoded = decode_blocks(
+        files,
+        decode,
+        "user_id bigint, event_id bigint, ts_ms bigint,"
         " event_type string, value_cents bigint, tombstone boolean",
     )
     w = Window.partitionBy("user_id").orderBy(
@@ -4928,43 +4755,32 @@ def scan_kafka_schema_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
         schema="ts_ms long, key binary, value binary, hdr_src string",
     )
     # spread encode AND decode over the cores (see scan_kafka_import)
-    kafka_segments(
-        parallelize_codec_scan(framed, spark), records_per_batch=512,
-        batches_per_segment=8,
-    ).write.mode("overwrite").parquet(path)
+    files = _staged(
+        spark,
+        path,
+        kafka_segments(
+            parallelize_codec_scan(framed, spark), records_per_batch=512,
+            batches_per_segment=8,
+        ),
+    )
 
-    files = parallelize_codec_scan(spark.read.parquet(path), spark)
+    def decode(payload):
+        rows = []
+        for _off, _ts, _key, value, _headers in parse_segment(payload):
+            if value[0] != 0:
+                raise ValueError(f"bad registry magic byte {value[0]:#x}")
+            sid = _struct.unpack_from(">i", value, 1)[0]
+            writer = registry.get(sid)
+            if writer is None:
+                raise ValueError(f"unknown schema id {sid}")
+            row, _pos = resolve_record(writer, reader, value, 5)
+            rows.append(row)
+        return rows
 
-    def decode_partition(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = {"c_custkey": [], "c_name": [], "bal_cents": [],
-                   "segment": []}
-            for payload, n in zip(pdf["payload"], pdf["block_rows"]):
-                records = parse_segment(bytes(payload))
-                if len(records) != int(n):
-                    raise ValueError("segment record-count drift")
-                for _off, _ts, _key, value, _headers in records:
-                    if value[0] != 0:
-                        raise ValueError(
-                            f"bad registry magic byte {value[0]:#x}"
-                        )
-                    sid = _struct.unpack_from(">i", value, 1)[0]
-                    writer = registry.get(sid)
-                    if writer is None:
-                        raise ValueError(f"unknown schema id {sid}")
-                    row, _pos = resolve_record(writer, reader, value, 5)
-                    out["c_custkey"].append(row[0])
-                    out["c_name"].append(row[1])
-                    out["bal_cents"].append(row[2])
-                    out["segment"].append(row[3])
-            yield pd.DataFrame(out)
-
-    return files.mapInPandas(
-        decode_partition,
-        schema="c_custkey bigint, c_name string, bal_cents bigint,"
-        " segment string",
+    return decode_blocks(
+        files,
+        decode,
+        "c_custkey bigint, c_name string, bal_cents bigint, segment string",
     )
 
 

@@ -48,7 +48,6 @@ import hashlib
 import json
 import struct
 import zlib
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -64,15 +63,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from etl_ch_destination_spark.sink.wire import read_zigzag, write_zigzag
+from etl_ch_destination_spark.sink.wire import encode_blocks, read_zigzag, write_zigzag
 
 AVRO_MAGIC = b"Obj\x01"
 # The spec says "randomly-generated" per file; a PINNED marker keeps
 # the writer deterministic (golden tests) and costs nothing — readers
 # must take the marker from the header either way.
 SYNC_MARKER = hashlib.md5(b"etl-ch-destination-spark avro sync").digest()
-
-BLOCK_SCHEMA = "block_rows long, payload binary"
 
 # Worker-cwd import trap (see sink/rowbinary.py): ship this module by
 # value inside pickled closures so mapInPandas decode/encode work from
@@ -464,26 +461,10 @@ def avro_blocks(
     if rows_per_file < 1 or objects_per_block < 1:
         raise ValueError("rows_per_file and objects_per_block must be >= 1")
     schema = avro_schema(df.schema)
-
-    def encode_partition(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        buf: list[tuple] = []
-
-        def flush() -> pd.DataFrame:
-            payload = encode_container(
-                schema, buf, codec=codec, objects_per_block=objects_per_block
-            )
-            n = len(buf)
-            buf.clear()
-            return pd.DataFrame({"block_rows": [n], "payload": [payload]})
-
-        for pdf in batches:
-            for row in pdf.itertuples(index=False, name=None):
-                buf.append(row)
-                if len(buf) >= rows_per_file:
-                    yield flush()
-        if buf:
-            yield flush()
-
-    return df.mapInPandas(encode_partition, schema=BLOCK_SCHEMA)
+    return encode_blocks(
+        df,
+        rows_per_file,
+        lambda chunk: encode_container(
+            schema, chunk, codec=codec, objects_per_block=objects_per_block
+        ),
+    )

@@ -334,8 +334,9 @@ def post_blocks(
     salt_block_ordinal: bool = False,
 ) -> DataFrame:
     """POST encoded insert blocks (``rowbinary_blocks`` /
-    ``native_blocks`` output: block_rows + payload) to a ClickHouse
-    HTTP endpoint — one request per block, issued FROM THE EXECUTORS
+    ``native_blocks`` output: the ``sink/wire.py`` ``BLOCK_SCHEMA``
+    frame, block_rows + payload) to a ClickHouse HTTP endpoint — one
+    request per block, issued FROM THE EXECUTORS
     (mapInPandas), so a 1000-executor cluster fans its inserts out
     without funnelling bytes through the driver.
 

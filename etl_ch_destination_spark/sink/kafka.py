@@ -47,9 +47,8 @@ from __future__ import annotations
 
 import struct
 import sys as _sys
-from collections.abc import Iterator
 
-from etl_ch_destination_spark.sink.wire import read_zigzag, write_zigzag
+from etl_ch_destination_spark.sink.wire import encode_blocks, read_zigzag, write_zigzag
 
 # Worker-cwd import trap (see sink/rowbinary.py): ship by value.
 try:  # pragma: no cover
@@ -60,8 +59,6 @@ try:  # pragma: no cover
     _cp.register_pickle_by_value(_kafka_mod)
 except Exception:  # noqa: BLE001
     pass
-
-BLOCK_SCHEMA = "block_rows long, payload binary"
 
 # ------------------------------------------------------------------
 # CRC32C (Castagnoli, polynomial 0x1EDC6F41 reflected = 0x82F63B78) —
@@ -316,52 +313,31 @@ def parse_segment(buf: bytes):
 def kafka_segments(df, records_per_batch: int = 512,
                    batches_per_segment: int = 8):
     """Encode (ts_ms, key, value, hdr_src) rows into log segments,
-    distributed: each task cuts its partition into batches of
-    ``records_per_batch`` and segments of ``batches_per_segment``
-    batches, offsets running per segment. Emits (block_rows, payload)
-    per segment."""
+    distributed: each task cuts its partition into segments of
+    ``records_per_batch * batches_per_segment`` records and each
+    segment into batches of ``records_per_batch``, offsets running per
+    segment. Emits (block_rows, payload) per segment."""
+    if records_per_batch < 1 or batches_per_segment < 1:
+        raise ValueError(
+            "records_per_batch and batches_per_segment must be >= 1"
+        )
 
-    def encode_partition(batches: Iterator) -> Iterator:
-        import pandas as pd
+    def encode_segment(chunk: list[tuple]) -> bytes:
+        records = [
+            (int(ts_ms),
+             None if key is None else bytes(key),
+             None if value is None else bytes(value),
+             [(b"src", str(src).encode())])
+            for ts_ms, key, value, src in chunk
+        ]
+        batches = []
+        for lo in range(0, len(records), records_per_batch):
+            batch = records[lo:lo + records_per_batch]
+            batches.append(encode_batch(lo, min(ts for ts, *_ in batch), batch))
+        return b"".join(batches)
 
-        rows: list[tuple] = []
-        segment: list[bytes] = []
-        seg_rows = 0
-        next_offset = 0
-
-        def flush_batch() -> None:
-            nonlocal rows, seg_rows, next_offset
-            if not rows:
-                return
-            base_ts = min(ts for ts, *_ in rows)
-            segment.append(encode_batch(next_offset, base_ts, rows))
-            next_offset += len(rows)
-            seg_rows += len(rows)
-            rows = []
-
-        def flush_segment():
-            nonlocal segment, seg_rows, next_offset
-            payload = b"".join(segment)
-            n = seg_rows
-            segment, seg_rows, next_offset = [], 0, 0
-            return pd.DataFrame({"block_rows": [n], "payload": [payload]})
-
-        for pdf in batches:
-            for ts_ms, key, value, src in zip(
-                pdf["ts_ms"], pdf["key"], pdf["value"], pdf["hdr_src"]
-            ):
-                rows.append(
-                    (int(ts_ms),
-                     None if key is None else bytes(key),
-                     None if value is None else bytes(value),
-                     [(b"src", str(src).encode())])
-                )
-                if len(rows) >= records_per_batch:
-                    flush_batch()
-                    if len(segment) >= batches_per_segment:
-                        yield flush_segment()
-        flush_batch()
-        if segment:
-            yield flush_segment()
-
-    return df.mapInPandas(encode_partition, schema=BLOCK_SCHEMA)
+    return encode_blocks(
+        df.select("ts_ms", "key", "value", "hdr_src"),
+        records_per_batch * batches_per_segment,
+        encode_segment,
+    )

@@ -43,7 +43,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import decimal as _decimal
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -71,7 +71,7 @@ from etl_ch_destination_spark.sink.rowbinary import (
     _encode_nonnull,
     _is_null,
 )
-from etl_ch_destination_spark.sink.wire import read_uvarint, write_uvarint
+from etl_ch_destination_spark.sink.wire import encode_blocks, read_uvarint, write_uvarint
 
 # Worker processes may not be able to import this package (the driver
 # contract runs from an arbitrary cwd — same reasoning as
@@ -195,9 +195,6 @@ def encode_native_block(schema: StructType, rows: Iterable) -> bytes:
     return bytes(out)
 
 
-NATIVE_BLOCK_SCHEMA = "block_rows INT, payload BINARY"
-
-
 def native_blocks(
     df: DataFrame,
     rows_per_block: int = 100_000,
@@ -213,8 +210,6 @@ def native_blocks(
     (MergeTree keys, dense vectors) — the override pins the declared
     wire types while the encoder still raises on any value that
     violates them, so a mismatch can never ship silently."""
-    if rows_per_block < 1:
-        raise ValueError("rows_per_block must be >= 1")
     schema = wire_schema if wire_schema is not None else df.schema
     if len(schema.fields) != len(df.schema.fields):
         raise ValueError("wire_schema width != DataFrame width")
@@ -235,26 +230,9 @@ def native_blocks(
                     f"{wf.dataType.simpleString()}"
                 )
 
-    def encode_partition(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        buf: list[tuple] = []
-
-        def flush() -> pd.DataFrame:
-            block = encode_native_block(schema, buf)
-            n = len(buf)
-            buf.clear()
-            return pd.DataFrame({"block_rows": [n], "payload": [block]})
-
-        for pdf in batches:
-            for row in pdf.itertuples(index=False, name=None):
-                buf.append(row)
-                if len(buf) >= rows_per_block:
-                    yield flush()
-        if buf:
-            yield flush()
-
-    return df.mapInPandas(encode_partition, schema=NATIVE_BLOCK_SCHEMA)
+    return encode_blocks(
+        df, rows_per_block, lambda chunk: encode_native_block(schema, chunk)
+    )
 
 
 # ---------------------------------------------------------------------------

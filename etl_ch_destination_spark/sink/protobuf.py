@@ -54,11 +54,11 @@ fast path.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
 from etl_ch_destination_spark.sink.wire import (
+    encode_blocks,
     read_uvarint,
     read_zigzag,
     write_uvarint,
@@ -83,8 +83,6 @@ _KINDS = {
     "double": WT_I64,
     "fixed32": WT_I32,
 }
-
-BLOCK_SCHEMA = "block_rows long, payload binary"
 
 # Worker-cwd import trap (see sink/rowbinary.py): ship this module by
 # value inside pickled closures so mapInPandas decode/encode work from
@@ -347,24 +345,4 @@ def protobuf_blocks(
     Column order of ``df`` must match the schema's field order."""
     if rows_per_file < 1:
         raise ValueError("rows_per_file must be >= 1")
-
-    def encode_partition(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        buf: list[tuple] = []
-
-        def flush() -> pd.DataFrame:
-            payload = encode_stream(schema, buf)
-            n = len(buf)
-            buf.clear()
-            return pd.DataFrame({"block_rows": [n], "payload": [payload]})
-
-        for pdf in batches:
-            for row in pdf.itertuples(index=False, name=None):
-                buf.append(row)
-                if len(buf) >= rows_per_file:
-                    yield flush()
-        if buf:
-            yield flush()
-
-    return df.mapInPandas(encode_partition, schema=BLOCK_SCHEMA)
+    return encode_blocks(df, rows_per_file, lambda chunk: encode_stream(schema, chunk))

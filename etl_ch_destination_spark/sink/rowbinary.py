@@ -53,7 +53,7 @@ from __future__ import annotations
 import datetime as _dt
 import decimal as _decimal
 import struct
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -75,7 +75,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from etl_ch_destination_spark.sink.wire import read_uvarint, write_uvarint
+from etl_ch_destination_spark.sink.wire import encode_blocks, read_uvarint, write_uvarint
 
 _EPOCH_DATE = _dt.date(1970, 1, 1)
 _EPOCH_TS = _dt.datetime(1970, 1, 1)
@@ -230,9 +230,6 @@ def encode_block(
 # ---------------------------------------------------------------------------
 # distributed path
 
-BLOCK_SCHEMA = "block_rows INT, payload BINARY"
-
-
 def rowbinary_blocks(df: DataFrame, rows_per_block: int = 100_000) -> DataFrame:
     """Encode ``df`` into RowBinary insert blocks, distributed.
 
@@ -243,32 +240,8 @@ def rowbinary_blocks(df: DataFrame, rows_per_block: int = 100_000) -> DataFrame:
     per block. Blocks are independent: a writer POSTs each with its own
     ``dedup_token`` and a failed block retries alone.
     """
-    if rows_per_block < 1:
-        raise ValueError("rows_per_block must be >= 1")
     schema = df.schema
-
-    def encode_partition(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        buf: list[bytes] = []
-
-        def flush() -> pd.DataFrame:
-            block = b"".join(buf)
-            n = len(buf)
-            buf.clear()
-            return pd.DataFrame({"block_rows": [n], "payload": [block]})
-
-        for pdf in batches:
-            # itertuples keeps schema column order; object dtype keeps
-            # None/Decimal/date values intact through Arrow
-            for row in pdf.itertuples(index=False, name=None):
-                buf.append(encode_row(schema, row))
-                if len(buf) >= rows_per_block:
-                    yield flush()
-        if buf:
-            yield flush()
-
-    return df.mapInPandas(encode_partition, schema=BLOCK_SCHEMA)
+    return encode_blocks(df, rows_per_block, lambda chunk: encode_block(schema, chunk))
 
 
 # ---------------------------------------------------------------------------

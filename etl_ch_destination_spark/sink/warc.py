@@ -36,7 +36,8 @@ no cross-file coordination).
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
+
+from etl_ch_destination_spark.sink.wire import encode_blocks
 
 # Worker-cwd import trap (see sink/rowbinary.py): ship this module by
 # value inside pickled closures so mapInPandas decode/encode work from
@@ -52,9 +53,6 @@ except Exception:  # noqa: BLE001  (older pickler without the hook)
 
 CRLF = b"\r\n"
 VERSION = b"WARC/1.0"
-
-# staged-file schema shared with the avro/protobuf codecs
-BLOCK_SCHEMA = "block_rows long, payload binary"
 
 
 # ------------------------------------------------------------------
@@ -217,63 +215,43 @@ def warc_files(df, docs_per_file: int = 256, request_every: int = 5):
     on every file. Emits one (block_rows, payload) row per file where
     block_rows counts only the response records."""
 
-    def encode_partition(batches: Iterator) -> Iterator:
-        import pandas as pd
+    warcinfo = gzip_member(encode_record(
+        "warcinfo",
+        [("WARC-Record-ID", "<urn:uuid:00000000-0000-0000-0000-000000000000>"),
+         ("WARC-Date", "2024-01-01T00:00:00Z"),
+         ("Content-Type", "application/warc-fields")],
+        b"software: etl-ch-destination-spark\r\n",
+    ))
 
-        members: list[bytes] = []
-        n_resp = 0
-
-        def start_file() -> None:
-            members.append(gzip_member(encode_record(
-                "warcinfo",
-                [("WARC-Record-ID", "<urn:uuid:00000000-0000-0000-0000-000000000000>"),
-                 ("WARC-Date", "2024-01-01T00:00:00Z"),
-                 ("Content-Type", "application/warc-fields")],
-                b"software: etl-ch-destination-spark\r\n",
-            )))
-
-        def flush() -> pd.DataFrame:
-            nonlocal n_resp
-            payload = b"".join(members)
-            n = n_resp
-            members.clear()
-            n_resp = 0
-            return pd.DataFrame({"block_rows": [n], "payload": [payload]})
-
-        for pdf in batches:
-            for doc_id, text, lang, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["lang"], pdf["source"]
-            ):
-                if not members:
-                    start_file()
-                uri = f"https://example.org/{source}/{doc_id}"
-                rid = f"<urn:uuid:{int(doc_id):032x}>"
-                date = "2024-01-01T00:00:00Z"
-                if request_every and int(doc_id) % request_every == 0:
-                    members.append(gzip_member(encode_record(
-                        "request",
-                        [("WARC-Record-ID", rid), ("WARC-Date", date),
-                         ("WARC-Target-URI", uri)],
-                        b"GET / HTTP/1.1\r\nHost: example.org\r\n\r\n",
-                    )))
-                body = str(text).encode("utf-8")
-                http = http_response_payload(
-                    200,
-                    [("Content-Type", "text/plain; charset=utf-8"),
-                     ("X-Doc-Lang", str(lang))],
-                    body,
-                )
+    def encode_file(chunk: list[tuple]) -> bytes:
+        members = [warcinfo]
+        for doc_id, text, lang, source in chunk:
+            uri = f"https://example.org/{source}/{doc_id}"
+            rid = f"<urn:uuid:{int(doc_id):032x}>"
+            date = "2024-01-01T00:00:00Z"
+            if request_every and int(doc_id) % request_every == 0:
                 members.append(gzip_member(encode_record(
-                    "response",
+                    "request",
                     [("WARC-Record-ID", rid), ("WARC-Date", date),
-                     ("WARC-Target-URI", uri),
-                     ("Content-Type", "application/http;msgtype=response")],
-                    http,
+                     ("WARC-Target-URI", uri)],
+                    b"GET / HTTP/1.1\r\nHost: example.org\r\n\r\n",
                 )))
-                n_resp += 1
-                if n_resp >= docs_per_file:
-                    yield flush()
-        if members:
-            yield flush()
+            body = str(text).encode("utf-8")
+            http = http_response_payload(
+                200,
+                [("Content-Type", "text/plain; charset=utf-8"),
+                 ("X-Doc-Lang", str(lang))],
+                body,
+            )
+            members.append(gzip_member(encode_record(
+                "response",
+                [("WARC-Record-ID", rid), ("WARC-Date", date),
+                 ("WARC-Target-URI", uri),
+                 ("Content-Type", "application/http;msgtype=response")],
+                http,
+            )))
+        return b"".join(members)
 
-    return df.mapInPandas(encode_partition, schema=BLOCK_SCHEMA)
+    return encode_blocks(
+        df.select("doc_id", "text", "lang", "source"), docs_per_file, encode_file
+    )

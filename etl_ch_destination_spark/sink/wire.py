@@ -1,9 +1,10 @@
-"""Base-128 varints (unsigned LEB128) and zigzag, shared by every wire
-codec in ``sink/``: RowBinary and Native length prefixes, Avro
-int/long, protobuf varint/sint64 and Kafka's record varints.
+"""The wire layer shared by every codec in ``sink/``: base-128 varints
+and zigzag at the bottom, the staged block frame on top.
 
-One validation policy for all of them, so malformed input fails the
-same way whatever the format:
+Varints (unsigned LEB128) and zigzag serve RowBinary and Native length
+prefixes, Avro int/long, protobuf varint/sint64 and Kafka's record
+varints. One validation policy for all of them, so malformed input
+fails the same way whatever the format:
 
 - a buffer that ends inside a varint raises ``truncated varint``;
 - a varint may be at most 10 bytes, and its 10th byte may carry only
@@ -13,9 +14,22 @@ same way whatever the format:
 
 Most values on these wires fit one byte (lengths below 128, small
 deltas and counts), so every reader and writer checks that case first.
+
+The staged block frame is a ``BLOCK_SCHEMA`` row per self-contained
+payload: a RowBinary or Native insert block, an Avro container file, a
+protobuf stream, a Kafka log segment or a WARC file. ``encode_blocks``
+is the one stager loop: it cuts each partition into chunks and hands
+each chunk to the format's encoder. ``decode_blocks`` is the one reader
+loop: it decodes each payload and raises when a block yields a row
+count other than its ``block_rows``.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Iterator
+
+from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 # Worker-cwd import trap (see sink/rowbinary.py): ship this module by
 # value inside pickled closures, like the codecs that import it.
@@ -82,3 +96,66 @@ def read_zigzag(buf: bytes, pos: int) -> tuple[int, int]:
         return (b >> 1) ^ -(b & 1), pos + 1
     u, pos = read_uvarint(buf, pos)
     return (u >> 1) ^ -(u & 1), pos
+
+
+BLOCK_SCHEMA = "block_rows long, payload binary"
+
+
+def encode_blocks(
+    df: DataFrame, rows_per_block: int, encode: Callable[[list[tuple]], bytes]
+) -> DataFrame:
+    """Stage ``df`` as ``BLOCK_SCHEMA`` rows, distributed.
+
+    Each task cuts its partition into chunks of at most
+    ``rows_per_block`` row tuples, in schema order, and emits one
+    ``(len(chunk), encode(chunk))`` row per chunk. A chunk never spans
+    partitions, so every payload decodes on its own and a failed block
+    retries alone."""
+    if rows_per_block < 1:
+        raise ValueError("rows_per_block must be >= 1")
+
+    def encode_partition(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        def frame(chunk: list[tuple]) -> pd.DataFrame:
+            return pd.DataFrame({"block_rows": [len(chunk)], "payload": [encode(chunk)]})
+
+        chunk: list[tuple] = []
+        for pdf in batches:
+            # itertuples keeps schema column order; object dtype keeps
+            # None/Decimal/date values intact through Arrow
+            for row in pdf.itertuples(index=False, name=None):
+                chunk.append(row)
+                if len(chunk) == rows_per_block:
+                    yield frame(chunk)
+                    chunk = []
+        if chunk:
+            yield frame(chunk)
+
+    return df.mapInPandas(encode_partition, schema=BLOCK_SCHEMA)
+
+
+def decode_blocks(
+    blocks: DataFrame, decode: Callable[[bytes], list[tuple]], schema: str
+) -> DataFrame:
+    """Decode staged ``BLOCK_SCHEMA`` rows, distributed.
+
+    ``decode(payload)`` returns one block's output tuples in the order
+    of the DDL ``schema``. A block that yields a row count other than
+    its ``block_rows`` raises, so framing drift never passes silently."""
+    out_schema = StructType.fromDDL(schema)
+    names = out_schema.names
+
+    def decode_partition(batches: Iterator) -> Iterator:
+        import pandas as pd
+
+        for pdf in batches:
+            rows: list[tuple] = []
+            for payload, n in zip(pdf["payload"], pdf["block_rows"]):
+                got = decode(bytes(payload))
+                if len(got) != n:
+                    raise ValueError(f"block row-count drift: {len(got)} != {n}")
+                rows += got
+            yield pd.DataFrame(rows, columns=names)
+
+    return blocks.mapInPandas(decode_partition, schema=out_schema)
