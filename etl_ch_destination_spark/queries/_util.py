@@ -98,3 +98,17 @@ def pos(col: Column) -> Column:
     variance numerators stay in exact integer/decimal space need no
     clamp — exact arithmetic cannot dip below zero."""
     return F.greatest(F.lit(0.0), col)
+
+
+def hilo(col: str) -> Column:
+    """Wide exact sum → double, rounded the same on both engines
+    (round 4): DuckDB's HUGEINT→double cast rounds twice (hi·2^64 + lo
+    in doubles) where Spark's BigDecimal.doubleValue() rounds once, so
+    a sum that can pass 2^53 is split into exact int64 halves (div/mod
+    2^32) and recombined as hi·2^32 + lo in doubles — multiply exact,
+    one add rounding, valid to the full 38 digits. The oracle SQL
+    spells the same split over HUGEINT, whose `//` is true integer
+    division."""
+    hi = F.expr(f"CAST({col} div 4294967296 AS BIGINT)").cast("double")
+    lo = F.expr(f"CAST({col} % 4294967296 AS BIGINT)").cast("double")
+    return hi * F.lit(4294967296.0) + lo

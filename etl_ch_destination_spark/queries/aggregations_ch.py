@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_ch_destination_spark.catalog import load_table
-from etl_ch_destination_spark.queries._util import nz, pos
+from etl_ch_destination_spark.queries._util import hilo, nz, pos
 from etl_ch_destination_spark.registry import query
 
 UNIQ_UPTO_N = 50   # uniqUpTo cap: exact below, N+1 sentinel above
@@ -1071,11 +1071,6 @@ def agg_skew_kurt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(x2c * x2c).alias("r4"),
     )
 
-    def hilo(c: str):
-        hi = F.expr(f"CAST({c} div 4294967296 AS BIGINT)").cast("double")
-        lo = F.expr(f"CAST({c} % 4294967296 AS BIGINT)").cast("double")
-        return hi * F.lit(4294967296.0) + lo
-
     s = raw.select(
         "event_type",
         "n",
@@ -1268,11 +1263,6 @@ def agg_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(ry * ry).alias("t5"),
     )
 
-    def hilo(c: str):
-        hi = F.expr(f"CAST({c} div 4294967296 AS BIGINT)").cast("double")
-        lo = F.expr(f"CAST({c} % 4294967296 AS BIGINT)").cast("double")
-        return hi * F.lit(4294967296.0) + lo
-
     s = raw.select(
         "l_returnflag",
         "n",
@@ -1418,11 +1408,6 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = (F.col("value").cast("decimal(12,2)") * 100).cast("decimal(9,0)")
     q = ev.select("event_type", x.alias("x"))
     x2 = (F.col("x") * F.col("x")).cast("decimal(19,0)")
-
-    def hilo(c: str):
-        hi = F.expr(f"CAST({c} div 4294967296 AS BIGINT)").cast("double")
-        lo = F.expr(f"CAST({c} % 4294967296 AS BIGINT)").cast("double")
-        return hi * F.lit(4294967296.0) + lo
 
     s = (
         q.select("event_type", "x", x2.alias("x2"))
@@ -1667,11 +1652,6 @@ def agg_covar_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(x * y).alias("r3"),
     )
 
-    def hilo(c: str):
-        hi = F.expr(f"CAST({c} div 4294967296 AS BIGINT)").cast("double")
-        lo = F.expr(f"CAST({c} % 4294967296 AS BIGINT)").cast("double")
-        return hi * F.lit(4294967296.0) + lo
-
     s = raw.select(
         "l_returnflag",
         "n",
@@ -1805,11 +1785,6 @@ def agg_student_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = (F.col("value").cast("decimal(12,2)") * 100).cast("decimal(9,0)")
     q = ev.select("event_type", x.alias("x"))
     x2 = (F.col("x") * F.col("x")).cast("decimal(19,0)")
-
-    def hilo(c: str):
-        hi = F.expr(f"CAST({c} div 4294967296 AS BIGINT)").cast("double")
-        lo = F.expr(f"CAST({c} % 4294967296 AS BIGINT)").cast("double")
-        return hi * F.lit(4294967296.0) + lo
 
     s = (
         q.select("event_type", "x", x2.alias("x2"))
@@ -3520,11 +3495,6 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggs = [a for g in ANOVA_GROUPS for a in grp(g)]
     s = q.agg(*aggs)
 
-    def hilo(c: str):
-        hi = F.expr(f"CAST({c} div 4294967296 AS BIGINT)").cast("double")
-        lo = F.expr(f"CAST({c} % 4294967296 AS BIGINT)").cast("double")
-        return hi * F.lit(4294967296.0) + lo
-
     s = s.select(
         *[F.col(f"n_{g}") for g in ANOVA_GROUPS],
         *[hilo(f"r1_{g}").alias(f"s1_{g}") for g in ANOVA_GROUPS],
@@ -3681,11 +3651,6 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         2 * F.col("below") + F.col("mv") + 1
     )
 
-    def hilo_col(c):
-        hi = F.expr(f"CAST({c} div 4294967296 AS BIGINT)").cast("double")
-        lo = F.expr(f"CAST({c} % 4294967296 AS BIGINT)").cast("double")
-        return hi * F.lit(4294967296.0) + lo
-
     aggs = []
     for gname in ANOVA_GROUPS:
         cond = F.col("event_type") == gname
@@ -3709,9 +3674,9 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = s.crossJoin(tie)  # 1 row x 1 row
     s = s.select(
         *[F.col(f"n_{gname}") for gname in ANOVA_GROUPS],
-        *[hilo_col(f"r2i_{gname}").alias(f"r2_{gname}")
+        *[hilo(f"r2i_{gname}").alias(f"r2_{gname}")
           for gname in ANOVA_GROUPS],
-        hilo_col("tie_i").alias("tie_sum"),
+        hilo("tie_i").alias("tie_sum"),
     )
 
     def chain(parts):
@@ -3831,11 +3796,6 @@ def agg_min_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("conv"),
     )
     x2 = (F.col("x") * F.col("x")).cast("decimal(21,0)")
-
-    def hilo(col: str):
-        hi = F.expr(f"CAST({col} div 4294967296 AS BIGINT)").cast("double")
-        lo = F.expr(f"CAST({col} % 4294967296 AS BIGINT)").cast("double")
-        return hi * F.lit(4294967296.0) + lo
 
     s = (
         q.select("segment", "x", x2.alias("x2"), "conv")

@@ -45,8 +45,15 @@ _SQL_EDGES = """
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`copurchase_edges` of the fixture lineitem table."""
+    return copurchase_edges(load_table(spark, sf_dir, "lineitem"))
+
+
+def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     """Distinct undirected co-purchase edges (u < v) between parts that
-    share an order.
+    share an order, from any frame with ``l_orderkey``/``l_partkey``
+    (the graph keys pass the fixture table, tools/stress.py its
+    replicated copies).
 
     r14 optimization (guide §2.4 "remove shuffles outright"): the old
     form deduped (order, part), SELF-JOINED on the order key and
@@ -61,9 +68,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the join and one full exchange of the (o, p) projection
     gone. The SQL oracle keeps the self-join form; both compute the
     identical set."""
-    lp = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    )
+    lp = lineitem.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
     sets = lp.groupBy("o").agg(F.sort_array(F.collect_set("p")).alias("ps"))
     return (
         sets.select(F.explode(_center_pair_structs("ps", ("u", "v"))).alias("e"))

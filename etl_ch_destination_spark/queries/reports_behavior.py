@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_ch_destination_spark.catalog import load_table
-from etl_ch_destination_spark.queries._util import nz, pos
+from etl_ch_destination_spark.queries._util import hilo, nz, pos
 from etl_ch_destination_spark.registry import query
 
 
@@ -1732,11 +1732,6 @@ def rpt_ab_test_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = ev.select("event_type", v.alias("v"), x.alias("x")).withColumn(
         "x2", (F.col("x") * F.col("x")).cast("decimal(19,0)")
     )
-
-    def hilo(col):
-        hi = F.expr(f"CAST({col} div 4294967296 AS BIGINT)").cast("double")
-        lo = F.expr(f"CAST({col} % 4294967296 AS BIGINT)").cast("double")
-        return hi * F.lit(4294967296.0) + lo
 
     s = (
         q.groupBy("event_type")
