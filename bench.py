@@ -218,6 +218,43 @@ def _spawn_cpu_load(n: int) -> list:
     return procs
 
 
+def stdout_seconds(v: float) -> float:
+    """A key's median as the stdout line prints it: two decimals below
+    1 s, one decimal from 1 s, whole seconds once it rounds to 100 s
+    (99.99 at one decimal is 100.0, no shorter than 99.99). The -1 of a
+    failed key passes through. The sidecar keeps three decimals."""
+    if v < 1:
+        return round(v, 2)
+    r = round(v, 1)
+    return round(r) if r >= 100 else r
+
+
+def stdout_line(timings: dict, suite: float, sf_dir: str, calib_sec) -> str:
+    """The one compact JSON line bench.py prints.
+
+    Only the last 2,000 chars of stdout are captured and this line is the
+    LAST thing printed, so the hard bound is a complete line within the
+    final 2,000 chars. Every per-key value prints in at most four chars below
+    10,000 s (``stdout_seconds``), which keeps all of BENCH_KEYS near
+    1,960 chars; a longer line first drops the calibration field (it
+    stays in the sidecar) rather than risk a truncated-head parse like
+    BENCH_r04's."""
+    compact = {
+        "metric": "suite_wall_sec",
+        "value": suite,
+        "unit": "sec",
+        "queries": {k: stdout_seconds(v) for k, v in timings.items()},
+        "sf": sf_dir,
+        "calib_sec": calib_sec,
+    }
+    line = json.dumps(compact, separators=(",", ":"))
+    if len(line) > 1990:
+        del compact["calib_sec"]
+        line = json.dumps(compact, separators=(",", ":"))
+    assert len(line) <= 1990, f"bench stdout line too long: {len(line)}"
+    return line
+
+
 def main() -> int:
     import argparse
 
@@ -366,29 +403,7 @@ def main() -> int:
         sidecar = "BENCH_DETAIL_subset.json"
     with open(os.path.join(REPO, sidecar), "w") as f:
         json.dump(detail, f, indent=1)
-    compact = {
-        "metric": "suite_wall_sec",
-        "value": suite,
-        "unit": "sec",
-        # stdout carries 2-decimal timings (10 ms granularity — plenty
-        # for per-key baseline comparison); the 3-decimal medians and
-        # p95s live in the sidecar. At 56 keys the 3-decimal line
-        # outgrew the old 1500-char self-check.
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        "sf": sf_dir,
-        "calib_sec": calib_sec,
-    }
-    line = json.dumps(compact, separators=(",", ":"))
-    # The driver's tail capture is 2,000 chars and this line is the
-    # LAST thing printed, so the hard bound is a complete line within
-    # the final 2,000 chars. At 72 keys the full line measures ~1955
-    # chars; if a slow-era run ever pushes it past the margin, drop the
-    # calibration field from STDOUT first (it stays in the sidecar)
-    # rather than risking a truncated-head parse like BENCH_r04's.
-    if len(line) > 1990:
-        del compact["calib_sec"]
-        line = json.dumps(compact, separators=(",", ":"))
-    assert len(line) <= 1990, f"bench stdout line too long: {len(line)}"
+    line = stdout_line(timings, suite, sf_dir, calib_sec)
     print(line)
     spark.stop()
     return 0

@@ -110,6 +110,14 @@ def parallelize_codec_scan(
     unchanged from parallelize_scan, so at real scale (many splits)
     this is a no-op exactly like its parent.
 
+    The sized fan-out is also capped at ``defaultParallelism`` (the
+    cores): N tasks on fewer cores run in two waves, the second mostly
+    idle (5 tasks on 4 cores at sf0.01), and a codec stager writes one
+    staged file per task. With at most one file per core, Spark's
+    file-split packing (``bytesPerCore`` in ``FilePartition``) gives
+    every staged file its own read split, so the decode runs over the
+    staged files as they are, one task per file, with no re-spread.
+
     Bytes come from the scan's file listing (driver-side metadata, no
     job). Non-local/unlistable inputs fall back to full fan-out.
 
@@ -135,7 +143,8 @@ def parallelize_codec_scan(
                 return parallelize_scan(df, spark)
             local = _unquote(parsed.path) if parsed.scheme else f
             total += _os.path.getsize(local)
-        target = max(1, min(n_parts, (total + bytes_per_task - 1) // bytes_per_task))
+        cap = min(n_parts, spark.sparkContext.defaultParallelism)
+        target = max(1, min(cap, (total + bytes_per_task - 1) // bytes_per_task))
     except Exception:  # listing failed: behave like parallelize_scan
         return parallelize_scan(df, spark)
     if df.rdd.getNumPartitions() < target:

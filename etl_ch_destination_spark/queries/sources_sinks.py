@@ -40,7 +40,7 @@ from etl_ch_destination_spark.sink.clickhouse import (
     ddl_for,
     stamp_batch,
 )
-from etl_ch_destination_spark.sink.wire import decode_blocks
+from etl_ch_destination_spark.sink.wire import decode_blocks, read_blocks
 
 TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"  # µs-lossless JSONL round trip
 
@@ -52,10 +52,18 @@ def _scratch(sf_dir: str, key: str) -> str:
 
 
 def _staged(spark: SparkSession, path: str, blocks: DataFrame) -> DataFrame:
-    """Write a codec stager's blocks to ``path`` and read them back,
-    spread over the cores for the decode (see scan_rowbinary_import)."""
+    """Write a codec stager's blocks to ``path`` and read them back for
+    the decode.
+
+    The write is the only Spark action here. The read-back declares
+    ``BLOCK_SCHEMA`` (``sink.wire.read_blocks``), so no job infers the
+    schema of files whose frame is known. It is not spread again
+    either: ``parallelize_codec_scan`` fans the encode out to at most
+    one task per core, each task stages one file, and each file is one
+    read split, so the decode already runs one task per file in one
+    wave, with no shuffle between the staged files and the decode."""
     blocks.write.mode("overwrite").parquet(path)
-    return parallelize_codec_scan(spark.read.parquet(path), spark)
+    return read_blocks(spark, path)
 
 
 @query(

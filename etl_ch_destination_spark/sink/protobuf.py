@@ -234,7 +234,12 @@ def decode_message(schema: list[tuple], buf: bytes) -> tuple:
     repeated on the wire keeps the LAST value (spec: last-one-wins
     for non-repeated scalars). Absent fields decode to NULL
     (explicit presence) or the proto3 default (implicit)."""
-    by_num = {f[0]: f for f in schema}
+    return _decode_message(schema, {f[0]: f for f in schema}, buf)
+
+
+def _decode_message(schema: list[tuple], by_num: dict[int, tuple], buf: bytes) -> tuple:
+    """``decode_message`` with the field-number lookup built by the caller,
+    so a stream builds it once, not once per message."""
     got: dict[int, object] = {}
     pos = 0
     while pos < len(buf):
@@ -317,13 +322,14 @@ def decode_stream(
     end on a message boundary. ``expected_rows`` (when given) pins
     the count — a framing drift raises instead of silently yielding
     a different row count."""
+    by_num = {f[0]: f for f in schema}
     rows: list[tuple] = []
     pos = 0
     while pos < len(payload):
         n, pos = read_uvarint(payload, pos)
         if pos + n > len(payload):
             raise ValueError("message length overruns stream")
-        rows.append(decode_message(schema, payload[pos : pos + n]))
+        rows.append(_decode_message(schema, by_num, payload[pos : pos + n]))
         pos += n
     if expected_rows is not None and len(rows) != expected_rows:
         raise ValueError(f"stream row-count drift: {len(rows)} != {expected_rows}")

@@ -19,16 +19,18 @@ The staged block frame is a ``BLOCK_SCHEMA`` row per self-contained
 payload: a RowBinary or Native insert block, an Avro container file, a
 protobuf stream, a Kafka log segment or a WARC file. ``encode_blocks``
 is the one stager loop: it cuts each partition into chunks and hands
-each chunk to the format's encoder. ``decode_blocks`` is the one reader
-loop: it decodes each payload and raises when a block yields a row
-count other than its ``block_rows``.
+each chunk to the format's encoder. ``read_blocks`` reads a staged
+directory back under the known frame, and ``decode_blocks`` is the one
+reader loop: it decodes each payload and raises when a block yields a
+row count other than its ``block_rows``.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 # Worker-cwd import trap (see sink/rowbinary.py): ship this module by
@@ -133,6 +135,36 @@ def encode_blocks(
             yield frame(chunk)
 
     return df.mapInPandas(encode_partition, schema=BLOCK_SCHEMA)
+
+
+def read_blocks(spark: SparkSession, path: str) -> DataFrame:
+    """Read a local staged block directory back as ``BLOCK_SCHEMA`` rows.
+
+    The frame is known, so the read declares it: a plain
+    ``spark.read.parquet`` would first run a Spark job to infer the
+    schema from a footer. The scan keeps the files' own splits, so a
+    decode over it starts no shuffle.
+
+    Spark's parquet reader returns a string column as binary when the
+    read asks for binary, and a missing column as nulls, so the
+    declared read alone would decode a directory that another writer
+    staged with a text ``payload``. Before the read, each part file's
+    footer (metadata only, no Spark job) must hold ``block_rows`` as
+    int64 and ``payload`` as binary, else this raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    want = {"block_rows": pa.int64(), "payload": pa.binary()}
+    for name in sorted(os.listdir(path)):
+        if name.startswith(("_", ".")):
+            continue
+        got = pq.read_schema(os.path.join(path, name))
+        for field, kind in want.items():
+            i = got.get_field_index(field)
+            if i < 0 or got.field(i).type != kind:
+                have = "missing" if i < 0 else got.field(i).type
+                raise ValueError(f"staged file {name}: {field} is {have}, want {kind}")
+    return spark.read.schema(BLOCK_SCHEMA).parquet(path)
 
 
 def decode_blocks(

@@ -33,6 +33,11 @@ def test_codec_scan_fanout_proportional_and_capped(spark):
     got = parallelize_codec_scan(big, spark, bytes_per_task=16 * 1024)
     n = got.rdd.getNumPartitions()
     assert 1 <= n <= n_parts
+    # one wave: never more tasks than cores, however small the task size
+    cores = spark.sparkContext.defaultParallelism
+    assert n <= cores
+    widest = parallelize_codec_scan(big, spark, bytes_per_task=1)
+    assert widest.rdd.getNumPartitions() == min(n_parts, cores)
     # rows survive the round-robin untouched
     assert got.count() == big.count()
 

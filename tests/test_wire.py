@@ -375,3 +375,27 @@ def test_decode_blocks_frames_rows_and_checks_row_count(spark):
     for drift in (lambda p: decode(p)[:1], lambda p: decode(p + b"c")):
         with pytest.raises(ValueError, match="row-count drift"):
             wire.decode_blocks(frame, drift, "code long, ch string")
+
+
+def test_read_blocks_declares_the_frame_and_rejects_foreign_files(spark, tmp_path):
+    def decode(payload):
+        return [(b,) for b in payload]
+
+    good = str(tmp_path / "good")
+    spark.createDataFrame([(2, b"ab")], wire.BLOCK_SCHEMA).coalesce(1).write.parquet(good)
+    got = wire.decode_blocks(wire.read_blocks(spark, good), decode, "code long").collect()
+    assert [tuple(r) for r in got] == [(97,), (98,)]
+
+    no_rows = str(tmp_path / "no_block_rows")
+    spark.createDataFrame([(b"ab",)], "payload binary").write.parquet(no_rows)
+    text = str(tmp_path / "text_payload")
+    spark.createDataFrame([(2, "ab")], "block_rows long, payload string").write.parquet(text)
+    for path, match in ((no_rows, "block_rows is missing"), (text, "payload is string")):
+        with pytest.raises(ValueError, match=match):
+            wire.decode_blocks(wire.read_blocks(spark, path), decode, "code long").collect()
+
+    # The declared read on its own returns a missing block_rows as null,
+    # and decode_blocks still rejects the block.
+    bare = spark.read.schema(wire.BLOCK_SCHEMA).parquet(no_rows)
+    with pytest.raises(Exception, match="row-count drift"):
+        wire.decode_blocks(bare, decode, "code long").collect()

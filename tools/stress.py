@@ -840,13 +840,15 @@ def _codec_roundtrip(f: Factor, name: str, blocks: DataFrame, decode: Callable) 
     """Time a codec stager's blocks stored as parquet (``<name>_encode``),
     then the stored blocks decoded through ``decode_blocks`` with the
     per-record values dropped (``<name>_decode``): ``decode(payload)``
-    returns the payload's records and must match its ``block_rows``."""
-    from etl_ch_destination_spark.sink.wire import decode_blocks
+    returns the payload's records and must match its ``block_rows``.
+    The blocks are read back with ``read_blocks``, as the codec keys
+    read theirs, so the decode times the plan those keys run."""
+    from etl_ch_destination_spark.sink.wire import decode_blocks, read_blocks
 
     path = os.path.join(STAGING, f"{name}_{f.n}x")
     encode = time_action(lambda: blocks.write.mode("overwrite").parquet(path), f.runs)
     counted = decode_blocks(
-        f.spark.read.parquet(path), lambda payload: [(1,)] * len(decode(payload)), "n bigint"
+        read_blocks(f.spark, path), lambda payload: [(1,)] * len(decode(payload)), "n bigint"
     )
     return {f"{name}_encode": encode, f"{name}_decode": time_action(lambda: drain(counted), f.runs)}
 
