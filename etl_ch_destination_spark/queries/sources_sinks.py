@@ -40,6 +40,23 @@ from etl_ch_destination_spark.sink.clickhouse import (
     ddl_for,
     stamp_batch,
 )
+from etl_ch_destination_spark.sink.iceberg import (
+    iceberg_plan_files,
+    iceberg_resolve_files,
+    publish,
+    write_manifest,
+)
+from etl_ch_destination_spark.sink.table_log import (
+    add_action,
+    change_files,
+    commit,
+    latest_version,
+    live_adds,
+    table_log_column_mapping,
+    table_log_snapshot,
+    table_log_snapshot_from_checkpoint,
+    write_checkpoint,
+)
 from etl_ch_destination_spark.sink.wire import decode_blocks, read_blocks
 
 TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"  # µs-lossless JSONL round trip
@@ -64,6 +81,61 @@ def _staged(spark: SparkSession, path: str, blocks: DataFrame) -> DataFrame:
     wave, with no shuffle between the staged files and the decode."""
     blocks.write.mode("overwrite").parquet(path)
     return read_blocks(spark, path)
+
+
+def _fresh(sf_dir: str, key: str, *names: str) -> list[str]:
+    """The key's scratch subdirs ``names``, emptied: a staged log starts
+    again at version 0, and a commit never overwrites."""
+    root = _scratch(sf_dir, key)
+    paths = [os.path.join(root, name) for name in names]
+    for p in paths:
+        shutil.rmtree(p, ignore_errors=True)
+    return paths
+
+
+def _stage_slices(
+    spark: SparkSession, sf_dir: str, data_dir: str, n_slices: int
+) -> DataFrame:
+    """The lakehouse keys' fixture layout: orders as (o_orderkey,
+    o_orderstatus, price_cents) cut into ``n_slices`` contiguous
+    o_orderkey ranges (NTILE), written partitioned by ``slice`` under
+    ``data_dir``. Returns the staged frame, ``slice`` included.
+
+    Staged once: the partitioned write and the stats, rewrite and cdc
+    consumers all re-plan this frame, and unstaged each of them re-ran
+    the global NTILE sort. The window is fixture-layout machinery, not
+    a read path (production writers range-partition by key)."""
+    from pyspark.sql.window import Window
+
+    o = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").cast("long"),
+        "o_orderstatus",
+        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+        .cast("long")
+        .alias("price_cents"),
+    )
+    sliced = stage(
+        o.withColumn("slice", F.ntile(n_slices).over(Window.orderBy("o_orderkey"))),
+        eager=False,
+        label="orders-sliced",
+    )
+    sliced.write.mode("overwrite").partitionBy("slice").parquet(data_dir)
+    return sliced
+
+
+def _key_stats(df: DataFrame, by: str | None = None) -> dict:
+    """(numRecords, min, max) of o_orderkey per ``by`` value: the file
+    stats an add action or a manifest entry carries. Without ``by`` the
+    one entry is keyed None."""
+    grouped = df.groupBy(by) if by else df.groupBy()
+    return {
+        (r[by] if by else None): (r["n"], r["lo"], r["hi"])
+        for r in grouped.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("o_orderkey").alias("lo"),
+            F.max("o_orderkey").alias("hi"),
+        ).collect()
+    }
 
 
 @query(
@@ -2576,9 +2648,10 @@ TLOG_PIN_VERSION = 1     # snapshot version the query reads
 def scan_table_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-style TRANSACTION-LOG table scan (VERDICT r13 #4) — the
     lakehouse metadata layer under every Delta/Iceberg table: data
-    lives as immutable parquet files, a JSON action log
-    (``%020d.json`` commits of metaData/add/remove actions, one JSON
-    object per line, file-level min/max stats carried as the embedded
+    lives as immutable parquet files, a JSON action log (zero-padded
+    ``<version>.json`` commits of metaData/add/remove actions written
+    by sink/table_log.commit, one JSON object per line, file-level
+    min/max stats carried as the embedded
     ``stats`` JSON string exactly like Delta) defines which files ARE
     the table at each version, and readers reconstruct a pinned
     snapshot by replaying the log — never by listing the directory.
@@ -2612,7 +2685,8 @@ def scan_table_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     surviving files' row groups. The NTILE staging window is
     fixture-layout machinery, not the read path (production writers
     range-partition by key instead)."""
-    data_dir, log_dir = stage_table_log(spark, sf_dir, "scan_table_log")
+    data_dir, log_dir, sliced = stage_table_log(spark, sf_dir, "scan_table_log")
+    commit_table_log_rewrite(sliced, data_dir, log_dir)
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("long")
     )
@@ -2635,167 +2709,35 @@ def scan_table_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def table_log_snapshot(
-    spark: SparkSession, log_dir: str, version: int
-) -> DataFrame:
-    """Replay a Delta-style action log RELATIONALLY up to ``version``:
-    parse each commit file's add/remove lines, take the latest action
-    per path (version DESC; within one commit an add supersedes a
-    remove, per Delta's commit-atomicity), and keep the adds. Returns
-    one row per live file: path, numRecords, min_k, max_k.
-
-    The whole computation is over the manifest (|files| rows), never
-    data — the same scale shape as Delta's own log replay."""
-    from pyspark.sql.window import Window
-
-    actions = (
-        spark.read.text(log_dir)
-        .withColumn(
-            "version",
-            F.regexp_extract(
-                F.element_at(F.split(F.input_file_name(), "/"), -1),
-                r"^(\d+)\.json$",
-                1,
-            ).cast("long"),
-        )
-        .withColumn("j", F.from_json(
-            "value",
-            "add struct<path:string,dataChange:boolean,stats:string>,"
-            "remove struct<path:string,dataChange:boolean>",
-        ))
-        .filter(F.col("version") <= version)
-    )
-    adds = actions.filter(F.col("j.add.path").isNotNull()).select(
-        F.col("j.add.path").alias("path"),
-        "version",
-        F.lit(1).alias("is_add"),
-        F.from_json(
-            "j.add.stats",
-            "numRecords bigint, minValues struct<o_orderkey:bigint>,"
-            " maxValues struct<o_orderkey:bigint>",
-        ).alias("st"),
-    )
-    removes = actions.filter(F.col("j.remove.path").isNotNull()).select(
-        F.col("j.remove.path").alias("path"),
-        "version",
-        F.lit(0).alias("is_add"),
-        F.lit(None).cast(
-            "struct<numRecords:bigint,minValues:struct<o_orderkey:bigint>,"
-            "maxValues:struct<o_orderkey:bigint>>"
-        ).alias("st"),
-    )
-    w = Window.partitionBy("path").orderBy(
-        F.col("version").desc(), F.col("is_add").desc()
-    )
-    return (
-        adds.unionByName(removes)
-        .withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("is_add") == 1))
-        .select(
-            "path",
-            F.col("st.numRecords").alias("numRecords"),
-            F.col("st.minValues.o_orderkey").alias("min_k"),
-            F.col("st.maxValues.o_orderkey").alias("max_k"),
-        )
-    )
-
-
 def stage_table_log(spark: SparkSession, sf_dir: str, key: str):
     """Stage the Delta-style fixture layout shared by the table-log
     keys: orders sliced into {TLOG_SLICES} contiguous o_orderkey-range
-    parquet files + a two-commit JSON action log (v0 = metaData + adds
-    with embedded min/max/numRecords stats; v1 = UPDATE rewrite that
-    removes the TLOG_REMOVED slices and adds one compacted file with
-    the 'F'-status rows deleted). Each caller keys its own scratch
-    subdir so concurrently-run keys never share state. Returns
-    (data_dir, log_dir)."""
-    import json as _json
+    parquet files and commit v0 (metaData + one add per slice, with
+    embedded min/max/numRecords stats). Each caller keys its own
+    scratch subdir so concurrently-run keys never share state. Returns
+    (data_dir, log_dir, sliced), ``sliced`` being the staged frame."""
+    data_dir, log_dir = _fresh(sf_dir, key, "data", "_table_log")
+    sliced = _stage_slices(spark, sf_dir, data_dir, TLOG_SLICES)
+    stats = _key_stats(sliced, "slice")
+    commit(log_dir, 0, [
+        {"metaData": {"id": "scan-table-log-fixture"}},
+        *[add_action(f"slice={s}", *stats[s]) for s in range(1, TLOG_SLICES + 1)],
+    ])
+    return data_dir, log_dir, sliced
 
-    from pyspark.sql.window import Window
 
-    root = _scratch(sf_dir, key)
-    data_dir = os.path.join(root, "data")
-    log_dir = os.path.join(root, "_table_log")
-    shutil.rmtree(data_dir, ignore_errors=True)
-    shutil.rmtree(log_dir, ignore_errors=True)
-    os.makedirs(log_dir)
-
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").cast("long"),
-        "o_orderstatus",
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("long")
-        .alias("price_cents"),
-    )
-    # staged once: the partitioned write AND the stats/rewrite/cdc
-    # consumers below re-plan this frame — unstaged, each consumer
-    # re-ran the global ntile sort
-    sliced = stage(
-        o.withColumn(
-            "slice", F.ntile(TLOG_SLICES).over(Window.orderBy("o_orderkey"))
-        ),
-        eager=False,
-        label="tlog-sliced",
-    )
-    sliced.write.mode("overwrite").partitionBy("slice").parquet(data_dir)
-
-    # file-level stats for the add actions (the bounded manifest)
-    stats = {
-        r["slice"]: (r["n"], r["min_k"], r["max_k"])
-        for r in sliced.groupBy("slice")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("o_orderkey").alias("min_k"),
-            F.max("o_orderkey").alias("max_k"),
-        )
-        .collect()
-    }
-
-    def _add(path: str, n: int, lo: int, hi: int) -> str:
-        return _json.dumps(
-            {
-                "add": {
-                    "path": path,
-                    "dataChange": True,
-                    "stats": _json.dumps(
-                        {
-                            "numRecords": int(n),
-                            "minValues": {"o_orderkey": int(lo)},
-                            "maxValues": {"o_orderkey": int(hi)},
-                        }
-                    ),
-                }
-            }
-        )
-
-    # v0: metaData + one add per slice file
-    v0 = [_json.dumps({"metaData": {"id": "scan-table-log-fixture"}})]
-    for s in range(1, TLOG_SLICES + 1):
-        n, lo, hi = stats[s]
-        v0.append(_add(f"slice={s}", n, lo, hi))
-    with open(os.path.join(log_dir, "%020d.json" % 0), "w") as f:
-        f.write("\n".join(v0) + "\n")
-
-    # v1: UPDATE rewrite — remove the TLOG_REMOVED slices, add one
-    # compacted file holding their non-'F' rows
+def commit_table_log_rewrite(sliced: DataFrame, data_dir: str, log_dir: str) -> None:
+    """Commit v1 over a stage_table_log layout: an UPDATE rewrite that
+    removes the TLOG_REMOVED slices and adds one compacted file,
+    ``rewrite=1``, holding their rows minus the 'F'-status ones."""
     rewrite = sliced.filter(
         F.col("slice").isin(*TLOG_REMOVED) & (F.col("o_orderstatus") != "F")
     ).drop("slice")
-    rw_dir = os.path.join(data_dir, "rewrite=1")
-    rewrite.write.mode("overwrite").parquet(rw_dir)
-    rw = rewrite.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("o_orderkey").alias("min_k"),
-        F.max("o_orderkey").alias("max_k"),
-    ).collect()[0]
-    v1 = [
-        _json.dumps({"remove": {"path": f"slice={s}", "dataChange": True}})
-        for s in TLOG_REMOVED
-    ]
-    v1.append(_add("rewrite=1", rw["n"], rw["min_k"], rw["max_k"]))
-    with open(os.path.join(log_dir, "%020d.json" % 1), "w") as f:
-        f.write("\n".join(v1) + "\n")
-    return data_dir, log_dir
+    rewrite.write.mode("overwrite").parquet(os.path.join(data_dir, "rewrite=1"))
+    commit(log_dir, 1, [
+        *[{"remove": {"path": f"slice={s}", "dataChange": True}} for s in TLOG_REMOVED],
+        add_action("rewrite=1", *_key_stats(rewrite)[None]),
+    ])
 
 
 @query(
@@ -2833,7 +2775,8 @@ def scan_table_log_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: two manifest replays (|files| rows each), one parquet scan
     of the removed files, one of the added file, and a hash
     EXCEPT ALL on the full row — no full-table scan node anywhere."""
-    data_dir, log_dir = stage_table_log(spark, sf_dir, "scan_table_log_travel")
+    data_dir, log_dir, sliced = stage_table_log(spark, sf_dir, "scan_table_log_travel")
+    commit_table_log_rewrite(sliced, data_dir, log_dir)
 
     live0 = {r["path"] for r in table_log_snapshot(spark, log_dir, 0).collect()}
     live1 = {r["path"] for r in table_log_snapshot(spark, log_dir, 1).collect()}
@@ -3014,32 +2957,15 @@ def scan_table_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     own format choice — columnar manifest scans for million-file
     tables); the tail is one tiny JSON commit; data I/O is a plain
     multi-path parquet scan of the live files."""
-    import json as _json
-
-    data_dir, log_dir = stage_table_log(
+    data_dir, log_dir, sliced = stage_table_log(
         spark, sf_dir, "scan_table_log_checkpoint"
     )
-
-    # ---- checkpoint at v1: flattened live-file state, parquet ----
-    ckpt_df = table_log_snapshot(spark, log_dir, 1)
-    ckpt_path = os.path.join(log_dir, "%020d.checkpoint.parquet" % 1)
-    ckpt_df.coalesce(1).write.mode("overwrite").parquet(ckpt_path)
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as f:
-        f.write(_json.dumps({"version": 1}))
-
-    # ---- v2 commit: drop one whole file (partition delete) ----
-    with open(os.path.join(log_dir, "%020d.json" % 2), "w") as f:
-        f.write(
-            _json.dumps(
-                {
-                    "remove": {
-                        "path": f"slice={TLOG_CKPT_REMOVED_V2}",
-                        "dataChange": True,
-                    }
-                }
-            )
-            + "\n"
-        )
+    commit_table_log_rewrite(sliced, data_dir, log_dir)
+    # checkpoint at v1, then a v2 commit that drops one whole file
+    # (partition delete)
+    write_checkpoint(spark, log_dir, 1)
+    commit(log_dir, 2, [{"remove": {
+        "path": f"slice={TLOG_CKPT_REMOVED_V2}", "dataChange": True}}])
 
     live = table_log_snapshot_from_checkpoint(spark, log_dir, 2)
     paths = [r["path"] for r in live.collect()]
@@ -3047,97 +2973,6 @@ def scan_table_log_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scan.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum("price_cents").cast("bigint").alias("sum_cents"),
-    )
-
-
-def table_log_snapshot_from_checkpoint(
-    spark: SparkSession, log_dir: str, version: int
-) -> DataFrame:
-    """Resolve the live-file set at ``version`` via the checkpoint
-    path: read ``_last_checkpoint`` → load the checkpoint parquet
-    (live adds at checkpoint version) → replay only the JSON commits
-    in (ckpt_version, version]. Never touches commits at or before
-    the checkpoint — the O(tail) open that makes long-history tables
-    cheap. Same output shape as table_log_snapshot."""
-    import json as _json
-
-    from pyspark.sql.window import Window
-
-    with open(os.path.join(log_dir, "_last_checkpoint")) as f:
-        ckpt_version = int(_json.loads(f.read())["version"])
-    if version < ckpt_version:
-        raise ValueError(
-            f"pinned version {version} predates checkpoint {ckpt_version}; "
-            "use table_log_snapshot (full replay) for pre-checkpoint reads"
-        )
-    ckpt = spark.read.parquet(
-        os.path.join(log_dir, "%020d.checkpoint.parquet" % ckpt_version)
-    ).select(
-        "path",
-        F.lit(ckpt_version).cast("long").alias("version"),
-        F.lit(1).alias("is_add"),
-        F.struct(
-            F.col("numRecords"),
-            F.struct(F.col("min_k").alias("o_orderkey")).alias("minValues"),
-            F.struct(F.col("max_k").alias("o_orderkey")).alias("maxValues"),
-        ).alias("st"),
-    )
-    tail = (
-        spark.read.text(log_dir)
-        .withColumn(
-            "fname", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
-        .withColumn(
-            "version",
-            F.regexp_extract("fname", r"^(\d+)\.json$", 1).cast("long"),
-        )
-        .filter(
-            (F.col("version") > ckpt_version) & (F.col("version") <= version)
-        )
-        .withColumn(
-            "j",
-            F.from_json(
-                "value",
-                "add struct<path:string,dataChange:boolean,stats:string>,"
-                "remove struct<path:string,dataChange:boolean>",
-            ),
-        )
-    )
-    adds = tail.filter(F.col("j.add.path").isNotNull()).select(
-        F.col("j.add.path").alias("path"),
-        "version",
-        F.lit(1).alias("is_add"),
-        F.from_json(
-            "j.add.stats",
-            "numRecords bigint, minValues struct<o_orderkey:bigint>,"
-            " maxValues struct<o_orderkey:bigint>",
-        ).alias("st"),
-    )
-    removes = tail.filter(F.col("j.remove.path").isNotNull()).select(
-        F.col("j.remove.path").alias("path"),
-        "version",
-        F.lit(0).alias("is_add"),
-        F.lit(None)
-        .cast(
-            "struct<numRecords:bigint,minValues:struct<o_orderkey:bigint>,"
-            "maxValues:struct<o_orderkey:bigint>>"
-        )
-        .alias("st"),
-    )
-    w = Window.partitionBy("path").orderBy(
-        F.col("version").desc(), F.col("is_add").desc()
-    )
-    return (
-        ckpt.unionByName(adds)
-        .unionByName(removes)
-        .withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("is_add") == 1))
-        .select(
-            "path",
-            F.col("st.numRecords").alias("numRecords"),
-            F.col("st.minValues.o_orderkey").alias("min_k"),
-            F.col("st.maxValues.o_orderkey").alias("max_k"),
-        )
     )
 
 
@@ -3170,10 +3005,11 @@ def scan_iceberg_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHOLE MANIFESTS by aggregate range — without ever opening them —
     then skips files within the surviving manifests, and only then
     touches data. Staged: {TLOG_SLICES} key-range data files, two
-    manifests of {TLOG_SLICES // 2} files each, one manifest list;
-    the 40%-of-max-key predicate prunes the upper manifest at LEVEL
-    ONE (its aggregate min exceeds the bound — asserted in tests,
-    along with file-level pruning via inputFiles()).
+    manifests of {TLOG_SLICES // 2} files each, one manifest list
+    committed as snapshot 0 (sink/iceberg.py); the 40%-of-max-key
+    predicate prunes the upper manifest at LEVEL ONE (its aggregate
+    min exceeds the bound — asserted in tests, along with file-level
+    pruning via inputFiles()).
 
     The hash oracle replays slicing + predicate relationally — a
     match proves the chain walk, both pruning levels, and the data
@@ -3184,93 +3020,23 @@ def scan_iceberg_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     own planner reads them); at 100 TB with ~10^6 files the level-1
     skip is the difference between reading ~10^3 manifest entries
     and ~10^6 file entries before any data I/O."""
-    import json as _json
-
-    from pyspark.sql.window import Window
-
-    from etl_ch_destination_spark.sink.avro import (
-        decode_container,
-        encode_container,
-    )
-
-    root = _scratch(sf_dir, "scan_iceberg_manifest")
-    data_dir = os.path.join(root, "data")
-    meta_dir = os.path.join(root, "metadata")
-    shutil.rmtree(data_dir, ignore_errors=True)
-    shutil.rmtree(meta_dir, ignore_errors=True)
-    os.makedirs(meta_dir)
-
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").cast("long"),
-        "o_orderstatus",
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("long")
-        .alias("price_cents"),
-    )
-    # staged once: the partitioned write AND the stats/rewrite/cdc
-    # consumers below re-plan this frame — unstaged, each consumer
-    # re-ran the global ntile sort
-    sliced = stage(
-        o.withColumn(
-            "slice", F.ntile(TLOG_SLICES).over(Window.orderBy("o_orderkey"))
-        ),
-        eager=False,
-        label="tlog-sliced",
-    )
-    sliced.write.mode("overwrite").partitionBy("slice").parquet(data_dir)
-    stats = {
-        r["slice"]: (r["n"], r["min_k"], r["max_k"])
-        for r in sliced.groupBy("slice")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("o_orderkey").alias("min_k"),
-            F.max("o_orderkey").alias("max_k"),
-        )
-        .collect()
-    }
+    data_dir, meta_dir = _fresh(sf_dir, "scan_iceberg_manifest", "data", "metadata")
+    stats = _key_stats(_stage_slices(spark, sf_dir, data_dir, TLOG_SLICES), "slice")
 
     # ---- write the chain: 2 manifests (avro) + 1 manifest list ----
-    entry_schema = {
-        "type": "record",
-        "name": "manifest_entry",
-        "fields": [
-            {"name": "path", "type": "string"},
-            {"name": "record_count", "type": "long"},
-            {"name": "min_k", "type": "long"},
-            {"name": "max_k", "type": "long"},
-        ],
-    }
-    list_schema = {
-        "type": "record",
-        "name": "manifest_file",
-        "fields": [
-            {"name": "manifest_path", "type": "string"},
-            {"name": "min_k", "type": "long"},
-            {"name": "max_k", "type": "long"},
-        ],
-    }
     half = TLOG_SLICES // 2
-    list_rows = []
-    for m_i, slices in enumerate((range(1, half + 1),
-                                  range(half + 1, TLOG_SLICES + 1))):
-        rows = [
-            (f"slice={s}", int(stats[s][0]), int(stats[s][1]), int(stats[s][2]))
-            for s in slices
-        ]
-        mpath = os.path.join(meta_dir, f"manifest-{m_i}.avro")
-        with open(mpath, "wb") as f:
-            f.write(encode_container(entry_schema, rows, codec="deflate"))
-        list_rows.append(
-            (f"manifest-{m_i}.avro",
-             min(r[2] for r in rows), max(r[3] for r in rows))
+    refs = [
+        write_manifest(meta_dir, f"manifest-{m_i}.avro", [
+            (f"slice={s}", *map(int, stats[s])) for s in slices
+        ])
+        for m_i, slices in enumerate(
+            (range(1, half + 1), range(half + 1, TLOG_SLICES + 1))
         )
-    with open(os.path.join(meta_dir, "manifest-list.avro"), "wb") as f:
-        f.write(encode_container(list_schema, list_rows, codec="deflate"))
-    with open(os.path.join(meta_dir, "snapshot.json"), "w") as f:
-        f.write(_json.dumps({"manifest_list": "manifest-list.avro"}))
+    ]
+    publish(meta_dir, 0, "manifest-list.avro", refs)
 
     # ---- reader: walk the chain with hierarchical pruning ----
-    kmax = o.agg((4 * F.max("o_orderkey")).alias("m")).collect()[0]["m"] // 10
+    kmax = 4 * max(hi for _, _, hi in stats.values()) // 10
     files = iceberg_plan_files(meta_dir, kmax)
     scan = spark.read.parquet(
         *[os.path.join(data_dir, p) for p, *_ in files]
@@ -3278,36 +3044,6 @@ def scan_iceberg_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scan.filter(F.col("o_orderkey") <= F.lit(kmax)).select(
         "o_orderkey", "o_orderstatus", "price_cents"
     )
-
-
-def iceberg_plan_files(meta_dir: str, kmax: int) -> list[tuple]:
-    """Walk snapshot → manifest list → manifests with HIERARCHICAL
-    pruning for the predicate ``o_orderkey <= kmax``: a manifest whose
-    aggregate min exceeds the bound is skipped WITHOUT being opened
-    (level 1); within opened manifests, files whose min exceeds the
-    bound are skipped (level 2). Returns the surviving
-    (path, record_count, min_k, max_k) entries. Driver-side bounded
-    metadata, like Iceberg's own planner; every byte read passes the
-    validating Avro decode."""
-    import json as _json
-
-    from etl_ch_destination_spark.sink.avro import decode_container
-
-    with open(os.path.join(meta_dir, "snapshot.json")) as f:
-        snap = _json.loads(f.read())
-    with open(os.path.join(meta_dir, snap["manifest_list"]), "rb") as f:
-        manifests = decode_container(f.read())
-    survivors: list[tuple] = []
-    for mpath, mmin, _mmax in manifests:
-        if mmin > kmax:
-            continue  # level-1 skip: never opened
-        with open(os.path.join(meta_dir, mpath), "rb") as f:
-            entries = decode_container(f.read())
-        for path, n, fmin, fmax in entries:
-            if fmin > kmax:
-                continue  # level-2 skip
-            survivors.append((path, n, fmin, fmax))
-    return survivors
 
 
 @query(
@@ -3342,13 +3078,14 @@ def scan_table_log_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata instead of O(file) rewrites — the only tractable delete
     on a 100 TB table with small mutation rates.
 
-    Staged: the scan_table_log layout, but v1 attaches a DV to each
-    of the {TLOG_REMOVED} slices marking their 'F'-status rows
-    (positions derived from the ACTUAL staged files via
-    ``_metadata.row_index``, so the sidecar is correct under any
-    writer row order). Read path: log replay → files WITH a DV scan
-    with ``_metadata.row_index`` and LEFT ANTI join the position
-    sidecar on (file, position); files without a DV scan clean. The
+    Staged: the scan_table_log v0 layout; v1 re-adds each of the
+    {TLOG_REMOVED} slices with a ``deletionVector`` naming the
+    position sidecar of their 'F'-status rows (positions derived from
+    the ACTUAL staged files via ``_metadata.row_index``, so the
+    sidecar is correct under any writer row order). Read path: log
+    replay (``live_adds``) → files whose live add carries a DV scan
+    with ``_metadata.row_index`` and LEFT ANTI join the sidecar it
+    names on (file, position); the other files scan clean. The
     anti-join is keyed on (path, row_index) — positions, never
     values: the reader proves the deletes without knowing WHY rows
     died, exactly the DV contract.
@@ -3363,38 +3100,47 @@ def scan_table_log_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     files never join. At real scale the sidecar is a compressed
     bitmap per file (Delta uses roaring bitmaps); the relational
     anti-join here is the same plan with the bitmap exploded."""
-    data_dir, log_dir = stage_table_log(spark, sf_dir, "scan_table_log_dv")
+    data_dir, log_dir, _ = stage_table_log(spark, sf_dir, "scan_table_log_dv")
 
     # ---- v1 (DV form): positions of 'F' rows in the target slices,
-    # captured from the actual staged files ----
+    # captured from the actual staged files, then one re-add per
+    # target naming the sidecar ----
     dv_dir = os.path.join(os.path.dirname(data_dir), "_dv")
     shutil.rmtree(dv_dir, ignore_errors=True)
     targets = [f"slice={s}" for s in TLOG_REMOVED]
     # Position key = the FULL file path (not the slice directory): a
     # slice written as several part files would otherwise alias
     # positions across files and the anti-join would kill innocents.
-    dv = (
+    (
         spark.read.parquet(*[os.path.join(data_dir, p) for p in targets])
+        .filter(F.col("o_orderstatus") == "F")
         .select(
             F.col("_metadata.file_path").alias("path"),
             F.col("_metadata.row_index").alias("pos"),
-            "o_orderstatus",
         )
-        .filter(F.col("o_orderstatus") == "F")
-        .select("path", "pos")
+        .write.mode("overwrite")
+        .parquet(dv_dir)
     )
-    dv.write.mode("overwrite").parquet(dv_dir)
+    v0 = live_adds(log_dir, 0)
+    commit(log_dir, 1, [
+        {"add": dict(v0[p], deletionVector={
+            "storageType": "p", "pathOrInlineDv": dv_dir})}
+        for p in targets
+    ])
 
-    # ---- reader: clean files + DV'd files with the position anti-join
-    live = [
-        f"slice={s}" for s in range(1, TLOG_SLICES + 1)
-    ]  # v1 re-adds the DV'd files; nothing is removed in the DV form
-    clean = [p for p in live if p not in targets]
+    # ---- reader: log replay -> clean files + DV'd files with the
+    # position anti-join ----
+    live = live_adds(log_dir, 1)
+    dvs = {
+        p: a["deletionVector"]["pathOrInlineDv"]
+        for p, a in live.items()
+        if "deletionVector" in a
+    }
     clean_scan = spark.read.parquet(
-        *[os.path.join(data_dir, p) for p in clean]
+        *[os.path.join(data_dir, p) for p in live if p not in dvs]
     ).select("o_orderkey", "o_orderstatus", "price_cents")
     dv_scan = (
-        spark.read.parquet(*[os.path.join(data_dir, p) for p in targets])
+        spark.read.parquet(*[os.path.join(data_dir, p) for p in dvs])
         .select(
             "o_orderkey",
             "o_orderstatus",
@@ -3403,7 +3149,7 @@ def scan_table_log_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("_metadata.row_index").alias("pos"),
         )
         .join(
-            spark.read.parquet(dv_dir),
+            spark.read.parquet(*sorted(set(dvs.values()))),
             ["path", "pos"],
             "left_anti",
         )
@@ -3563,32 +3309,10 @@ def scan_table_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     for v1, one removed file for v2) — I/O proportional to the CHANGE
     volume, never the table, which is the whole point of CDF at
     100 TB (re-syncing a downstream copy costs O(delta))."""
-    import json as _json
-
-    root = _scratch(sf_dir, "scan_table_log_cdf")
-    data_dir = os.path.join(root, "data")
-    log_dir = os.path.join(root, "_table_log")
-    shutil.rmtree(data_dir, ignore_errors=True)
-    shutil.rmtree(log_dir, ignore_errors=True)
-    os.makedirs(log_dir)
-
-    from pyspark.sql.window import Window
-
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").cast("long"),
-        "o_orderstatus",
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("long")
-        .alias("price_cents"),
+    data_dir, log_dir, cdc_dir = _fresh(
+        sf_dir, "scan_table_log_cdf", "data", "_table_log", "_change_data"
     )
-    sliced = stage(
-        o.withColumn(
-            "slice", F.ntile(CDF_SLICES).over(Window.orderBy("o_orderkey"))
-        ),
-        eager=False,
-        label="cdf-sliced",
-    )
-    sliced.write.mode("overwrite").partitionBy("slice").parquet(data_dir)
+    sliced = _stage_slices(spark, sf_dir, data_dir, CDF_SLICES)
 
     # ---- v1: UPDATE slice CDF_UPD_SLICE ('O' rows +10% price) with
     # explicit cdc files ----
@@ -3604,60 +3328,22 @@ def scan_table_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cdc = pre.withColumn("change_type", F.lit("update_preimage")).unionByName(
         post.withColumn("change_type", F.lit("update_postimage"))
     )
-    cdc.write.mode("overwrite").parquet(
-        os.path.join(root, "_change_data", "cdc-1")
-    )
+    cdc.write.mode("overwrite").parquet(os.path.join(cdc_dir, "cdc-1"))
 
-    def _w(version: int, actions: list) -> None:
-        with open(os.path.join(log_dir, "%020d.json" % version), "w") as f:
-            f.write("\n".join(_json.dumps(a) for a in actions) + "\n")
-
-    _w(0, [{"metaData": {"id": "cdf-fixture"}},
-           *[{"add": {"path": f"slice={s}", "dataChange": True}}
-             for s in range(1, CDF_SLICES + 1)]])
-    _w(1, [{"remove": {"path": f"slice={CDF_UPD_SLICE}", "dataChange": True}},
-           {"add": {"path": "rewrite-upd", "dataChange": True}},
-           {"cdc": {"path": "../_change_data/cdc-1", "dataChange": False}}])
-    _w(2, [{"remove": {"path": f"slice={CDF_DEL_SLICE}", "dataChange": True}}])
+    commit(log_dir, 0, [{"metaData": {"id": "cdf-fixture"}},
+                        *[{"add": {"path": f"slice={s}", "dataChange": True}}
+                          for s in range(1, CDF_SLICES + 1)]])
+    commit(log_dir, 1, [
+        {"remove": {"path": f"slice={CDF_UPD_SLICE}", "dataChange": True}},
+        {"add": {"path": "rewrite-upd", "dataChange": True}},
+        {"cdc": {"path": "../_change_data/cdc-1", "dataChange": False}},
+    ])
+    commit(log_dir, 2, [
+        {"remove": {"path": f"slice={CDF_DEL_SLICE}", "dataChange": True}}
+    ])
 
     # ---- reader: changes for versions (0, 2] ----
-    actions = (
-        spark.read.text(log_dir)
-        .withColumn(
-            "version",
-            F.regexp_extract(
-                F.element_at(F.split(F.input_file_name(), "/"), -1),
-                r"^(\d+)\.json$",
-                1,
-            ).cast("long"),
-        )
-        .withColumn("j", F.from_json(
-            "value",
-            "add struct<path:string,dataChange:boolean>,"
-            "remove struct<path:string,dataChange:boolean>,"
-            "cdc struct<path:string,dataChange:boolean>",
-        ))
-        .filter((F.col("version") >= 1) & (F.col("version") <= 2))
-    )
-    # bounded manifest collect: |actions in the version range| rows
-    manifest = actions.select(
-        "version",
-        F.col("j.add.path").alias("add_path"),
-        F.col("j.add.dataChange").alias("add_dc"),
-        F.col("j.remove.path").alias("rm_path"),
-        F.col("j.remove.dataChange").alias("rm_dc"),
-        F.col("j.cdc.path").alias("cdc_path"),
-    ).collect()
-    by_version: dict[int, dict[str, list]] = {}
-    for r in manifest:
-        b = by_version.setdefault(r["version"], {"cdc": [], "add": [], "rm": []})
-        if r["cdc_path"] is not None:
-            b["cdc"].append(r["cdc_path"])
-        if r["add_path"] is not None and r["add_dc"]:
-            b["add"].append(r["add_path"])
-        if r["rm_path"] is not None and r["rm_dc"]:
-            b["rm"].append(r["rm_path"])
-
+    by_version = change_files(spark, log_dir, 0, 2)
     cols = ["o_orderkey", "o_orderstatus", "price_cents"]
     parts = []
     for v in sorted(by_version):
@@ -3726,7 +3412,7 @@ def sink_table_log_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Destination-side TRANSACTION-LOG WRITER — the other half of the
     scan_table_log family: this repo is an ETL *destination*, and a
     lakehouse destination publishes data by writing immutable parquet
-    files and then ATOMICALLY committing a ``%020d.json`` action file
+    files and then ATOMICALLY committing a versioned JSON action file
     (sink/table_log.commit — put-if-absent via os.link, the primitive
     the Delta protocol demands of its log store; a version collision
     raises CommitConflict instead of rewriting history, gated in
@@ -3754,17 +3440,7 @@ def sink_table_log_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sink_dynamic_partition_overwrite is that write shape); the
     protocol cost is unchanged: one linked JSON file per transaction
     at any data scale."""
-    from etl_ch_destination_spark.sink.table_log import (
-        add_action,
-        commit,
-        latest_version,
-    )
-
-    root = _scratch(sf_dir, "sink_table_log_write")
-    data_dir = os.path.join(root, "data")
-    log_dir = os.path.join(root, "_table_log")
-    shutil.rmtree(data_dir, ignore_errors=True)
-    shutil.rmtree(log_dir, ignore_errors=True)
+    data_dir, log_dir = _fresh(sf_dir, "sink_table_log_write", "data", "_table_log")
 
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("long"),
@@ -3781,16 +3457,7 @@ def sink_table_log_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cache()
 
     # per-partition stats in one pass — the write job's commit manifest
-    stats = {
-        r["ym"]: (r["n"], r["lo"], r["hi"])
-        for r in base.groupBy("ym")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("o_orderkey").alias("lo"),
-            F.max("o_orderkey").alias("hi"),
-        )
-        .collect()
-    }
+    stats = _key_stats(base, "ym")
 
     def _write(df: DataFrame, rel: str) -> None:
         df.write.mode("overwrite").parquet(os.path.join(data_dir, rel))
@@ -3820,17 +3487,8 @@ def sink_table_log_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ---- v2: late-month append ----
     july = o.filter(F.col("ym") == TLW_APPEND)
     _write(july, f"base-{TLW_APPEND}")
-    js = july.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("o_orderkey").alias("lo"),
-        F.max("o_orderkey").alias("hi"),
-    ).collect()[0]
-    commit(
-        log_dir,
-        2,
-        [add_action(f"base-{TLW_APPEND}", js["n"], js["lo"], js["hi"],
-                    {"ym": TLW_APPEND})],
-    )
+    commit(log_dir, 2, [add_action(
+        f"base-{TLW_APPEND}", *_key_stats(july)[None], {"ym": TLW_APPEND})])
     base.unpersist()
 
     # ---- read back through the standard log replay ----
@@ -3883,32 +3541,8 @@ def scan_iceberg_pos_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     delete backlog accumulates — at which point Iceberg's own answer
     is compaction (scan_table_log's rewrite shape), not a cleverer
     join."""
-    from pyspark.sql.window import Window
-
-    root = _scratch(sf_dir, "scan_iceberg_pos_delete")
-    data_dir = os.path.join(root, "data")
-    del_dir = os.path.join(root, "deletes")
-    shutil.rmtree(data_dir, ignore_errors=True)
-    shutil.rmtree(del_dir, ignore_errors=True)
-
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").cast("long"),
-        "o_orderstatus",
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("long")
-        .alias("price_cents"),
-    )
-    # staged once: the partitioned write AND the stats/rewrite/cdc
-    # consumers below re-plan this frame — unstaged, each consumer
-    # re-ran the global ntile sort
-    sliced = stage(
-        o.withColumn(
-            "slice", F.ntile(TLOG_SLICES).over(Window.orderBy("o_orderkey"))
-        ),
-        eager=False,
-        label="tlog-sliced",
-    )
-    sliced.write.mode("overwrite").partitionBy("slice").parquet(data_dir)
+    data_dir, del_dir = _fresh(sf_dir, "scan_iceberg_pos_delete", "data", "deletes")
+    _stage_slices(spark, sf_dir, data_dir, TLOG_SLICES)
 
     # ---- the DELETE transaction: capture (file_path, pos) of every
     # 'F' row from the files' native row-position virtual columns ----
@@ -4137,98 +3771,24 @@ def sink_iceberg_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     list, never rewrites history; conflicts surface as
     CommitConflict at the version link (optimistic concurrency,
     retry at N+1)."""
-    import json as _json
+    data_dir, meta_dir = _fresh(sf_dir, "sink_iceberg_commit", "data", "metadata")
+    sliced = _stage_slices(spark, sf_dir, data_dir, ICW_SLICES)
+    stats = _key_stats(sliced, "slice")
 
-    from pyspark.sql.window import Window
-
-    from etl_ch_destination_spark.sink.avro import encode_container
-    from etl_ch_destination_spark.sink.table_log import commit, latest_version
-
-    root = _scratch(sf_dir, "sink_iceberg_commit")
-    data_dir = os.path.join(root, "data")
-    meta_dir = os.path.join(root, "metadata")
-    shutil.rmtree(data_dir, ignore_errors=True)
-    shutil.rmtree(meta_dir, ignore_errors=True)
-    os.makedirs(meta_dir)
-
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").cast("long"),
-        "o_orderstatus",
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("long")
-        .alias("price_cents"),
-    )
-    sliced = stage(
-        o.withColumn(
-            "slice", F.ntile(ICW_SLICES).over(Window.orderBy("o_orderkey"))
-        ),
-        eager=False,
-        label="icw-sliced",
-    )
-    sliced.write.mode("overwrite").partitionBy("slice").parquet(data_dir)
-    stats = {
-        r["slice"]: (r["n"], r["min_k"], r["max_k"])
-        for r in sliced.groupBy("slice")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("o_orderkey").alias("min_k"),
-            F.max("o_orderkey").alias("max_k"),
-        )
-        .collect()
-    }
-
-    entry_schema = {
-        "type": "record",
-        "name": "manifest_entry",
-        "fields": [
-            {"name": "path", "type": "string"},
-            {"name": "record_count", "type": "long"},
-            {"name": "min_k", "type": "long"},
-            {"name": "max_k", "type": "long"},
-        ],
-    }
-    list_schema = {
-        "type": "record",
-        "name": "manifest_file",
-        "fields": [
-            {"name": "manifest_path", "type": "string"},
-            {"name": "min_k", "type": "long"},
-            {"name": "max_k", "type": "long"},
-        ],
-    }
-
-    def write_manifest(name: str, entries: list[tuple]) -> tuple:
-        with open(os.path.join(meta_dir, name), "wb") as f:
-            f.write(encode_container(entry_schema, entries, codec="deflate"))
-        return (name, min(e[2] for e in entries), max(e[3] for e in entries))
-
-    def publish(version: int, manifest_refs: list[tuple]) -> None:
-        list_name = f"manifest-list-v{version}.avro"
-        with open(os.path.join(meta_dir, list_name), "wb") as f:
-            f.write(encode_container(list_schema, manifest_refs,
-                                     codec="deflate"))
-        commit(meta_dir, version, [{"metadata": {
-            "snapshot_id": version, "manifest_list": list_name}}])
-
-    def entries_for(slices) -> list[tuple]:
-        return [
-            (f"slice={s}", int(stats[s][0]), int(stats[s][1]),
-             int(stats[s][2]))
-            for s in slices
-        ]
+    def write(name: str, slices) -> tuple:
+        return write_manifest(meta_dir, name, [
+            (f"slice={s}", *map(int, stats[s])) for s in slices
+        ])
 
     half = ICW_SLICES // 2
     # ---- s1: initial load -> manifests A + B ----
-    ref_a = write_manifest("manifest-a.avro", entries_for(range(1, 3)))
-    ref_b = write_manifest("manifest-b.avro",
-                           entries_for(range(3, half + 1)))
-    publish(0, [ref_a, ref_b])
+    ref_a = write("manifest-a.avro", range(1, 3))
+    ref_b = write("manifest-b.avro", range(3, half + 1))
+    publish(meta_dir, 0, "manifest-list-v0.avro", [ref_a, ref_b])
 
     # ---- s2: append upper half -> NEW manifest C, A/B reused ----
-    ref_c = write_manifest(
-        "manifest-c.avro", entries_for(range(half + 1, ICW_SLICES + 1))
-    )
-    publish(1, [ref_a, ref_b, ref_c])
+    ref_c = write("manifest-c.avro", range(half + 1, ICW_SLICES + 1))
+    publish(meta_dir, 1, "manifest-list-v1.avro", [ref_a, ref_b, ref_c])
 
     # ---- s3: overwrite manifest B's slices (delete 'F' rows) ----
     rewrite = sliced.filter(
@@ -4238,48 +3798,16 @@ def sink_iceberg_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite.write.mode("overwrite").parquet(
         os.path.join(data_dir, "rewrite-b")
     )
-    rw = rewrite.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("o_orderkey").alias("lo"),
-        F.max("o_orderkey").alias("hi"),
-    ).collect()[0]
-    ref_b2 = write_manifest(
-        "manifest-b2.avro",
-        [("rewrite-b", int(rw["n"]), int(rw["lo"]), int(rw["hi"]))],
-    )
-    publish(2, [ref_a, ref_b2, ref_c])
+    ref_b2 = write_manifest(meta_dir, "manifest-b2.avro", [
+        ("rewrite-b", *map(int, _key_stats(rewrite)[None]))
+    ])
+    publish(meta_dir, 2, "manifest-list-v2.avro", [ref_a, ref_b2, ref_c])
 
     # ---- reader: version hint -> metadata -> chain walk ----
     files = iceberg_resolve_files(meta_dir, latest_version(meta_dir))
     return spark.read.parquet(
         *[os.path.join(data_dir, p) for p, *_ in files]
     ).select("o_orderkey", "o_orderstatus", "price_cents")
-
-
-def iceberg_resolve_files(meta_dir: str, version: int) -> list[tuple]:
-    """Resolve a metadata version to its live data files: committed
-    metadata (put-if-absent versions) -> manifest list -> manifests,
-    all through the validating Avro decode. Bounded driver-side
-    metadata, no predicate pruning (iceberg_plan_files is the pruned
-    variant)."""
-    import json as _json
-
-    from etl_ch_destination_spark.sink.avro import decode_container
-    from etl_ch_destination_spark.sink.table_log import read_actions
-
-    meta = None
-    for v, action in read_actions(meta_dir, upto=version):
-        if v == version and "metadata" in action:
-            meta = action["metadata"]
-    if meta is None:
-        raise ValueError(f"no committed metadata for version {version}")
-    with open(os.path.join(meta_dir, meta["manifest_list"]), "rb") as f:
-        manifests = decode_container(f.read())
-    out: list[tuple] = []
-    for mpath, _mmin, _mmax in manifests:
-        with open(os.path.join(meta_dir, mpath), "rb") as f:
-            out.extend(decode_container(f.read()))
-    return out
 
 
 @query(
@@ -4326,9 +3854,8 @@ def scan_table_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     one filesystem call per garbage file. Data I/O afterwards is the
     ordinary pruned snapshot scan — vacuum cost is proportional to
     GARBAGE, not table size."""
-    from etl_ch_destination_spark.sink.table_log import read_actions
-
-    data_dir, log_dir = stage_table_log(spark, sf_dir, "scan_table_log_vacuum")
+    data_dir, log_dir, sliced = stage_table_log(spark, sf_dir, "scan_table_log_vacuum")
+    commit_table_log_rewrite(sliced, data_dir, log_dir)
 
     # crash debris: data written by a failed job, never committed
     orphan = os.path.join(data_dir, "orphan-tmp")
@@ -4338,19 +3865,10 @@ def scan_table_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- vacuum: retain versions >= 1 ----
     retain_from = 1
-    actions = read_actions(log_dir)
-    versions = sorted({v for v, _ in actions})
+    latest = latest_version(log_dir)
     referenced: set[str] = set()
-    for rv in [v for v in versions if v >= retain_from]:
-        live: dict[str, bool] = {}
-        for v, a in actions:
-            if v > rv:
-                continue
-            if "remove" in a:
-                live[a["remove"]["path"]] = False
-            if "add" in a:
-                live[a["add"]["path"]] = True
-        referenced |= {p for p, alive in live.items() if alive}
+    for rv in range(retain_from, latest + 1):
+        referenced |= set(live_adds(log_dir, rv))
     on_disk = {
         d for d in os.listdir(data_dir)
         if os.path.isdir(os.path.join(data_dir, d))
@@ -4360,7 +3878,7 @@ def scan_table_log_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(os.path.join(data_dir, d))
 
     # ---- post-vacuum read of the latest snapshot ----
-    snap = table_log_snapshot(spark, log_dir, max(versions))
+    snap = table_log_snapshot(spark, log_dir, latest)
     paths = [r["path"] for r in snap.collect()]  # bounded manifest
     return spark.read.parquet(
         *[os.path.join(data_dir, p) for p in paths]
@@ -4403,14 +3921,7 @@ def scan_table_log_column_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     size; the read plan is an ordinary parquet scan with projection
     pushdown on the physical columns — ReadSchema lists only the
     mapped ones, so a dropped column is not even read."""
-    import json as _json
-
-    root = _scratch(sf_dir, "scan_table_log_column_map")
-    data_dir = os.path.join(root, "data")
-    log_dir = os.path.join(root, "_table_log")
-    shutil.rmtree(data_dir, ignore_errors=True)
-    shutil.rmtree(log_dir, ignore_errors=True)
-    os.makedirs(log_dir)
+    data_dir, log_dir = _fresh(sf_dir, "scan_table_log_column_map", "data", "_table_log")
 
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").cast("long").alias("p_1"),
@@ -4423,9 +3934,8 @@ def scan_table_log_column_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     o.write.mode("overwrite").parquet(data_dir)
 
     def _w(version: int, mapping: dict) -> None:
-        with open(os.path.join(log_dir, "%020d.json" % version), "w") as f:
-            f.write(_json.dumps({"metaData": {
-                "columnMapping": "name", "schema": mapping}}) + "\n")
+        commit(log_dir, version, [{"metaData": {
+            "columnMapping": "name", "schema": mapping}}])
 
     _w(0, {"o_orderkey": "p_1", "status": "p_2",
            "price_cents": "p_3", "audit_flag": "p_4"})
@@ -4438,32 +3948,6 @@ def scan_table_log_column_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scan.select(
         *[F.col(phys).alias(logical) for logical, phys in mapping.items()]
     )
-
-
-def table_log_column_mapping(log_dir: str, version: int) -> dict[str, str]:
-    """Resolve the logical→physical column map at ``version``: the
-    LATEST metaData action wins (metadata replay is the same bounded
-    manifest walk as the file replay)."""
-    import json as _json
-
-    mapping: dict[str, str] | None = None
-    for name in sorted(os.listdir(log_dir)):
-        if not name.endswith(".json"):
-            continue
-        v = int(name[:-5])
-        if v > version:
-            continue
-        with open(os.path.join(log_dir, name)) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                a = _json.loads(line)
-                if "metaData" in a and "schema" in a["metaData"]:
-                    mapping = a["metaData"]["schema"]
-    if mapping is None:
-        raise ValueError(f"no metaData with a schema at version {version}")
-    return mapping
 
 
 @query(

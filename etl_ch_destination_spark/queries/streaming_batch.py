@@ -781,7 +781,7 @@ def stream_table_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         commit,
         last_txn_version,
         latest_version,
-        read_actions,
+        live_adds,
     )
     from etl_ch_destination_spark.streaming.replay import (
         read_staged_stream,
@@ -836,11 +836,7 @@ def stream_table_log_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the duplicate totals if it did not)
     load_batch(spark.read.parquet(os.path.join(data_dir, "epoch-0")), 0)
 
-    live = [
-        a["add"]["path"]
-        for _, a in read_actions(log_dir)
-        if "add" in a
-    ]
+    live = live_adds(log_dir)
     back = spark.read.parquet(*[os.path.join(data_dir, p) for p in live])
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

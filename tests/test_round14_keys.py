@@ -277,8 +277,8 @@ def test_table_log_prunes_files_and_pins_versions(spark, sf_dir):
         TLOG_SLICES,
         _scratch,
         scan_table_log,
-        table_log_snapshot,
     )
+    from etl_ch_destination_spark.sink.table_log import table_log_snapshot
 
     df = scan_table_log(spark, sf_dir)
     root = _scratch(sf_dir, "scan_table_log")
@@ -332,9 +332,7 @@ def test_table_log_add_supersedes_remove_within_commit(spark, tmp_path):
     commit is live (add wins); removed in a LATER commit is dead."""
     import json
 
-    from etl_ch_destination_spark.queries.sources_sinks import (
-        table_log_snapshot,
-    )
+    from etl_ch_destination_spark.sink.table_log import table_log_snapshot
 
     log_dir = str(tmp_path / "log")
     import os
@@ -514,9 +512,9 @@ def test_table_log_travel_diff_is_the_deleted_rows(spark, sf_dir):
 
     from etl_ch_destination_spark.queries.sources_sinks import (
         scan_table_log_travel,
-        table_log_snapshot,
         _scratch,
     )
+    from etl_ch_destination_spark.sink.table_log import table_log_snapshot
 
     got = scan_table_log_travel(spark, sf_dir)
     root = _scratch(sf_dir, "scan_table_log_travel")
@@ -639,6 +637,8 @@ def test_table_log_checkpoint_equals_full_replay(spark, sf_dir):
         TLOG_CKPT_REMOVED_V2,
         _scratch,
         scan_table_log_checkpoint,
+    )
+    from etl_ch_destination_spark.sink.table_log import (
         table_log_snapshot,
         table_log_snapshot_from_checkpoint,
     )
@@ -845,9 +845,9 @@ def test_iceberg_manifest_prunes_hierarchically(spark, sf_dir):
 
     from etl_ch_destination_spark.queries.sources_sinks import (
         _scratch,
-        iceberg_plan_files,
         scan_iceberg_manifest,
     )
+    from etl_ch_destination_spark.sink.iceberg import iceberg_plan_files
 
     df = scan_iceberg_manifest(spark, sf_dir)
     root = _scratch(sf_dir, "scan_iceberg_manifest")
@@ -952,6 +952,18 @@ def test_table_log_dv_drops_exactly_the_dv_positions(spark, sf_dir):
     assert got == want
     # F rows survive overall (only the targeted slices' F rows died)
     assert got.get("F", (0, 0))[0] > 0
+    # the read path is the log: v1 re-adds exactly the targets, each
+    # naming the sidecar, and no rewrite file is staged
+    from etl_ch_destination_spark.sink.table_log import read_actions
+
+    v1 = [a["add"] for v, a in read_actions(os.path.join(root, "_table_log"))
+          if v == 1]
+    assert sorted(a["path"] for a in v1) == [f"slice={s}" for s in TLOG_REMOVED]
+    assert all(
+        a["deletionVector"]["pathOrInlineDv"] == os.path.join(root, "_dv")
+        for a in v1
+    )
+    assert not os.path.exists(os.path.join(data_dir, "rewrite=1"))
 
 
 def test_time_to_convert_matches_brute_force(spark, sf_dir):

@@ -326,9 +326,9 @@ def test_table_log_write_versions_replay(spark, sf_dir):
         TLW_MONTHS,
         TLW_RESTATE,
         sink_table_log_write,
-        table_log_snapshot,
         _scratch,
     )
+    from etl_ch_destination_spark.sink.table_log import table_log_snapshot
 
     final = sink_table_log_write(spark, sf_dir)
     assert final.filter(F.col("ym") == TLW_APPEND).count() > 0
@@ -835,9 +835,9 @@ def test_iceberg_commit_reuses_manifests_and_time_travels(spark, sf_dir):
 
     from etl_ch_destination_spark.queries.sources_sinks import (
         _scratch,
-        iceberg_resolve_files,
         sink_iceberg_commit,
     )
+    from etl_ch_destination_spark.sink.iceberg import iceberg_resolve_files
 
     out = sink_iceberg_commit(spark, sf_dir)
     root = _scratch(sf_dir, "sink_iceberg_commit")
@@ -899,8 +899,8 @@ def test_vacuum_deletes_garbage_keeps_live(spark, sf_dir):
         TLOG_REMOVED,
         _scratch,
         scan_table_log_vacuum,
-        table_log_snapshot,
     )
+    from etl_ch_destination_spark.sink.table_log import table_log_snapshot
 
     out = scan_table_log_vacuum(spark, sf_dir)
     root = _scratch(sf_dir, "scan_table_log_vacuum")
@@ -1058,8 +1058,8 @@ def test_column_map_rename_is_metadata_only(spark, sf_dir):
     from etl_ch_destination_spark.queries.sources_sinks import (
         _scratch,
         scan_table_log_column_map,
-        table_log_column_mapping,
     )
+    from etl_ch_destination_spark.sink.table_log import table_log_column_mapping
 
     def dir_digest(d):
         h = hashlib.sha256()

@@ -176,7 +176,7 @@ def test_run_in_process_small_sweep(spark, sf_dir):
     keys = {
         "rows", "q1", "linkpred", "kafka_encode", "kafka_decode",
         "tdigest_fixed8", "tdigest", "tdigest_centroids", "tdigest_centroid_bound",
-        "tlog_commits", "tlog_replay", "tlog_ckpt_read",
+        "tlog_commits", "tlog_stage", "tlog_replay", "tlog_ckpt_read",
     }
     assert set(results) == {"1", "2"}
     assert set(results["1"]) == keys and set(results["2"]) == keys

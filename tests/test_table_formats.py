@@ -46,8 +46,8 @@ PINS = {
             "62d32dc10eb51919df87092b852ca7a73e7ef7a86455bcad21135f113801e85f",
         "manifest-list.avro":
             "99552e3b146b72b41dba2a0e7ab771ac4f7f92d8d3c8c3d0f5e7ce281decc120",
-        "snapshot.json":
-            "338eec9398de8b952abf4ed84e8bc0835c03453ee060c5a5dd4d675710659e6d",
+        "00000000000000000000.json":
+            "9ed48a70f8abf3e6ec5e7fc3b30af3b4737493ccccb102b6d043c1561008bad3",
     },
     "scan_table_log": {
         "00000000000000000000.json":
@@ -136,3 +136,73 @@ def test_metadata_bytes_are_pinned(spark, sf_dir, key):
     fn(spark, sf_dir)  # staging is eager; the returned frame is not needed
     got = metadata_digests(os.path.join(_scratch(sf_dir, key), META_DIRS[key]))
     assert got == PINS[key]
+
+
+@pytest.fixture(scope="module")
+def ckpt_log(spark, sf_dir):
+    """The scan_table_log_checkpoint log: v0, v1, a checkpoint at v1,
+    then v2."""
+    from etl_ch_destination_spark.queries.sources_sinks import (
+        _scratch,
+        scan_table_log_checkpoint,
+    )
+
+    scan_table_log_checkpoint(spark, sf_dir)
+    return os.path.join(_scratch(sf_dir, "scan_table_log_checkpoint"), "_table_log")
+
+
+def _commits_read(df) -> list[str]:
+    return sorted(
+        os.path.basename(f) for f in df.inputFiles() if f.endswith(".json")
+    )
+
+
+def test_checkpoint_read_opens_only_the_tail(spark, ckpt_log):
+    from etl_ch_destination_spark.sink.table_log import (
+        table_log_snapshot,
+        table_log_snapshot_from_checkpoint,
+    )
+
+    via_ckpt = table_log_snapshot_from_checkpoint(spark, ckpt_log, 2)
+    assert _commits_read(via_ckpt) == ["%020d.json" % 2]
+    assert any(".checkpoint.parquet" in f for f in via_ckpt.inputFiles())
+    # the full replay opens exactly the commits up to its version
+    full = table_log_snapshot(spark, ckpt_log, 1)
+    assert _commits_read(full) == ["%020d.json" % v for v in (0, 1)]
+
+
+def test_checkpoint_read_at_the_checkpoint_version(spark, ckpt_log):
+    from etl_ch_destination_spark.sink.table_log import (
+        table_log_snapshot,
+        table_log_snapshot_from_checkpoint,
+    )
+
+    at_ckpt = table_log_snapshot_from_checkpoint(spark, ckpt_log, 1)
+    assert _commits_read(at_ckpt) == []
+    live = sorted(tuple(r) for r in at_ckpt.collect())
+    assert live and live == sorted(
+        tuple(r) for r in table_log_snapshot(spark, ckpt_log, 1).collect()
+    )
+
+
+def _glob_names(glob: str) -> set[str]:
+    """The 20-digit commit names in 0..1199 that ``glob`` matches."""
+    import fnmatch
+
+    alternatives = glob[1 : glob.index("}")].split(",")
+    return {
+        "%020d.json" % v
+        for v in range(1200)
+        if any(fnmatch.fnmatch("%020d" % v, a) for a in alternatives)
+    }
+
+
+@pytest.mark.parametrize(
+    "lo,hi", [(0, 0), (2, 2), (0, 9), (0, 999), (3, 1134), (10, 199), (97, 1103)]
+)
+def test_version_glob_matches_exactly_the_range(lo, hi):
+    from etl_ch_destination_spark.sink.table_log import version_glob
+
+    assert _glob_names(version_glob(lo, hi)) == {
+        "%020d.json" % v for v in range(lo, hi + 1)
+    }

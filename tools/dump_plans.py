@@ -621,9 +621,10 @@ ANNOTATIONS: dict[str, str] = {
     "scan_table_log_checkpoint": (
         "Checkpoint read path: the snapshot resolves from the "
         "checkpoint PARQUET (columnar manifest rows) + a text scan of "
-        "only the tail commits — the v0/v1 JSON never enters the "
-        "plan; data I/O is a plain multi-path parquet scan of the "
-        "live files with partial aggregation before the exchange."
+        "only the tail commits, listed on the driver and read by "
+        "explicit path — the v0/v1 JSON is never opened; data I/O is "
+        "a plain multi-path parquet scan of the live files with "
+        "partial aggregation before the exchange."
     ),
     "agg_sequence_next_node": (
         "One exchange on user_id shared by BOTH row_number specs "
@@ -694,7 +695,8 @@ ANNOTATIONS: dict[str, str] = {
     ),
     "scan_table_log_cdf": (
         "Change data feed: action replay touches only the manifest "
-        "(a text scan of the commit files); change rows come from "
+        "(a text scan of just the commits in the version range, by "
+        "explicit path); change rows come from "
         "exactly the files the log names — cdc files for the UPDATE "
         "commit, the one removed file for the DELETE — so the union "
         "of scans is proportional to CHANGE volume, never table "

@@ -992,36 +992,32 @@ def tlog(f: Factor) -> dict:
     # table_log_snapshot) and (b) the checkpoint read path (parquet
     # state + empty tail). Replay must stay ~linear in commits; the
     # checkpoint read must stay FLAT — the reason the checkpoint path
-    # exists.
-    from etl_ch_destination_spark.queries.sources_sinks import table_log_snapshot
+    # exists. Commits are fsynced put-if-absent writes, so the log
+    # starts empty and the staging wall is reported (not gated).
+    from etl_ch_destination_spark.sink.table_log import (
+        add_action,
+        commit,
+        table_log_snapshot,
+    )
 
     spark = f.spark
     n_commits = 200 * f.n
     root = os.path.join(STAGING, f"tlog_{f.n}x")
     tlog_dir = os.path.join(root, "_log")
-    os.makedirs(tlog_dir, exist_ok=True)
+    shutil.rmtree(root, ignore_errors=True)
 
-    def add(path: str, v: int) -> str:
-        stats = {
-            "numRecords": 1000,
-            "minValues": {"o_orderkey": v * 10},
-            "maxValues": {"o_orderkey": v * 10 + 9},
-        }
-        return json.dumps({"add": {"path": path, "dataChange": True, "stats": json.dumps(stats)}})
-
+    t0 = time.monotonic()
     for v in range(n_commits):
-        actions = []
-        if v > 0:
-            # churn: retire one of the previous commit's files
-            actions.append(
-                json.dumps({"remove": {"path": f"f-{2 * (v - 1)}", "dataChange": True}})
-            )
-        actions += [add(f"f-{2 * v}", v), add(f"f-{2 * v + 1}", v)]
-        with open(os.path.join(tlog_dir, "%020d.json" % v), "w") as fh:
-            fh.write("\n".join(actions) + "\n")
-
+        # churn: retire one of the previous commit's files
+        retire = [{"remove": {"path": f"f-{2 * (v - 1)}", "dataChange": True}}] if v else []
+        commit(tlog_dir, v, [
+            *retire,
+            add_action(f"f-{2 * v}", 1000, v * 10, v * 10 + 9),
+            add_action(f"f-{2 * v + 1}", 1000, v * 10, v * 10 + 9),
+        ])
     row = {
         "tlog_commits": n_commits,
+        "tlog_stage": round(time.monotonic() - t0, 3),
         "tlog_replay": time_action(
             lambda: drain(table_log_snapshot(spark, tlog_dir, n_commits - 1)), f.runs
         ),
