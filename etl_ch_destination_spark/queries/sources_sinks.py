@@ -3330,9 +3330,11 @@ def scan_table_log_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cdc.write.mode("overwrite").parquet(os.path.join(cdc_dir, "cdc-1"))
 
-    commit(log_dir, 0, [{"metaData": {"id": "cdf-fixture"}},
-                        *[{"add": {"path": f"slice={s}", "dataChange": True}}
-                          for s in range(1, CDF_SLICES + 1)]])
+    commit(log_dir, 0, [
+        {"metaData": {"id": "cdf-fixture"}},
+        *[{"add": {"path": f"slice={s}", "dataChange": True}}
+          for s in range(1, CDF_SLICES + 1)],
+    ])
     commit(log_dir, 1, [
         {"remove": {"path": f"slice={CDF_UPD_SLICE}", "dataChange": True}},
         {"add": {"path": "rewrite-upd", "dataChange": True}},
