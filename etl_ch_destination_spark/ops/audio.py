@@ -90,17 +90,3 @@ def wav_decode(payload: bytes) -> tuple[int, list[int]]:
         raise ValueError("unsupported WAV layout")
     n = data_len // 2
     return rate, list(struct.unpack(f"<{n}h", payload[44 : 44 + data_len]))
-
-
-# mapInPandas closures capture these functions; local-mode Python
-# workers resolve module references via the DRIVER'S cwd (the
-# worker-cwd import trap, NOTES_r04), so ship this module BY VALUE
-# inside pickled closures — it is stdlib-only and self-contained.
-try:  # pragma: no cover - exercised by driver_sim from /tmp
-    import sys as _sys
-
-    from pyspark import cloudpickle as _cp
-
-    _cp.register_pickle_by_value(_sys.modules[__name__])
-except Exception:  # noqa: BLE001
-    pass

@@ -42,20 +42,6 @@ from etl_ch_destination_spark.ops.imaging import (
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
-# The mapInPandas closures below call ops.imaging functions. Python
-# workers may run in processes that can't import this package (the
-# driver contract imports __spark_entry__ from an arbitrary cwd), so
-# ship the codec module BY VALUE inside the pickled closures instead
-# of by reference — it's self-contained (stdlib + numpy only).
-try:  # pragma: no cover - exercised implicitly by every mapInPandas test
-    from pyspark import cloudpickle as _cp
-
-    from etl_ch_destination_spark.ops import imaging as _imaging_mod
-
-    _cp.register_pickle_by_value(_imaging_mod)
-except Exception:  # noqa: BLE001  (older pickler without the hook)
-    pass
-
 FEATURE_SCHEMA = "doc_id long, n_bytes int, first_byte int, content_md5 string"
 
 # Synthesized-image dims derive from text length — deterministic and

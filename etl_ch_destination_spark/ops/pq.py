@@ -2,11 +2,9 @@
 Quantization for Nearest Neighbor Search", IEEE PAMI 2011 — public
 literature) backing ops/similarity.ivfpq_topk.
 
-Pure numpy, self-contained (stdlib + numpy/pandas only) so the whole
-module ships BY VALUE inside pickled pandas-UDF closures
-(cloudpickle.register_pickle_by_value in ops/similarity.py) — the
-worker-cwd import trap means package code referenced by module would
-fail from an arbitrary driver cwd.
+Pure numpy, self-contained (stdlib + numpy/pandas only). Like every
+engine module it ships BY VALUE inside pickled pandas-UDF closures
+through the one package registration in etl_ch_destination_spark/__init__.py.
 
 The PQ idea: split a d-dim residual vector into ``m_sub`` contiguous
 sub-vectors; vector-quantize each subspace against its own ``ks``-entry

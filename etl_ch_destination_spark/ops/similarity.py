@@ -509,19 +509,6 @@ def ivf_topk(
     )
 
 
-# ops/pq.py ships BY VALUE inside the ivfpq pandas-UDF closures: the
-# driver contract imports from an arbitrary cwd, so local-mode workers
-# could not re-import this package by reference (the worker-cwd trap).
-try:  # pragma: no cover - exercised implicitly by every ivfpq test
-    from pyspark import cloudpickle as _cp
-
-    from etl_ch_destination_spark.ops import pq as _pq_mod
-
-    _cp.register_pickle_by_value(_pq_mod)
-except Exception:  # noqa: BLE001  (older pickler without the hook)
-    pass
-
-
 def ivfpq_topk(
     candidates: DataFrame,
     queries: DataFrame,

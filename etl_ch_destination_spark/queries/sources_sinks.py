@@ -1609,25 +1609,25 @@ def sink_manifest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest-pointer snapshot isolation — the lakehouse table-format
     commit model (the manifest/snapshot mechanism described in the
     Delta Lake VLDB'20 and Iceberg public designs) reduced to its
-    Spark-visible core: commit 1 writes the table as four hash buckets
-    of parquet; commit 2 REWRITES bucket 2 (compacting away rows under
-    500 cents) and publishes a NEW manifest that points at commits
-    {{1: buckets 0,1,3}} ∪ {{2: bucket 2}} — the swap is one JSON
-    pointer write, readers of the old manifest never see a torn state,
-    and the replaced files are left in place for time travel until a
-    vacuum. The returned frame re-reads the table THROUGH the new
-    manifest (an explicit file list fed to the parquet reader) and
-    aggregates; the oracle expresses the expected post-commit state
-    directly over the source table, so the hash gate proves the
-    manifest read path lost and duplicated nothing.
+    Spark-visible core: commit1/ holds the table as four hash buckets
+    of parquet and table-log version 0 adds them; commit2/ REWRITES
+    bucket 2 (compacting away rows under 500 cents) and version 1
+    removes commit1/bkt=2 and adds commit2/bkt=2, so the live set is
+    {{commit1: buckets 0,1,3}} ∪ {{commit2: bucket 2}} — the swap is one
+    put-if-absent ``sink.table_log.commit``, readers of version 0 never
+    see a torn state, and the replaced files are left in place for time
+    travel until a vacuum. The returned frame re-reads the table
+    THROUGH the log's live set (``live_adds``: an explicit file list
+    fed to the parquet reader) and aggregates; the oracle expresses the
+    expected post-commit state directly over the source table, so the
+    hash gate proves the log read path lost and duplicated nothing.
 
     Plan/scale: bucket rewrite touches only 1/4 of the data (the
     partition-pruned overwrite every table format optimizes for);
-    the manifest keeps reads at file-list granularity — O(|files|)
+    the log keeps reads at file-list granularity — O(|files|)
     driver work, no directory listing storms at 100 TB."""
-    import json
-
     path = _scratch(sf_dir, "sink_manifest_snapshot")
+    (log_dir,) = _fresh(sf_dir, "sink_manifest_snapshot", "_table_log")
     ev = load_table(spark, sf_dir, "events")
     cents = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
     bkt = (F.col("user_id") % 4).alias("bkt")
@@ -1645,22 +1645,17 @@ def sink_manifest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .partitionBy("bkt")
         .parquet(v2)
     )
-    # publish: the new manifest points at live partition directories
-    manifest = {
-        "snapshot": 2,
-        "paths": [
-            os.path.join(v1, "bkt=0"),
-            os.path.join(v1, "bkt=1"),
-            os.path.join(v1, "bkt=3"),
-            os.path.join(v2, "bkt=2"),
-        ],
-    }
-    mpath = os.path.join(path, "manifest_v2.json")
-    with open(mpath, "w") as f:
-        json.dump(manifest, f)
-    # read THROUGH the manifest: explicit file list, no directory scan
-    with open(mpath) as f:
-        live = json.load(f)["paths"]
+    # publish: version 0 adds the four commit-1 buckets, version 1
+    # swaps bucket 2 for its rewrite
+    commit(log_dir, 0, [
+        {"add": {"path": f"commit1/bkt={b}", "dataChange": True}} for b in range(4)
+    ])
+    commit(log_dir, 1, [
+        {"remove": {"path": "commit1/bkt=2", "dataChange": True}},
+        {"add": {"path": "commit2/bkt=2", "dataChange": True}},
+    ])
+    # read THROUGH the log: explicit file list, no directory scan
+    live = [os.path.join(path, p) for p in live_adds(log_dir)]
     back = spark.read.schema(EVENTS).parquet(*live)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -71,19 +71,6 @@ AVRO_MAGIC = b"Obj\x01"
 # must take the marker from the header either way.
 SYNC_MARKER = hashlib.md5(b"etl-ch-destination-spark avro sync").digest()
 
-# Worker-cwd import trap (see sink/rowbinary.py): ship this module by
-# value inside pickled closures so mapInPandas decode/encode work from
-# any driver cwd.
-try:  # pragma: no cover - exercised by the scan_avro_import worker path
-    from pyspark import cloudpickle as _cp
-
-    import etl_ch_destination_spark.sink.avro as _av_mod
-
-    _cp.register_pickle_by_value(_av_mod)
-except Exception:  # noqa: BLE001  (older pickler without the hook)
-    pass
-
-
 # --------------------------------------------------------------------
 # Spark schema -> Avro writer schema (JSON)
 # --------------------------------------------------------------------

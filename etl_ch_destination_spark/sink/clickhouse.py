@@ -365,9 +365,9 @@ def post_blocks(
     tokens and duplicates. Pick per sink: exactly-once under re-slicing
     (default) XOR duplicate-block preservation (salted).
 
-    The worker closure captures only plain strings/floats — no module
-    references — so it is immune to the worker-cwd import trap
-    (SKILL.md): no `register_pickle_by_value` needed here."""
+    The worker closure captures only plain strings/floats; like all
+    engine code it ships by value (the package registration in
+    etl_ch_destination_spark/__init__.py)."""
     from urllib.parse import urlencode
 
     path, params = http_insert_request(

@@ -50,16 +50,6 @@ import sys as _sys
 
 from etl_ch_destination_spark.sink.wire import encode_blocks, read_zigzag, write_zigzag
 
-# Worker-cwd import trap (see sink/rowbinary.py): ship by value.
-try:  # pragma: no cover
-    from pyspark import cloudpickle as _cp
-
-    import etl_ch_destination_spark.sink.kafka as _kafka_mod
-
-    _cp.register_pickle_by_value(_kafka_mod)
-except Exception:  # noqa: BLE001
-    pass
-
 # ------------------------------------------------------------------
 # CRC32C (Castagnoli, polynomial 0x1EDC6F41 reflected = 0x82F63B78) —
 # the checksum Kafka mandates for v2 batches; table-driven, public

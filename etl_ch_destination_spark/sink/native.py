@@ -73,25 +73,6 @@ from etl_ch_destination_spark.sink.rowbinary import (
 )
 from etl_ch_destination_spark.sink.wire import encode_blocks, read_uvarint, write_uvarint
 
-# Worker processes may not be able to import this package (the driver
-# contract runs from an arbitrary cwd — same reasoning as
-# ops/multimodal.py): ship this module and its encoder dependencies BY
-# VALUE inside any pickled closure that references them, so
-# encode_native_block works in applyInPandas regardless of the
-# worker's sys.path.
-try:  # pragma: no cover - exercised by the export keys' worker path
-    from pyspark import cloudpickle as _cp
-
-    import etl_ch_destination_spark.sink.clickhouse as _ch_mod
-    import etl_ch_destination_spark.sink.native as _native_mod
-    import etl_ch_destination_spark.sink.rowbinary as _rb_mod
-
-    for _m in (_ch_mod, _rb_mod, _native_mod):
-        _cp.register_pickle_by_value(_m)
-except Exception:  # noqa: BLE001  (older pickler without the hook)
-    pass
-
-
 def _default_value(dt: DataType):
     """ClickHouse default for a type — fills Nullable null slots."""
     if isinstance(dt, (StringType, BinaryType)):

@@ -84,19 +84,6 @@ _KINDS = {
     "fixed32": WT_I32,
 }
 
-# Worker-cwd import trap (see sink/rowbinary.py): ship this module by
-# value inside pickled closures so mapInPandas decode/encode work from
-# any driver cwd.
-try:  # pragma: no cover - exercised by the scan_protobuf_import worker path
-    from pyspark import cloudpickle as _cp
-
-    import etl_ch_destination_spark.sink.protobuf as _pb_mod
-
-    _cp.register_pickle_by_value(_pb_mod)
-except Exception:  # noqa: BLE001  (older pickler without the hook)
-    pass
-
-
 def pb_schema(fields: list[tuple[int, str, str, bool]]) -> list[tuple]:
     """Validate and normalize a message schema.
 

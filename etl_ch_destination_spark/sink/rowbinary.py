@@ -80,25 +80,6 @@ from etl_ch_destination_spark.sink.wire import encode_blocks, read_uvarint, writ
 _EPOCH_DATE = _dt.date(1970, 1, 1)
 _EPOCH_TS = _dt.datetime(1970, 1, 1)
 
-# Worker processes may not be able to import this package (the driver
-# contract runs from an arbitrary cwd — same reasoning as
-# ops/multimodal.py): ship this module and the type-name source BY
-# VALUE inside any pickled closure that references them, so encode_row
-# works in mapInPandas/applyInPandas regardless of the worker's
-# sys.path. (sink/native.py registers the same set; double
-# registration is harmless.)
-try:  # pragma: no cover - exercised by the export keys' worker path
-    from pyspark import cloudpickle as _cp
-
-    import etl_ch_destination_spark.sink.clickhouse as _ch_mod
-    import etl_ch_destination_spark.sink.rowbinary as _rb_mod
-
-    for _m in (_ch_mod, _rb_mod):
-        _cp.register_pickle_by_value(_m)
-except Exception:  # noqa: BLE001  (older pickler without the hook)
-    pass
-
-
 def _decimal_width(precision: int) -> int:
     if precision <= 9:
         return 4

@@ -39,18 +39,6 @@ import zlib
 
 from etl_ch_destination_spark.sink.wire import encode_blocks
 
-# Worker-cwd import trap (see sink/rowbinary.py): ship this module by
-# value inside pickled closures so mapInPandas decode/encode work from
-# any driver cwd.
-try:  # pragma: no cover - exercised by the scan_warc_import worker path
-    from pyspark import cloudpickle as _cp
-
-    import etl_ch_destination_spark.sink.warc as _warc_mod
-
-    _cp.register_pickle_by_value(_warc_mod)
-except Exception:  # noqa: BLE001  (older pickler without the hook)
-    pass
-
 CRLF = b"\r\n"
 VERSION = b"WARC/1.0"
 

@@ -33,17 +33,6 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-# Worker-cwd import trap (see sink/rowbinary.py): ship this module by
-# value inside pickled closures, like the codecs that import it.
-try:  # pragma: no cover - exercised by the codec keys' worker path
-    from pyspark import cloudpickle as _cp
-
-    import etl_ch_destination_spark.sink.wire as _wire_mod
-
-    _cp.register_pickle_by_value(_wire_mod)
-except Exception:  # noqa: BLE001  (older pickler without the hook)
-    pass
-
 _ONE_BYTE = [bytes((u,)) for u in range(0x80)]
 
 

@@ -32,8 +32,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_ch_destination_spark.schemas import EVENTS_RAW  # noqa: F401  (docs)
-
 # The Structured Streaming Kafka source's fixed output schema (public
 # integration guide). Tests synthesize frames with exactly this shape.
 KAFKA_RECORD_SCHEMA = (

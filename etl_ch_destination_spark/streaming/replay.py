@@ -22,7 +22,7 @@ from pyspark.sql.window import Window
 
 from etl_ch_destination_spark.catalog import load_table, scratch_dir
 from etl_ch_destination_spark.ops.staging import stage
-from etl_ch_destination_spark.schemas import EVENTS_RAW
+from etl_ch_destination_spark.schemas import EVENTS, EVENTS_RAW
 from etl_ch_destination_spark.session import ensure_session_defaults
 
 
@@ -33,7 +33,6 @@ def read_events_stream(
     sniff as the batch catalog path (NANOS fixtures read raw + div
     1000; µs fixtures read directly; see catalog._events_ts_is_nanos)."""
     from etl_ch_destination_spark.catalog import _events_ts_is_nanos
-    from etl_ch_destination_spark.schemas import EVENTS
 
     ensure_session_defaults(spark)
     nanos = _events_ts_is_nanos(f"{sf_dir.rstrip('/')}/events.parquet")
@@ -86,10 +85,7 @@ def read_staged_stream(spark: SparkSession, staged_path: str) -> DataFrame:
     """Stream over a stage_replay directory, one file per micro-batch."""
     ensure_session_defaults(spark)
     return (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
+        spark.readStream.schema(EVENTS)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged_path)
     )

@@ -24,3 +24,36 @@ def test_full_parity_at_smoke_scale():
     tail = "\n".join(proc.stdout.splitlines()[-8:])
     assert proc.returncode == 0, f"parity failed:\n{tail}\n{proc.stderr[-2000:]}"
     assert ", 0 fail" in proc.stdout, tail
+
+
+# One key per module family whose query runs engine code on Python
+# workers: codecs, multimodal, audio, time-series and pandas UDFs.
+WORKER_KEYS = (
+    "scan_kafka_import,sink_native_export,llm_multimodal_ingest,"
+    "llm_audio_resample,ts_downsample_lttb,udf_map_in_pandas"
+)
+
+
+def test_worker_cwd_probe_from_outside_the_repo():
+    """The worker-cwd import trap: local-mode workers put the driver's
+    cwd on sys.path, so engine code must reach them by value. Run the
+    driver simulator from /tmp with no repo entry on PYTHONPATH."""
+    env = dict(os.environ)
+    path = [
+        p for p in env.pop("PYTHONPATH", "").split(os.pathsep)
+        if p and not os.path.realpath(p).startswith(REPO)
+    ]
+    if path:
+        env["PYTHONPATH"] = os.pathsep.join(path)
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "driver_sim.py"),
+         "--cwd", "/tmp", "--sf", "/root/testdata/sf0.001", "--keys", WORKER_KEYS],
+        cwd="/tmp",
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    tail = "\n".join(proc.stdout.splitlines()[-10:])
+    assert proc.returncode == 0, f"driver_sim failed:\n{tail}\n{proc.stderr[-2000:]}"
+    assert "6 ok, 0 fail" in proc.stdout, tail

@@ -361,14 +361,16 @@ def test_manifest_time_travel_reads_old_snapshot(spark):
     table exactly — the replaced files were never touched."""
     from etl_ch_destination_spark.catalog import load_table, scratch_dir
     from etl_ch_destination_spark.schemas import EVENTS
+    from etl_ch_destination_spark.sink.table_log import live_adds
 
     df = _q("sink_manifest_snapshot")(spark, SF)
     new_n = df.agg(F.sum("n")).first()[0]
     tag = os.path.basename(SF.rstrip("/"))
     root = scratch_dir(f"sink_manifest_snapshot/{tag}")
-    with open(os.path.join(root, "manifest_v2.json")) as f:
-        m = json.load(f)
-    assert m["snapshot"] == 2 and len(m["paths"]) == 4
+    live = live_adds(os.path.join(root, "_table_log"))
+    assert sorted(live) == [
+        "commit1/bkt=0", "commit1/bkt=1", "commit1/bkt=3", "commit2/bkt=2"
+    ]
     v1_all = [os.path.join(root, "commit1", f"bkt={b}") for b in range(4)]
     old = spark.read.schema(EVENTS).parquet(*v1_all)
     ev = load_table(spark, SF, "events")

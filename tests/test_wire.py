@@ -1,7 +1,8 @@
 """The shared varint/zigzag core (sink/wire.py) that every wire codec in
 ``sink/`` imports: goldens and round trips for the primitives, one
 validation policy for malformed varints across all five public
-decoders, and the by-value pickling the codecs' worker closures need.
+decoders, and the by-value pickling every engine module's worker
+closures need.
 """
 
 from __future__ import annotations
@@ -158,15 +159,23 @@ def test_malformed_varint_rejected_by_every_codec(decode, case):
 
 
 def test_wire_and_its_importers_pickle_by_value():
-    """Worker-cwd import trap (see sink/rowbinary.py): a worker started
-    outside the repo cannot import this package, so the shared core and
-    every codec that imports it must ship by value."""
+    """Worker-cwd import trap: a worker started outside the repo cannot
+    import this package, so the shared core, every codec that imports
+    it and every other engine module must ship by value (the one
+    registration in etl_ch_destination_spark/__init__.py)."""
+    import pkgutil
+
     from pyspark.cloudpickle.cloudpickle import _is_registered_pickle_by_value
 
-    from etl_ch_destination_spark.sink import avro, kafka, native, protobuf, rowbinary
+    import etl_ch_destination_spark as pkg
 
-    for mod in (wire, rowbinary, native, avro, protobuf, kafka):
-        assert _is_registered_pickle_by_value(mod), mod.__name__
+    names = [
+        m.name for m in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+    ]
+    assert len(names) > 60 and "etl_ch_destination_spark.sink.wire" in names
+    for name in [pkg.__name__, *names]:
+        mod = importlib.import_module(name)
+        assert _is_registered_pickle_by_value(mod), name
 
 
 # ---------------------------------------------------------------------------

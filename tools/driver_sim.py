@@ -9,8 +9,9 @@ comparison, the ones repo-root runs cannot catch:
 - runs with an arbitrary working directory (pass --cwd /tmp) — the
   worker-cwd import trap: local-mode Python workers put the DRIVER'S
   cwd on sys.path, so a worker-side closure that references package
-  code by module reference only works from the repo root unless the
-  module is shipped by value (cloudpickle.register_pickle_by_value);
+  code by module reference only works from the repo root; the package
+  registers itself for by-value pickling once, in
+  etl_ch_destination_spark/__init__.py, and this run proves it;
 - builds its own plain SparkSession with a NON-UTC session timezone
   and default confs (probes ensure_session_defaults);
 - compares HEX-STRICT: every float is compared on its exact bit
