@@ -18,6 +18,22 @@ its archive: ``pyspark.zip`` and the ``spark-core`` jar, ~165 ms per task
 before any user code runs. The daemon skips the re-read while an
 archive's file is unchanged. Sessions built elsewhere (the driver
 harness's own) keep Spark's default daemon and behave the same.
+
+Local filesystem: the same local sessions bind ``file://`` to
+``_vendor/localfs/`` (the jar goes first on ``spark.driver.extraClassPath``;
+``fs.file.impl`` serves ``FileSystem``, which Spark's file writers use, and
+``fs.AbstractFileSystem.file.impl`` serves ``FileContext``, which streaming
+checkpoints and state stores use). Without the native Hadoop library,
+``RawLocalFileSystem.setPermission`` forks ``chmod`` through
+``Shell.execCommand``, and Hadoop calls it for every data file, every
+``.crc`` file and every directory a write creates: 161 forks per warm
+perfbench ``etl_load`` unit. The vendored classes set the same mode
+in-process with ``Files.setPosixFilePermissions`` (a checksummed create
+and close went from ~7.4 ms to ~2.7 ms on a 4-core host); only a mode
+with the sticky bit still forks. Sessions built elsewhere (the driver
+harness's own, ``tools/driver_sim.py``), and sessions rebuilt in a JVM that
+was started without the jar, keep Spark's binding. Rebuild the jar with
+``python tools/build_localfs.py`` after editing its sources.
 """
 
 from __future__ import annotations
@@ -33,6 +49,15 @@ WORKER_DAEMON_DIR = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "_vendor", "worker_daemon"
 )
 WORKER_DAEMON_MODULE = "spark_graft_daemon"
+
+LOCALFS_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "_vendor", "localfs"
+)
+LOCALFS_JAR = os.path.join(LOCALFS_DIR, "spark-graft-localfs.jar")
+LOCALFS_CONF = {
+    "spark.hadoop.fs.file.impl": "sparkgraft.localfs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "sparkgraft.localfs.NioLocalFs",
+}
 
 # Spark's generated-class cache (default 100 entries). One bench.py suite
 # pass (priming + 72 keys, sf0.1) compiles 1,215 distinct classes and a
@@ -56,6 +81,22 @@ def _pin_os_utc() -> None:
             time.tzset()
 
 
+def _jvm_loads_localfs() -> bool:
+    """True unless this process already runs a JVM without the jar.
+
+    ``spark.driver.extraClassPath`` only reaches a JVM that the builder
+    launches; a session rebuilt in a JVM that an earlier session started
+    keeps that JVM's classpath, where the classes would not load.
+    """
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if jvm is None:
+        return True
+    classpath = jvm.java.lang.System.getProperty("java.class.path")
+    return LOCALFS_JAR in classpath.split(os.pathsep)
+
+
 def get_spark(
     app_name: str = "etl-ch-destination-spark",
     master: str | None = None,
@@ -66,9 +107,11 @@ def get_spark(
 
     AQE on (runtime re-plan, skew-join splitting, partition coalescing),
     UTC session time, Arrow enabled for the pandas-UDF paths. A local
-    master runs its Python workers under the engine's daemon (module
-    docstring); a caller's ``spark.executorEnv.PYTHONPATH`` is kept, after
-    the daemon's directory.
+    master runs its Python workers under the engine's daemon and binds
+    ``file://`` to the vendored local filesystem (module docstring); a
+    caller's ``spark.executorEnv.PYTHONPATH`` and
+    ``spark.driver.extraClassPath`` are kept, after the daemon's directory
+    and the jar.
     """
     _pin_os_utc()
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -89,13 +132,20 @@ def get_spark(
     )
     conf = dict(extra_conf or {})
     worker_path = conf.pop("spark.executorEnv.PYTHONPATH", "")
+    driver_path = conf.pop("spark.driver.extraClassPath", "")
     if master.startswith("local"):
-        # the daemon file exists on this host only: executors of a cluster
-        # master keep Spark's own daemon
+        # the daemon file and the jar exist on this host only: executors of
+        # a cluster master keep Spark's own daemon and filesystem binding
         builder = builder.config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
         worker_path = os.pathsep.join(p for p in (WORKER_DAEMON_DIR, worker_path) if p)
+        if _jvm_loads_localfs():
+            driver_path = os.pathsep.join(p for p in (LOCALFS_JAR, driver_path) if p)
+            for k, v in LOCALFS_CONF.items():
+                builder = builder.config(k, v)
     if worker_path:
         builder = builder.config("spark.executorEnv.PYTHONPATH", worker_path)
+    if driver_path:
+        builder = builder.config("spark.driver.extraClassPath", driver_path)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
