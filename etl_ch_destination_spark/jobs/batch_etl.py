@@ -12,11 +12,14 @@ Every stage is an operator the registry already gates individually
 sink_parquet_partitioned, sink_idempotent_batch); this module proves
 they compose — the "a user of the reference could switch" story.
 
-Scale notes (100 TB/day): one shuffle for the id-dedup window, one for
-the partitioned write's date clustering; the dimension join is
-broadcast; the verify aggregate reads back only the partition columns
-it needs. Batch stamping makes re-runs idempotent downstream
-(dedup on (_batch_id, event_id) at read time).
+Scale notes (100 TB/day): the JSONL extract writes one file per input
+split, so it runs as wide as the scan (never funnelled through one
+task); one shuffle for the id-dedup window, one for the partitioned
+write's date clustering; the dimension join is broadcast; the verify
+re-read declares the schema it wrote (no footer-inference job), reads
+only the columns it needs and counts batch stamps in the same
+single-exchange aggregate (`batch_count`). Batch stamping makes re-runs
+idempotent downstream (dedup on (_batch_id, event_id) at read time).
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ from pyspark.sql import functions as F
 from etl_ch_destination_spark.catalog import load_table, scratch_dir
 from etl_ch_destination_spark.ops.dedup import latest_by_key
 from etl_ch_destination_spark.schemas import EVENTS
-from etl_ch_destination_spark.sink.clickhouse import ddl_for, stamp_batch
+from etl_ch_destination_spark.sink.clickhouse import batch_count, ddl_for, stamp_batch
 
 TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
 
@@ -43,7 +46,7 @@ def run_batch_etl(
     # extract: stage events as typed JSONL, read back with schema
     staged = f"{out_dir}/staged_jsonl"
     ev_src = load_table(spark, sf_dir, "events")
-    ev_src.coalesce(1).write.mode("overwrite").option("timestampFormat", TS_FMT).json(staged)
+    ev_src.write.mode("overwrite").option("timestampFormat", TS_FMT).json(staged)
     ev = spark.read.schema(EVENTS).option("timestampFormat", TS_FMT).json(staged)
 
     # clean: exactly-one row per event_id (earliest ts wins)
@@ -71,13 +74,14 @@ def run_batch_etl(
         partition_by="toDate(ts)",
     )
 
-    # verify: aggregate the RE-READ sink
-    back = spark.read.parquet(out)
+    # verify: aggregate the RE-READ sink, under the schema just written
+    # (no job opens a footer to infer it)
+    back = spark.read.schema(loaded.schema).parquet(out)
     return (
         back.groupBy("event_date", "segment")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value"),
-            F.countDistinct("_batch_id").alias("n_batches"),
+            batch_count().alias("n_batches"),
         )
     )

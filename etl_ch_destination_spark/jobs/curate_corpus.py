@@ -39,6 +39,7 @@ from etl_ch_destination_spark.queries.llm_corpus import (
     TM_MIN_LEX,
     TM_MIN_WORDS,
 )
+from etl_ch_destination_spark.sink.clickhouse import batch_count
 
 
 def run_curate_corpus(
@@ -103,14 +104,15 @@ def run_curate_corpus(
 
     # verify by RE-READING the loaded corpus — a hash match against an
     # oracle computed from the SOURCE table proves the load lost and
-    # duplicated nothing across the full pipeline.
-    loaded = spark.read.parquet(out_dir)
+    # duplicated nothing across the full pipeline. Read under the schema
+    # just written, so no job opens a footer to infer it.
+    loaded = spark.read.schema(curated.schema).parquet(out_dir)
     return (
         loaded.groupBy("split", "source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_words").alias("total_words"),
-            F.countDistinct("_batch_id").alias("n_batches"),
+            batch_count().alias("n_batches"),
         )
         .withColumn("n_batches", F.col("n_batches").cast("int"))
     )

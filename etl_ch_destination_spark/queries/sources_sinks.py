@@ -56,6 +56,7 @@ from etl_ch_destination_spark.sink.table_log import (
     table_log_snapshot,
     table_log_snapshot_from_checkpoint,
     write_checkpoint,
+    write_synced,
 )
 from etl_ch_destination_spark.sink.wire import decode_blocks, read_blocks
 
@@ -1867,6 +1868,14 @@ def job_incremental_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer — the oracle states it over the source directly; the test
     pins run 3's extracted-row count at 0.
 
+    One aggregate per increment gives both the extracted count and the
+    next bookmark (``count`` of the new rows and ``max(ts)`` of the
+    visible ones, in one pass); the append runs only when that count
+    is non-zero. The bookmark is published the way a checkpoint
+    pointer is: written and fsynced to a temp file, then renamed over
+    the old one, so a torn write can never leave a shorter, earlier
+    timestamp that makes the next run append duplicates.
+
     Plan/scale: each increment's scan is bounded by the new data, not
     the table (partition-pruned in a date-partitioned lake); the
     bookmark is one JSON scalar — no state table to join."""
@@ -1888,16 +1897,14 @@ def job_incremental_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.exists(bm_path):
             with open(bm_path) as f:
                 bm = f.read().strip()
-        new = visible if bm is None else visible.filter(
+        is_new = F.lit(True) if bm is None else (
             F.col("ts") > F.lit(bm).cast("timestamp")
         )
-        n = new.count()
+        n, top = visible.agg(F.count(F.when(is_new, 1)), F.max("ts")).first()
         if n:
-            new.write.mode("append").parquet(data)
-        top = visible.agg(F.max("ts")).first()[0]
+            visible.filter(is_new).write.mode("append").parquet(data)
         if top is not None:
-            with open(bm_path, "w") as f:
-                f.write(top.isoformat(sep=" "))
+            os.replace(write_synced(bm_path, top.isoformat(sep=" ")), bm_path)
         return n
 
     run_increment(ev.filter(F.col("ts") <= F.lit(mid)))

@@ -172,7 +172,8 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-stamped micro-batch into the parquet stand-in sink
     (pipeline.foreach_batch_load), and the re-read sink aggregates to
     the same totals as the source — proving the load was complete and
-    non-duplicating."""
+    non-duplicating. The sink is re-read under the stream's own schema,
+    so no job opens a footer to infer it."""
     import os
 
     tag = os.path.basename(sf_dir.rstrip("/"))
@@ -183,7 +184,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_events_stream(spark, sf_dir)
     q = pipeline.foreach_batch_load(stream, out, ckpt)
     q.awaitTermination()
-    back = spark.read.parquet(out)
+    back = spark.read.schema(stream.schema).parquet(out)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias("sum_value"),

@@ -14,7 +14,8 @@ factored exactly at the testable seam:
 - `stamp_batch`: the idempotence stamp — ClickHouse deduplicates
   identical insert blocks, and a `_batch_id` column makes replays
   deduplicable downstream too (`sink_idempotent_batch`,
-  `stream_foreachbatch_sink`).
+  `stream_foreachbatch_sink`); `batch_count` counts the stamps a
+  verify report re-reads.
 
 The wire layer below the SQL seam lives in ``sink/rowbinary.py``
 and ``sink/native.py`` (round 4): DataFrame rows → ClickHouse
@@ -34,7 +35,7 @@ transactions — retries rely on the batch stamp, not rollback).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -300,6 +301,14 @@ def stamp_batch(df: DataFrame, batch_id: str) -> DataFrame:
     """Stamp a replay-stable batch id so re-delivered batches are
     deduplicable (`dropDuplicates(['_batch_id', key])` downstream)."""
     return df.withColumn("_batch_id", F.lit(batch_id))
+
+
+def batch_count() -> Column:
+    """Number of distinct batch stamps in a group, as ``bigint`` — what
+    ``countDistinct("_batch_id")`` gives (exact, NULLs ignored) without
+    the distinct aggregate's second exchange: the stamp set per group is
+    tiny, so it is collected and sized in one partial/final pass."""
+    return F.size(F.collect_set("_batch_id")).cast("bigint")
 
 
 def jdbc_insert_statement(table: str, columns: list[str]) -> str:

@@ -71,7 +71,7 @@ class CommitConflict(Exception):
     the log and retry at the next version)."""
 
 
-def _write_synced(path: str, text: str) -> str:
+def write_synced(path: str, text: str) -> str:
     """Write ``text`` to a temp file next to ``path`` and fsync it;
     returns the temp path for the caller to publish."""
     tmp = path + ".tmp.%d" % os.getpid()
@@ -90,7 +90,7 @@ def commit(log_dir: str, version: int, actions: list[dict]) -> str:
     rewrite table history out from under concurrent readers)."""
     os.makedirs(log_dir, exist_ok=True)
     final = os.path.join(log_dir, "%020d.json" % version)
-    tmp = _write_synced(final, "\n".join(json.dumps(a) for a in actions) + "\n")
+    tmp = write_synced(final, "\n".join(json.dumps(a) for a in actions) + "\n")
     try:
         os.link(tmp, final)  # put-if-absent: EEXIST on conflict
     except FileExistsError:
@@ -280,7 +280,7 @@ def write_checkpoint(spark: SparkSession, log_dir: str, version: int) -> None:
         "overwrite"
     ).parquet(checkpoint_path(log_dir, version))
     pointer = os.path.join(log_dir, LAST_CHECKPOINT)
-    os.replace(_write_synced(pointer, json.dumps({"version": version})), pointer)
+    os.replace(write_synced(pointer, json.dumps({"version": version})), pointer)
 
 
 def table_log_snapshot_from_checkpoint(

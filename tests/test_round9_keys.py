@@ -853,9 +853,14 @@ def test_incremental_etl_run3_is_noop_and_complete(spark):
     got_n = df.agg(F.sum("n_events")).first()[0]
     assert got_n == load_table(spark, SF, "events").count()
     tag = os.path.basename(SF.rstrip("/"))
-    with open(os.path.join(
-            scratch_dir(f"job_incremental_etl/{tag}"), "run3_rows.json")) as f:
+    root = scratch_dir(f"job_incremental_etl/{tag}")
+    with open(os.path.join(root, "run3_rows.json")) as f:
         assert json.load(f)["run3_extracted"] == 0
+    # the bookmark run 3 left is the source's max(ts), published whole
+    top = load_table(spark, SF, "events").agg(F.max("ts")).first()[0]
+    with open(os.path.join(root, "bookmark.json")) as f:
+        assert f.read() == top.isoformat(sep=" ")
+    assert [n for n in os.listdir(root) if n.startswith("bookmark")] == ["bookmark.json"]
 
 
 # ---------- URL dedup ----------

@@ -158,6 +158,19 @@ def test_idempotent_batch_replay_collapses(spark, sf_dir):
     assert deduped.count() == orders_n
 
 
+def test_batch_count_matches_count_distinct(spark):
+    from etl_ch_destination_spark.sink.clickhouse import batch_count
+
+    df = spark.createDataFrame(
+        [(1, "a"), (1, "a"), (1, "b"), (1, None), (2, None)], "g int, _batch_id string"
+    )
+    got = df.groupBy("g").agg(
+        batch_count().alias("n"), F.countDistinct("_batch_id").alias("nd")
+    )
+    assert got.schema["n"].dataType == got.schema["nd"].dataType == LongType()
+    assert sorted((r.g, r.n, r.nd) for r in got.collect()) == [(1, 2, 2), (2, 0, 0)]
+
+
 def test_bucketed_join_eliminates_shuffles(spark, sf_dir):
     """The whole point of the bucketed layout: with broadcast disabled,
     the co-located join must plan a SortMergeJoin with NO exchange on
