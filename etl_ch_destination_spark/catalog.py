@@ -162,10 +162,17 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
+DEFAULT_SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
+
 def scratch_dir(subdir: str = "") -> str:
-    """Writable scratch root for sink round-trips (inside the repo,
-    gitignored — the environment forbids writes outside /root/repo)."""
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+    """Writable scratch root for sink round-trips: ``$SPARK_GRAFT_SCRATCH``
+    if set, else the gitignored ``.scratch`` beside this package — so
+    each checkout of the tree stages into its own directory, never into
+    another copy's."""
+    root = os.environ.get("SPARK_GRAFT_SCRATCH", DEFAULT_SCRATCH)
     path = os.path.join(root, subdir) if subdir else root
     os.makedirs(path, exist_ok=True)
     return path

@@ -1,5 +1,11 @@
 """Shared helpers for oracle-hash-matched queries.
 
+Three layers, each written once: the exact-decimal money policy, the
+double-space guards (`nz`, `pos`, `hilo`), and the exact-statistics
+recipes built on them (two-group moments, χ² contingency cells, the
+value-rank spine, window moments) — every key that uses a recipe gets
+the same Column tree, hence the same bits as its oracle.
+
 Exact-decimal money policy (SURVEY §4.2): parallel double summation is
 order-sensitive, so any Spark sum over money doubles would differ from
 DuckDB in final ulps. Both engines instead cast to tight DECIMALs,
@@ -10,8 +16,11 @@ kept small so neither engine overflows 38 digits mid-expression.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from etl_ch_destination_spark.catalog import load_table
 
 # Tight decimal shapes for the fixture money columns (FIXTURES.md domains).
 MONEY = "decimal(12,2)"  # prices, account balances
@@ -112,3 +121,194 @@ def hilo(col: str) -> Column:
     hi = F.expr(f"CAST({col} div 4294967296 AS BIGINT)").cast("double")
     lo = F.expr(f"CAST({col} % 4294967296 AS BIGINT)").cast("double")
     return hi * F.lit(4294967296.0) + lo
+
+
+# --- exact-statistics recipes -------------------------------------------
+# Each helper reads and writes NAMED columns, so a key's statistic stays
+# one fixed IEEE expression over them, replayed by its oracle SQL.
+
+
+def cents_moments(ev: DataFrame) -> DataFrame:
+    """(event_type, x, x2) over events: the value in exact cents as
+    decimal(9,0) and its square staged through decimal(19,0), so every
+    Σx and Σx² below is an exact integer sum."""
+    x = (F.col("value").cast("decimal(12,2)") * 100).cast("decimal(9,0)")
+    q = ev.select("event_type", x.alias("x"))
+    x2 = (F.col("x") * F.col("x")).cast("decimal(19,0)")
+    return q.select("event_type", "x", x2.alias("x2"))
+
+
+def two_group_moments(ev: DataFrame, a: str, b: str) -> DataFrame:
+    """One row (na, sa1, sa2, nb, sb1, sb2): count, Σx and Σx² of event
+    types `a` and `b` over `cents_moments`, each wide sum crossed to
+    double through `hilo`. One 2-group aggregate, then a 1×1 crossJoin
+    reshape — the cost is the scan."""
+    s = (
+        cents_moments(ev.filter(F.col("event_type").isin(a, b)))
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("double").alias("n"),
+            F.sum("x").alias("r1"),
+            F.sum("x2").alias("r2"),
+        )
+        .select("event_type", "n", hilo("r1").alias("s1"), hilo("r2").alias("s2"))
+    )
+
+    def side(group: str, t: str) -> DataFrame:
+        return s.filter(F.col("event_type") == group).select(
+            F.col("n").alias(f"n{t}"),
+            F.col("s1").alias(f"s{t}1"),
+            F.col("s2").alias(f"s{t}2"),
+        )
+
+    return side(a, "a").crossJoin(side(b, "b"))  # 1 row × 1 row
+
+
+def welch_se() -> Column:
+    """Welch standard error √(var_a/n_a + var_b/n_b) over the
+    `two_group_moments` columns, var/n spelled (s2/n − (s1/n)²)/(n−1);
+    `pos` clamps a rounded-negative sum, and `nz` makes the denominator
+    NULL (both engines) at n=1 or zero variance instead of an ANSI
+    throw."""
+    na, nb = F.col("na"), F.col("nb")
+    sa1, sa2, sb1, sb2 = (F.col(c) for c in ("sa1", "sa2", "sb1", "sb2"))
+    return nz(
+        F.sqrt(
+            pos(
+                (sa2 / na - (sa1 / na) * (sa1 / na)) / nz(na - 1)
+                + (sb2 / nb - (sb1 / nb) * (sb1 / nb)) / nz(nb - 1)
+            )
+        )
+    )
+
+
+def contingency_margins(o: DataFrame) -> DataFrame:
+    """(a, b, o_ab, r_a, c_b, n) from a cell-count frame (a, b, o_ab):
+    row, column and grand totals as windows over the (tiny) cell table,
+    so only the cell count ever touches data-sized input."""
+    return o.select(
+        "a",
+        "b",
+        "o_ab",
+        F.sum("o_ab").over(Window.partitionBy("a")).alias("r_a"),
+        F.sum("o_ab").over(Window.partitionBy("b")).alias("c_b"),
+        F.sum("o_ab").over(Window.partitionBy()).alias("n"),
+    )
+
+
+def chi2_term_e6() -> Column:
+    """One cell's χ² term (o·n − r·c)² / (r·c·n), floored to millionths,
+    over the `contingency_margins` columns. Every factor is widened to
+    decimal(38,0) before it multiplies, so neither product wraps int64
+    (o·n and r·c·n pass 2^63 near 10^10 events); the exact numerator and
+    denominator each round once to double, then one division and a
+    floor make the term an integer — the cell SUM is order-insensitive
+    where a raw double sum would drift."""
+    o_ab, r_a, c_b, n = (
+        F.col(c).cast("decimal(38,0)") for c in ("o_ab", "r_a", "c_b", "n")
+    )
+    num = o_ab * n - r_a * c_b
+    return F.floor(
+        (num * num).cast("double") / (r_a * c_b * n).cast("double") * 1000000
+    ).cast("bigint")
+
+
+def value_rank_spine(ev: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Exact tie-averaged ranks without a row-level global window.
+
+    Returns `(vals, ranked)`: `vals` is (x, mv), the count of each
+    distinct cents value; `ranked` is (x, event_type, m, mv, below),
+    the per-(value, event_type) count joined to the number of values
+    strictly below it. A value's doubled average rank is
+    2·below + mv + 1, an integer. Only the distinct-value spine (the
+    bounded cents domain) passes through the ordered window."""
+    x = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
+    g = (
+        ev.select("event_type", x.alias("x"))
+        .groupBy("x", "event_type")
+        .agg(F.count(F.lit(1)).alias("m"))
+    )
+    vals = g.groupBy("x").agg(F.sum("m").cast("bigint").alias("mv"))
+    w_spine = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
+    spine = vals.select(
+        "x", "mv", (F.sum("mv").over(w_spine) - F.col("mv")).alias("below")
+    )
+    return vals, g.join(spine, "x")
+
+
+def returnflag_metric_rows(li: DataFrame) -> DataFrame:
+    """(l_returnflag, metric, __v): each lineitem's {qty, tax_cents} map
+    exploded to long form — the ClickHouse *Map aggregates' input, with
+    exact-integer values so any aggregate over them is order-stable."""
+    m = li.select(
+        "l_returnflag",
+        F.create_map(
+            F.lit("qty"),
+            F.col("l_quantity").cast("bigint"),
+            F.lit("tax_cents"),
+            F.round(F.col("l_tax") * 100).cast("bigint"),
+        ).alias("__m"),
+    )
+    return m.select("l_returnflag", F.explode("__m").alias("metric", "__v"))
+
+
+def supplier_window_moments(spark: SparkSession, sf_dir: str, rows: int) -> DataFrame:
+    """(l_suppkey, l_orderkey, l_linenumber, n, sx, sy, sxx, syy, sxy):
+    exact int64 moments of x = quantity and y = price in cents over a
+    trailing `rows`-row frame per supplier. The frame order ends in
+    (x, y), so the one duplicate (suppkey, shipdate, orderkey,
+    linenumber) tuple at sf0.1 cannot order differently on the two
+    engines; fully tied rows are frame-equivalent. One l_suppkey
+    exchange, one sort, one WindowExec."""
+    li = load_table(spark, sf_dir, "lineitem")
+    t = li.select(
+        "l_suppkey",
+        "l_orderkey",
+        "l_linenumber",
+        "l_shipdate",
+        F.col("l_quantity").cast("bigint").alias("x"),
+        (F.col("l_extendedprice").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("y"),
+    )
+    fr = (
+        Window.partitionBy("l_suppkey")
+        .orderBy("l_shipdate", "l_orderkey", "l_linenumber", "x", "y")
+        .rowsBetween(-(rows - 1), 0)
+    )
+    return t.select(
+        "l_suppkey",
+        "l_orderkey",
+        "l_linenumber",
+        F.count(F.lit(1)).over(fr).cast("bigint").alias("n"),
+        F.sum("x").over(fr).cast("bigint").alias("sx"),
+        F.sum("y").over(fr).cast("bigint").alias("sy"),
+        F.sum(F.col("x") * F.col("x")).over(fr).cast("bigint").alias("sxx"),
+        F.sum(F.col("y") * F.col("y")).over(fr).cast("bigint").alias("syy"),
+        F.sum(F.col("x") * F.col("y")).over(fr).cast("bigint").alias("sxy"),
+    )
+
+
+def nation_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(nation, day, rev_cents): order revenue in exact cents per
+    customer nation and order date. Fact→dim equi-joins (nation
+    broadcast), then ONE hash aggregate to ~25·|days| rows — any window
+    over the result never sees fact-table cardinality."""
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_custkey",
+        "o_orderdate",
+        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
+        .cast("bigint")
+        .alias("cents"),
+    )
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return (
+        o.join(c, o["o_custkey"] == c["c_custkey"])
+        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .groupBy(
+            F.col("n_name").alias("nation"),
+            F.col("o_orderdate").alias("day"),
+        )
+        .agg(F.sum("cents").cast("bigint").alias("rev_cents"))
+    )

@@ -27,6 +27,7 @@ from etl_ch_destination_spark.queries._util import (
     nz,
     pos,
     rate,
+    returnflag_metric_rows,
     sql_davg,
     sql_dsum,
 )
@@ -440,17 +441,7 @@ def agg_sum_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     Metrics are exact integers (quantity is integral, tax scaled to
     cents) so parallel summation is bit-stable in both engines.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    m = li.select(
-        "l_returnflag",
-        F.create_map(
-            F.lit("qty"),
-            F.col("l_quantity").cast("bigint"),
-            F.lit("tax_cents"),
-            F.round(F.col("l_tax") * 100).cast("bigint"),
-        ).alias("__m"),
-    )
-    exploded = m.select("l_returnflag", F.explode("__m").alias("metric", "__v"))
+    exploded = returnflag_metric_rows(load_table(spark, sf_dir, "lineitem"))
     return exploded.groupBy("l_returnflag", "metric").agg(
         F.sum("__v").cast("bigint").alias("total")
     )

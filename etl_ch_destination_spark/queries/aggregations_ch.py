@@ -9,12 +9,26 @@ parallel SUM over raw doubles is order-sensitive — SURVEY §4.2).
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_ch_destination_spark.catalog import load_table
-from etl_ch_destination_spark.queries._util import hilo, nz, pos
+from etl_ch_destination_spark.queries._util import (
+    cents_moments,
+    chi2_term_e6,
+    contingency_margins,
+    hilo,
+    nz,
+    pos,
+    returnflag_metric_rows,
+    two_group_moments,
+    value_rank_spine,
+    welch_se,
+)
 from etl_ch_destination_spark.registry import query
 
 UNIQ_UPTO_N = 50   # uniqUpTo cap: exact below, N+1 sentinel above
@@ -564,6 +578,15 @@ def agg_top_bottom_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _type_bucket_margins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The event_type × (user_id % 4) contingency table with its margins
+    (`_util.contingency_margins`) — the association family's input."""
+    o = load_table(spark, sf_dir, "events").groupBy(
+        F.col("event_type").alias("a"), (F.col("user_id") % 4).alias("b")
+    ).agg(F.count(F.lit(1)).alias("o_ab"))
+    return contingency_margins(o)
+
+
 @query(
     "agg_cramers_v",
     """
@@ -601,11 +624,9 @@ def agg_top_bottom_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ClickHouse ``cramersV(a, b)`` (with ``chi-squared`` as the
     intermediate): association between event type and a user hash
-    bucket. Hash-exact by micro-quantization: each cell's chi-squared
-    term (o*n - r*c)^2 / (r*c*n) has an EXACT integer numerator
-    (decimal-widened square) and int64 denominator; both engines do
-    the same two correctly-rounded conversions + one division +
-    floor-to-millionths, making the per-cell term integer — so the
+    bucket. Hash-exact by micro-quantization (`_util.chi2_term_e6`):
+    each cell's chi-squared term is an exact integer ratio rounded
+    the same way on both engines and floored to millionths, so the
     cell SUM is order-insensitive where a raw double sum would drift.
     The final sqrt/divisions are a fixed expression tree over already-
     deterministic scalars.
@@ -613,25 +634,9 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one (a, b) hash agg over the scan (25 cells), margins via
     windows over the tiny cell table, final single-row agg. The scan
     aggregate is the only data-sized stage at 100 TB."""
-    e = load_table(spark, sf_dir, "events")
-    o = e.groupBy(
-        F.col("event_type").alias("a"), (F.col("user_id") % 4).alias("b")
-    ).agg(F.count(F.lit(1)).alias("o_ab"))
-    tot = o.select(
-        "a",
-        "b",
-        "o_ab",
-        F.sum("o_ab").over(Window.partitionBy("a")).alias("r_a"),
-        F.sum("o_ab").over(Window.partitionBy("b")).alias("c_b"),
-        F.sum("o_ab").over(Window.partitionBy()).alias("n"),
+    cells = _type_bucket_margins(spark, sf_dir).select(
+        "a", "b", "n", chi2_term_e6().alias("term_e6")
     )
-    num = (F.col("o_ab") * F.col("n") - F.col("r_a") * F.col("c_b")).cast("decimal(19,0)")
-    term_e6 = F.floor(
-        (num * num).cast("double")
-        / (F.col("r_a") * F.col("c_b") * F.col("n")).cast("double")
-        * 1000000
-    ).cast("bigint")
-    cells = tot.select("a", "b", "n", term_e6.alias("term_e6"))
     return cells.agg(
         F.max("n").cast("bigint").alias("n"),
         F.countDistinct("a").cast("int").alias("n_rows_dim"),
@@ -814,17 +819,7 @@ def agg_minmax_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape). The Spark side builds the per-row map and explodes it, so
     ragged key sets work; min/max are order-insensitive, no
     quantization caveats. One partial+final hash aggregate."""
-    li = load_table(spark, sf_dir, "lineitem")
-    m = li.select(
-        "l_returnflag",
-        F.create_map(
-            F.lit("qty"),
-            F.col("l_quantity").cast("bigint"),
-            F.lit("tax_cents"),
-            F.round(F.col("l_tax") * 100).cast("bigint"),
-        ).alias("__m"),
-    )
-    exploded = m.select("l_returnflag", F.explode("__m").alias("metric", "__v"))
+    exploded = returnflag_metric_rows(load_table(spark, sf_dir, "lineitem"))
     return exploded.groupBy("l_returnflag", "metric").agg(
         F.min("__v").cast("bigint").alias("lo"),
         F.max("__v").cast("bigint").alias("hi"),
@@ -1392,56 +1387,25 @@ TT_GROUP_B = "view"
 def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CH `welchTTest` — the Welch t STATISTIC for unequal-variance
     mean comparison between two event populations, computed from
-    exact integer moment sums (cents; squares staged through (19,0);
-    hugeint hi/lo split on the wide sum — the full agg_skew_kurt
-    recipe) and one shared IEEE expression tree, so the statistic
-    hash-matches bit-for-bit. The p-value is deliberately NOT emitted:
+    exact integer moment sums (`_util.two_group_moments`: cents,
+    squares staged through (19,0), hugeint hi/lo split on the wide
+    sums) and one shared IEEE expression tree over the Welch standard
+    error (`_util.welch_se`), so the statistic hash-matches
+    bit-for-bit. The p-value is deliberately NOT emitted:
     it needs the incomplete beta function, which neither engine
     exposes with reproducible rounding — the statistic + dof are the
     deterministic core (CH's own test returns the statistic too).
 
     Plan: one 2-group aggregate + a 1-row reshape — the cost IS the
     scan; population variance uses the n−1 sample form like CH."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin(TT_GROUP_A, TT_GROUP_B)
+    w = two_group_moments(
+        load_table(spark, sf_dir, "events"), TT_GROUP_A, TT_GROUP_B
     )
-    x = (F.col("value").cast("decimal(12,2)") * 100).cast("decimal(9,0)")
-    q = ev.select("event_type", x.alias("x"))
-    x2 = (F.col("x") * F.col("x")).cast("decimal(19,0)")
-
-    s = (
-        q.select("event_type", "x", x2.alias("x2"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("n"),
-            F.sum("x").alias("r1"),
-            F.sum("x2").alias("r2"),
-        )
-        .select("event_type", "n", hilo("r1").alias("s1"), hilo("r2").alias("s2"))
-    )
-    a = s.filter(F.col("event_type") == TT_GROUP_A).select(
-        F.col("n").alias("na"), F.col("s1").alias("sa1"), F.col("s2").alias("sa2")
-    )
-    b = s.filter(F.col("event_type") == TT_GROUP_B).select(
-        F.col("n").alias("nb"), F.col("s1").alias("sb1"), F.col("s2").alias("sb2")
-    )
-    w = a.crossJoin(b)  # 1 row × 1 row
-    na, nb = F.col("na"), F.col("nb")
-    sa1, sa2, sb1, sb2 = (F.col(c) for c in ("sa1", "sa2", "sb1", "sb2"))
-    # nz: NULL (both engines) instead of an ANSI throw at n=1 or zero
-    # within-group variance — see queries/_util.nz
-    t = (sa1 / na - sb1 / nb) / nz(
-        F.sqrt(
-            pos(
-                (sa2 / na - (sa1 / na) * (sa1 / na)) / nz(na - 1)
-                + (sb2 / nb - (sb1 / nb) * (sb1 / nb)) / nz(nb - 1)
-            )
-        )
-    )
+    t = (F.col("sa1") / F.col("na") - F.col("sb1") / F.col("nb")) / welch_se()
     return w.select(
         F.lit(f"{TT_GROUP_A}_vs_{TT_GROUP_B}").alias("pair"),
-        na.cast("bigint").alias("n_a"),
-        nb.cast("bigint").alias("n_b"),
+        F.col("na").cast("bigint").alias("n_a"),
+        F.col("nb").cast("bigint").alias("n_b"),
         t.alias("welch_t"),
     )
 
@@ -1502,21 +1466,12 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents domain, ≤ 49 002 rows regardless of data size — the
     agg_quantile_state bounded-spine pattern), and an equi-join of
     two value-keyed frames. At 100 TB the row count never touches an
-    ordered window; only the fixed-size value spine does."""
+    ordered window; only the fixed-size value spine does
+    (`_util.value_rank_spine`)."""
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin(TT_GROUP_A, TT_GROUP_B)
     )
-    x = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    q = ev.select("event_type", x.alias("x"))
-    g = q.groupBy("x", "event_type").agg(F.count(F.lit(1)).alias("m"))
-    vals = g.groupBy("x").agg(F.sum("m").cast("bigint").alias("mv"))
-    w_spine = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    spine = vals.select(
-        "x",
-        "mv",
-        (F.sum("mv").over(w_spine) - F.col("mv")).alias("below"),
-    )
-    joined = g.join(spine, "x")
+    _, joined = value_rank_spine(ev)
     is_a = F.col("event_type") == TT_GROUP_A
     r2 = 2 * F.col("below") + F.col("mv") + 1
     s = joined.agg(
@@ -1769,40 +1724,18 @@ def agg_histogram_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_student_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CH `studentTTest` — the equal-variance (pooled) two-sample t
     STATISTIC, the classical sibling of `agg_welch_ttest` and computed
-    from the SAME exact integer moment sums (cents, squares staged
-    through (19,0), hugeint hi/lo split) with one shared IEEE
-    expression tree: pooled variance
-    s_p² = (Σ(x−m_a)² + Σ(x−m_b)²)/(n_a+n_b−2), statistic
+    from the SAME exact integer moment sums
+    (`_util.two_group_moments`) with one shared IEEE expression tree:
+    pooled variance s_p² = (Σ(x−m_a)² + Σ(x−m_b)²)/(n_a+n_b−2), statistic
     (m_a−m_b)/√(s_p²(1/n_a+1/n_b)). The p-value is deliberately NOT
     emitted (incomplete beta — not reproducible cross-engine); CH's
     own function returns the statistic too.
 
     Plan: identical to the Welch key — one 2-group aggregate + a
     1-row×1-row reshape; the cost is the scan."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin(TT_GROUP_A, TT_GROUP_B)
+    w = two_group_moments(
+        load_table(spark, sf_dir, "events"), TT_GROUP_A, TT_GROUP_B
     )
-    x = (F.col("value").cast("decimal(12,2)") * 100).cast("decimal(9,0)")
-    q = ev.select("event_type", x.alias("x"))
-    x2 = (F.col("x") * F.col("x")).cast("decimal(19,0)")
-
-    s = (
-        q.select("event_type", "x", x2.alias("x2"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("n"),
-            F.sum("x").alias("r1"),
-            F.sum("x2").alias("r2"),
-        )
-        .select("event_type", "n", hilo("r1").alias("s1"), hilo("r2").alias("s2"))
-    )
-    a = s.filter(F.col("event_type") == TT_GROUP_A).select(
-        F.col("n").alias("na"), F.col("s1").alias("sa1"), F.col("s2").alias("sa2")
-    )
-    b = s.filter(F.col("event_type") == TT_GROUP_B).select(
-        F.col("n").alias("nb"), F.col("s1").alias("sb1"), F.col("s2").alias("sb2")
-    )
-    w = a.crossJoin(b)  # 1 row × 1 row
     na, nb = F.col("na"), F.col("nb")
     sa1, sa2, sb1, sb2 = (F.col(c) for c in ("sa1", "sa2", "sb1", "sb2"))
     # nz: NULL (both engines) instead of an ANSI throw at n_a=n_b=1 or
@@ -2218,18 +2151,7 @@ def agg_theils_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: one (a, b) hash agg over the scan (tiny contingency table),
     margins as windows over the cells, one final aggregate — same
     shape as agg_cramers_v at any scale."""
-    e = load_table(spark, sf_dir, "events")
-    o = e.groupBy(
-        F.col("event_type").alias("a"), (F.col("user_id") % 4).alias("b")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("o_ab"))
-    tot = o.select(
-        "a", "b", "o_ab",
-        F.sum("o_ab").over(Window.partitionBy("a")).cast("bigint").alias("r_a"),
-        F.sum("o_ab").over(Window.partitionBy("b")).cast("bigint").alias("c_b"),
-        F.sum("o_ab").over(
-            Window.partitionBy()
-        ).cast("bigint").alias("n"),
-    )
+    tot = _type_bucket_margins(spark, sf_dir)
     bits_x = (
         F.length(F.conv(F.expr("n div r_a"), 10, 2)) - F.lit(1)
     ).cast("bigint")
@@ -2303,33 +2225,14 @@ def agg_cramers_v_bc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bergsma-Wicher bias-corrected Cramér's V: φ²_corr = max(0, φ² −
     (r−1)(c−1)/(n−1)), with the row/column dimensions shrunk the same
     way, completing the association family next to `agg_cramers_v` and
-    `agg_theils_u`. The χ² intermediate reuses the cramersV
-    micro-quantization (exact integer per-cell terms → order-
+    `agg_theils_u`. The χ² intermediate is the shared
+    `_util.chi2_term_e6` cell (exact integer per-cell terms → order-
     insensitive sum); the correction is a fixed scalar expression over
     (n, r, c, χ²_e6) — every operand exact, replayed identically by
     the oracle. Plan: identical to agg_cramers_v (one tiny hash agg +
     margins)."""
-    e = load_table(spark, sf_dir, "events")
-    o = e.groupBy(
-        F.col("event_type").alias("a"), (F.col("user_id") % 4).alias("b")
-    ).agg(F.count(F.lit(1)).alias("o_ab"))
-    w_a, w_b = Window.partitionBy("a"), Window.partitionBy("b")
-    tot = o.select(
-        "a", "b", "o_ab",
-        F.sum("o_ab").over(w_a).alias("r_a"),
-        F.sum("o_ab").over(w_b).alias("c_b"),
-        F.sum("o_ab").over(Window.partitionBy()).alias("n"),
-    )
-    num = (
-        F.col("o_ab").cast("decimal(20,0)") * F.col("n")
-        - F.col("r_a").cast("decimal(20,0)") * F.col("c_b")
-    )
-    term = F.floor(
-        (num * num).cast("double")
-        / (F.col("r_a") * F.col("c_b") * F.col("n")).cast("double")
-        * 1000000
-    ).cast("bigint")
-    s = tot.select("a", "b", "n", term.alias("term_e6")).agg(
+    tot = _type_bucket_margins(spark, sf_dir)
+    s = tot.select("a", "b", "n", chi2_term_e6().alias("term_e6")).agg(
         F.max("n").cast("bigint").alias("n"),
         F.countDistinct("a").cast("bigint").alias("r"),
         F.countDistinct("b").cast("bigint").alias("c"),
@@ -2393,29 +2296,11 @@ def agg_contingency_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ClickHouse ``contingency(a, b)`` — Pearson's contingency
     coefficient C = sqrt(χ² / (χ² + n)), the third member of the CH
     association family (with cramersV / cramersVBiasCorrected /
-    theilsU all now covered). Reuses the micro-quantized exact-integer
-    χ² cells; the final expression is two divisions and a sqrt over
+    theilsU all now covered). Sums the shared `_util.chi2_term_e6`
+    cells; the final expression is two divisions and a sqrt over
     deterministic scalars. Plan: identical tiny-contingency shape."""
-    e = load_table(spark, sf_dir, "events")
-    o = e.groupBy(
-        F.col("event_type").alias("a"), (F.col("user_id") % 4).alias("b")
-    ).agg(F.count(F.lit(1)).alias("o_ab"))
-    tot = o.select(
-        "o_ab",
-        F.sum("o_ab").over(Window.partitionBy("a")).alias("r_a"),
-        F.sum("o_ab").over(Window.partitionBy("b")).alias("c_b"),
-        F.sum("o_ab").over(Window.partitionBy()).alias("n"),
-    )
-    num = (
-        F.col("o_ab").cast("decimal(20,0)") * F.col("n")
-        - F.col("r_a").cast("decimal(20,0)") * F.col("c_b")
-    )
-    term = F.floor(
-        (num * num).cast("double")
-        / (F.col("r_a") * F.col("c_b") * F.col("n")).cast("double")
-        * 1000000
-    ).cast("bigint")
-    s = tot.select("n", term.alias("term_e6")).agg(
+    tot = _type_bucket_margins(spark, sf_dir)
+    s = tot.select("n", chi2_term_e6().alias("term_e6")).agg(
         F.max("n").cast("bigint").alias("n"),
         F.sum("term_e6").cast("bigint").alias("chi2_e6"),
     )
@@ -2607,7 +2492,7 @@ def agg_meanztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly like CH's signature). Everything is exact int64 cent sums
     until one shared IEEE expression tree of +,-,*,/ and sqrt — all
     correctly-rounded operations, so the statistic hash-matches
-    bit-for-bit (the same recipe as agg_welch_ttest; ln/exp never
+    bit-for-bit (the `_util.two_group_moments` recipe; ln/exp never
     appear). The z quantile is a pinned literal for the same reason.
 
     Plan: ONE conditional aggregate over the scan, then a 1×1-row
@@ -3391,10 +3276,10 @@ ANOVA_GROUPS = ("click", "error", "purchase", "signup", "view")
 def _anova_sql() -> str:
     """One-way ANOVA oracle generated from ANOVA_GROUPS: per-group
     exact moment sums (cents through DECIMAL(19,0), hugeint hi/lo
-    split — the welch/skew recipe), pivoted to NAMED scalars so every
-    cross-group float sum is a FIXED left-associated expression —
-    k-group SUM() over doubles would be aggregation-order-dependent
-    and hash-unstable."""
+    split — the `_util.cents_moments` recipe), pivoted to NAMED
+    scalars so every cross-group float sum is a FIXED left-associated
+    expression — k-group SUM() over doubles would be aggregation-
+    order-dependent and hash-unstable."""
     conds = [
         (
             g,
@@ -3460,11 +3345,11 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     populations: does mean event value differ by type?
 
     Determinism contract: per-group moment sums are EXACT integers
-    (cents; squares staged through DECIMAL(19,0); hugeint hi/lo split
-    — the welch/skew recipe), and every cross-group reduction is over
-    NAMED per-group scalars in one pinned left-associated order on
-    both engines — a k-group float SUM() would be aggregation-order-
-    dependent. SSB = Σ s1_j²/n_j − G²/N and SSW = Σ s2_j − Σ s1_j²/n_j
+    (`_util.cents_moments`: cents, squares staged through
+    DECIMAL(19,0); hugeint hi/lo split), and every cross-group
+    reduction is over NAMED per-group scalars in one pinned
+    left-associated order on both engines — a k-group float SUM()
+    would be aggregation-order-dependent. SSB = Σ s1_j²/n_j − G²/N and SSW = Σ s2_j − Σ s1_j²/n_j
     then share one IEEE expression tree, so the statistic (and both
     sums of squares) hash-match bit-for-bit. The p-value is
     deliberately NOT emitted (incomplete beta — no reproducible
@@ -3478,11 +3363,7 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: ONE partial+final hash aggregate over the scan (15
     conditional sums fold map-side like any other agg) + a 1-row
     reshape — the cost is the scan at any scale."""
-    ev = load_table(spark, sf_dir, "events")
-    x = (F.col("value").cast("decimal(12,2)") * 100).cast("decimal(9,0)")
-    q = ev.select("event_type", x.alias("x"))
-    x2 = (F.col("x") * F.col("x")).cast("decimal(19,0)")
-    q = q.select("event_type", "x", x2.alias("x2"))
+    q = cents_moments(load_table(spark, sf_dir, "events"))
 
     def grp(g: str):
         c = F.col("event_type") == g
@@ -3501,26 +3382,19 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[hilo(f"r2_{g}").alias(f"s2_{g}") for g in ANOVA_GROUPS],
     )
 
-    def chain(parts):
-        out = parts[0]
-        for p in parts[1:]:
-            out = out + p
-        return out
-
     # nz() mirrors the oracle's NULLIF on every denominator (ADVICE
     # r11): empty group / empty table / zero within-variance → NULL on
     # both engines instead of an ANSI DIVIDE_BY_ZERO here and a quiet
-    # NULL there.
-    def nz(c):
-        return F.nullif(c, F.lit(0.0))
-
-    n_total = chain([F.col(f"n_{g}") for g in ANOVA_GROUPS])
-    grand = chain([F.col(f"s1_{g}") for g in ANOVA_GROUPS])
-    tsum = chain(
+    # NULL there. reduce(add) builds the oracle's left-associated
+    # a + b + c tree.
+    n_total = functools.reduce(operator.add, [F.col(f"n_{g}") for g in ANOVA_GROUPS])
+    grand = functools.reduce(operator.add, [F.col(f"s1_{g}") for g in ANOVA_GROUPS])
+    tsum = functools.reduce(
+        operator.add,
         [F.col(f"s1_{g}") * F.col(f"s1_{g}") / nz(F.col(f"n_{g}"))
-         for g in ANOVA_GROUPS]
+         for g in ANOVA_GROUPS],
     )
-    s2sum = chain([F.col(f"s2_{g}") for g in ANOVA_GROUPS])
+    s2sum = functools.reduce(operator.add, [F.col(f"s2_{g}") for g in ANOVA_GROUPS])
     k = len(ANOVA_GROUPS)
     ssb = tsum - grand * grand / nz(n_total)
     ssw = s2sum - tsum
@@ -3538,10 +3412,10 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kruskal_sql() -> str:
     """Kruskal-Wallis oracle generated from ANOVA_GROUPS: tie-averaged
     ranks doubled to stay integer on the bounded VALUE spine (the
-    mannwhitney device), per-group doubled rank sums pivoted to NAMED
-    scalars, hugeint hi/lo splits on every sum wider than 2^53, and
-    one pinned left-associated float expression tree for H and the
-    tie correction."""
+    `_util.value_rank_spine` device), per-group doubled rank sums
+    pivoted to NAMED scalars, hugeint hi/lo splits on every sum wider
+    than 2^53, and one pinned left-associated float expression tree
+    for H and the tie correction."""
     hilo = (
         "CAST(CAST(CAST({v} AS HUGEINT) // 4294967296 AS BIGINT) AS DOUBLE)"
         " * 4294967296.0"
@@ -3615,9 +3489,10 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie correction C = 1 − Σ(t³−t)/(N³−N).
 
     Determinism contract, layer by layer: tie-averaged ranks doubled
-    to stay INTEGER on the bounded value spine (the agg_mannwhitney_u
-    device — the spine is the cents domain, ≤49k rows at any data
-    size, so no row-level global window exists in the plan); per-group
+    to stay INTEGER on the bounded value spine
+    (`_util.value_rank_spine`, shared with agg_mannwhitney_u — the
+    spine is the cents domain, ≤49k rows at any data size, so no
+    row-level global window exists in the plan); per-group
     doubled rank sums and the tie sum are exact integers summed
     through hugeint/decimal(38,0); every exact-but-wide sum crosses to
     float via the SAME hi/lo 2^32 split on both engines; and all
@@ -3631,17 +3506,8 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: two value-keyed aggregates + the bounded-spine window + one
     equi-join + a 1-row reshape; the row count never touches an
-    ordered window."""
-    ev = load_table(spark, sf_dir, "events")
-    x = (F.col("value").cast("decimal(12,2)") * 100).cast("bigint")
-    q = ev.select("event_type", x.alias("x"))
-    g = q.groupBy("x", "event_type").agg(F.count(F.lit(1)).alias("m"))
-    vals = g.groupBy("x").agg(F.sum("m").cast("bigint").alias("mv"))
-    w_spine = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    spine = vals.select(
-        "x", "mv", (F.sum("mv").over(w_spine) - F.col("mv")).alias("below")
-    )
-    joined = g.join(spine, "x")
+    ordered window (`_util.value_rank_spine`)."""
+    vals, joined = value_rank_spine(load_table(spark, sf_dir, "events"))
     # per-row doubled rank contribution WIDENED to decimal(38,0) before
     # the multiply/sum (ADVICE r11): the doubled rank sum is ~N(N+1),
     # which wraps int64 past N ≈ 3e9 rows — inside the 100 TB regime —
@@ -3679,25 +3545,20 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         hilo("tie_i").alias("tie_sum"),
     )
 
-    def chain(parts):
-        out = parts[0]
-        for p in parts[1:]:
-            out = out + p
-        return out
-
     # nz() mirrors the oracle's NULLIF guards (ADVICE r11): degenerate
     # inputs (empty group / n<=1 / all-ties ⇒ C=0) → NULL on both
-    # engines instead of an ANSI DIVIDE_BY_ZERO here.
-    def nz(col):
-        return F.nullif(col, F.lit(0.0))
-
-    nd = chain([F.col(f"n_{gname}") for gname in ANOVA_GROUPS])
-    tsum = chain(
+    # engines instead of an ANSI DIVIDE_BY_ZERO here. reduce(add) builds
+    # the oracle's left-associated a + b + c tree.
+    nd = functools.reduce(
+        operator.add, [F.col(f"n_{gname}") for gname in ANOVA_GROUPS]
+    )
+    tsum = functools.reduce(
+        operator.add,
         [
             (F.col(f"r2_{gname}") / 2) * (F.col(f"r2_{gname}") / 2)
             / nz(F.col(f"n_{gname}"))
             for gname in ANOVA_GROUPS
-        ]
+        ],
     )
     k = len(ANOVA_GROUPS)
     h = F.lit(12.0) / nz(nd * (nd + 1)) * tsum - 3 * (nd + 1)
@@ -3771,7 +3632,7 @@ def agg_min_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal (MSS_C) computed offline, so neither engine evaluates a
     normal quantile at runtime.
 
-    Hash-exactness is the agg_welch_ttest recipe end to end: moments
+    Hash-exactness is the `_util.two_group_moments` recipe end to end: moments
     stay exact integers (cents through DECIMAL(10,0), squares staged
     via DECIMAL(21,0), the wide sum split hi/lo at 2³² before the
     double cast), then one IDENTICAL IEEE expression tree on both

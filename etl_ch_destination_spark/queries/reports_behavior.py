@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_ch_destination_spark.catalog import load_table
-from etl_ch_destination_spark.queries._util import hilo, nz, pos
+from etl_ch_destination_spark.queries._util import hilo, welch_se
 from etl_ch_destination_spark.registry import query
 
 
@@ -1701,12 +1701,13 @@ def rpt_ab_test_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     α=0.05 (the z critical value is a pinned literal, like MSS_C —
     no quantile function at query time).
 
-    Determinism is the agg_welch_ttest recipe on conditional sums:
+    Determinism is the `_util.two_group_moments` recipe on conditional sums:
     moments accumulate as exact integers per (metric, variant) inside
     ONE grouped aggregate (FILTER/when — no self-join, no pivot
     shuffle), wide squares staged through DECIMAL(19,0), and the
-    statistic assembles in one shared IEEE expression tree — mean,
-    lift, z and the boolean verdict all hash bit-for-bit. Note
+    statistic assembles in one shared IEEE expression tree over the
+    Welch standard error (`_util.welch_se`) — mean, lift, z and the
+    boolean verdict all hash bit-for-bit. Note
     Welch's variance form (σ²/n as m2/(n−1)) is exactly what the z
     denominator needs — the form agg_min_sample_size must NOT use
     (its gate caught that inversion).
@@ -1753,17 +1754,9 @@ def rpt_ab_test_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
             hilo("rb2").alias("sb2"),
         )
     )
-    na, nb = F.col("na"), F.col("nb")
-    sa1, sb1, sa2, sb2 = (F.col(c) for c in ("sa1", "sb1", "sa2", "sb2"))
+    na, nb, sa1, sb1 = (F.col(c) for c in ("na", "nb", "sa1", "sb1"))
     diff = sb1 / nb - sa1 / na
-    z = diff / nz(
-        F.sqrt(
-            pos(
-                (sa2 / na - (sa1 / na) * (sa1 / na)) / nz(na - 1)
-                + (sb2 / nb - (sb1 / nb) * (sb1 / nb)) / nz(nb - 1)
-            )
-        )
-    )
+    z = diff / welch_se()
     return s.select(
         "event_type",
         na.cast("bigint").alias("n_a"),

@@ -18,7 +18,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_ch_destination_spark.catalog import load_table
-from etl_ch_destination_spark.queries._util import nz, pos
+from etl_ch_destination_spark.queries._util import (
+    nation_daily_revenue,
+    nz,
+    pos,
+    supplier_window_moments,
+)
 from etl_ch_destination_spark.registry import query
 
 EMA_WIN = 16  # lookback; weights 2^0 .. 2^15 (newest highest)
@@ -961,33 +966,7 @@ def ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     are frame-equivalent under any order, so this IS total for
     the computation). Plan: single hash exchange on l_suppkey, one sort, all
     six moments from ONE window frame (no self-join)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    t = li.select(
-        "l_suppkey",
-        "l_orderkey",
-        "l_linenumber",
-        "l_shipdate",
-        F.col("l_quantity").cast("bigint").alias("x"),
-        (F.col("l_extendedprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("y"),
-    )
-    fr = (
-        Window.partitionBy("l_suppkey")
-        .orderBy("l_shipdate", "l_orderkey", "l_linenumber", "x", "y")
-        .rowsBetween(-(ROLL_CORR_ROWS - 1), 0)
-    )
-    w = t.select(
-        "l_suppkey",
-        "l_orderkey",
-        "l_linenumber",
-        F.count(F.lit(1)).over(fr).cast("bigint").alias("n"),
-        F.sum("x").over(fr).cast("bigint").alias("sx"),
-        F.sum("y").over(fr).cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).over(fr).cast("bigint").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).over(fr).cast("bigint").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).over(fr).cast("bigint").alias("sxy"),
-    )
+    w = supplier_window_moments(spark, sf_dir, ROLL_CORR_ROWS)
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     varx = n * F.col("sxx") - sx * sx
     vary = n * F.col("syy") - sy * sy
@@ -1408,30 +1387,12 @@ def ts_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     the crossover is a sign CHANGE against the previous full-window
     row (lag computed after the full-window filter on both engines).
 
-    Plan: same fact→dim join + nation×day hash aggregate as
-    win_drawdown (~25·days rows), then three window passes over the
+    Plan: the fact→dim join + nation×day hash aggregate of
+    `_util.nation_daily_revenue` (~25·days rows, shared with
+    win_drawdown), then three window passes over the
     same tiny per-nation sort (two ROWS-frame prefix-style sums + one
     lag) — the window never sees fact cardinality."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        "o_orderdate",
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
-    )
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    daily = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.col("o_orderdate").alias("day"),
-        )
-        .agg(F.sum("cents").cast("bigint").alias("rev_cents"))
-    )
+    daily = nation_daily_revenue(spark, sf_dir)
     w = Window.partitionBy("nation").orderBy("day")
     sums = daily.select(
         "nation",

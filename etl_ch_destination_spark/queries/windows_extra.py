@@ -19,7 +19,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_ch_destination_spark.catalog import load_table
-from etl_ch_destination_spark.queries._util import nz
+from etl_ch_destination_spark.queries._util import (
+    nation_daily_revenue,
+    nz,
+    supplier_window_moments,
+)
 from etl_ch_destination_spark.registry import query
 
 
@@ -300,7 +304,8 @@ def win_moving_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     {REG_WINDOW_ROWS}-row window per supplier — the WINDOWED
     counterpart of `agg_linreg` (ClickHouse simpleLinearRegression as
     a moving trend detector: slope of price-in-cents vs quantity).
-    Hash-exact by the ts_rolling_corr recipe: both series lifted to
+    Hash-exact by `_util.supplier_window_moments` (shared with
+    ts_rolling_corr): both series lifted to
     int64 (quantity integral, price in exact cents), the four moments
     as exact window sums, then slope = cov/var in ONE division and
     intercept assembled from (sy, slope, sx, n) in a fixed IEEE
@@ -311,32 +316,7 @@ def win_moving_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r7 three-SF sweep finding — see ts_rolling_corr). Plan: one l_suppkey exchange + one sort;
     all moments from a single WindowExec, regression is a scalar
     projection."""
-    li = load_table(spark, sf_dir, "lineitem")
-    t = li.select(
-        "l_suppkey",
-        "l_orderkey",
-        "l_linenumber",
-        "l_shipdate",
-        F.col("l_quantity").cast("bigint").alias("x"),
-        (F.col("l_extendedprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("y"),
-    )
-    fr = (
-        Window.partitionBy("l_suppkey")
-        .orderBy("l_shipdate", "l_orderkey", "l_linenumber", "x", "y")
-        .rowsBetween(-(REG_WINDOW_ROWS - 1), 0)
-    )
-    w = t.select(
-        "l_suppkey",
-        "l_orderkey",
-        "l_linenumber",
-        F.count(F.lit(1)).over(fr).cast("bigint").alias("n"),
-        F.sum("x").over(fr).cast("bigint").alias("sx"),
-        F.sum("y").over(fr).cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).over(fr).cast("bigint").alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).over(fr).cast("bigint").alias("sxy"),
-    )
+    w = supplier_window_moments(spark, sf_dir, REG_WINDOW_ROWS)
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     varx = n * F.col("sxx") - sx * sx
     cov = n * F.col("sxy") - sx * sy
@@ -1192,31 +1172,13 @@ def win_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     while DuckDB's `//` returns NULL — the engine-divergence class the
     repo-wide nz()/NULLIF convention exists to eliminate).
 
-    Plan: fact→dim equi-joins (nation broadcast; customer a keyed
-    shuffle AQE sizes), ONE hash aggregate to nation×day grain —
-    ~25·|days| rows regardless of fact size — then a running-max
+    Plan (`_util.nation_daily_revenue`): fact→dim equi-joins (nation
+    broadcast; customer a keyed shuffle AQE sizes), ONE hash aggregate
+    to nation×day grain — ~25·|days| rows regardless of fact size —
+    then a running-max
     window over those tiny partitions: the window never sees fact-
     table cardinality, which is what makes the shape safe at scale."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        "o_orderdate",
-        (F.col("o_totalprice").cast("decimal(12,2)") * 100)
-        .cast("bigint")
-        .alias("cents"),
-    )
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    daily = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy(
-            F.col("n_name").alias("nation"),
-            F.col("o_orderdate").alias("day"),
-        )
-        .agg(F.sum("cents").cast("bigint").alias("rev_cents"))
-    )
+    daily = nation_daily_revenue(spark, sf_dir)
     w = (
         Window.partitionBy("nation")
         .orderBy("day")

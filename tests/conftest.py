@@ -59,3 +59,44 @@ def rows_set(df, cols=None):
     """Order-insensitive row multiset as sorted tuples of strings."""
     sel = df.select(*cols) if cols else df
     return sorted(tuple(str(v) for v in r) for r in sel.collect())
+
+
+def degenerate_events_dir(rows):
+    """A temp dir holding events.parquet built from (event_id, ts,
+    user_id, event_type, value, props) tuples."""
+    # single FILE like the driver fixture (catalog.load_table sniffs
+    # the events footer with the single-file layout)
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = tempfile.mkdtemp(prefix="degenerate_events")
+    tbl = pa.table(
+        {
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": pa.array([r[3] for r in rows], pa.string()),
+            "value": pa.array([r[4] for r in rows], pa.float64()),
+            "props": pa.array([r[5] for r in rows], pa.string()),
+        }
+    )
+    pq.write_table(tbl, os.path.join(tmp, "events.parquet"))
+    return tmp
+
+
+def oracle_rows(key, sf_dir):
+    """DuckDB oracle rows of key `agg_<key>` over `sf_dir`'s events."""
+    import duckdb
+
+    from etl_ch_destination_spark.registry import all_oracles
+
+    con = duckdb.connect()
+    path = os.path.join(sf_dir, "events.parquet")
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')"
+    )
+    out = con.execute(all_oracles()["agg_" + key]).fetchall()
+    con.close()
+    return out

@@ -1,12 +1,17 @@
-"""Semantic gates for the round-4 ClickHouse aggregate signatures
+"""Semantic gates for the ClickHouse aggregate signatures
 (queries/aggregations_ch.py): uniqUpTo saturation, topKWeighted
-ranking vs a Python reference, deltaSum vs a sequential replay."""
+ranking vs a Python reference, deltaSum vs a sequential replay; and
+the exact-statistics family built on queries/_util's recipes — the
+two-sample t tests, the χ² association keys, ANOVA and Kruskal-Wallis
+against Python replays, identities and degenerate inputs."""
 
 from __future__ import annotations
 
 import math
 
 from pyspark.sql import functions as F
+
+from tests.conftest import degenerate_events_dir, oracle_rows
 
 
 def test_uniq_upto_caps_against_exact(spark, sf_dir):
@@ -357,3 +362,257 @@ def test_cms_reader_roundtrip_and_guards(spark, sf_dir):
         out = agg_heavy_hitters_cms(spark, td)
         assert out.columns == ["user_id", "true_n", "est_n", "overcount"]
         assert out.count() == 0
+
+
+# --- exact-statistics family: two-sample t, association, ANOVA/KW ---
+
+
+def test_chi2_cells_do_not_wrap_int64_at_1e10_events(spark):
+    """The shared χ² cell on a 2×2 table holding 1.5e10 events: o·n and
+    r·c reach 8.1e19 and r·c·n 1.2e30, past int64 (an int64 product
+    throws ARITHMETIC_OVERFLOW under ANSI). Widened to decimal(38,0),
+    every term equals a Python replay of the same IEEE steps: exact
+    integers, one rounding each to double, one division, floor."""
+    from etl_ch_destination_spark.queries._util import (
+        chi2_term_e6,
+        contingency_margins,
+    )
+
+    g = 10**9
+    cells = [(0, 0, 3 * g), (0, 1, 3 * g), (1, 0, 6 * g), (1, 1, 3 * g)]
+    o = spark.createDataFrame(cells, "a int, b int, o_ab bigint")
+    terms = contingency_margins(o).select(chi2_term_e6().alias("t"))
+    got = sorted(r.t for r in terms.collect())
+
+    n = sum(c for _, _, c in cells)
+    r = {a: sum(c for x, _, c in cells if x == a) for a in (0, 1)}
+    col = {b: sum(c for _, y, c in cells if y == b) for b in (0, 1)}
+    want = sorted(
+        math.floor(float((o_ab * n - r[a] * col[b]) ** 2)
+                   / float(r[a] * col[b] * n) * 1000000)
+        for a, b, o_ab in cells
+    )
+    assert got == want == [
+        66666666666666, 99999999999999, 99999999999999, 150000000000000
+    ]
+
+
+def test_student_ttest_matches_python_replay(spark, sf_dir):
+    """agg_student_ttest vs a textbook pooled-variance replay on the
+    collected cents values (statistics.stdev-free: exact integer
+    moments in Python, one float expression at the end)."""
+    from etl_ch_destination_spark.catalog import load_table
+    from etl_ch_destination_spark.queries.aggregations_ch import (
+        TT_GROUP_A,
+        TT_GROUP_B,
+        agg_student_ttest,
+    )
+
+    r = agg_student_ttest(spark, sf_dir).collect()[0]
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("event_type").isin(TT_GROUP_A, TT_GROUP_B)
+    )
+    rows = ev.select(
+        "event_type",
+        (F.col("value").cast("decimal(12,2)") * 100).cast("long").alias("x"),
+    ).collect()
+    xa = [row.x for row in rows if row.event_type == TT_GROUP_A]
+    xb = [row.x for row in rows if row.event_type == TT_GROUP_B]
+    na, nb = len(xa), len(xb)
+    assert (r.n_a, r.n_b, r.dof) == (na, nb, na + nb - 2)
+    sa1, sa2 = sum(xa), sum(v * v for v in xa)
+    sb1, sb2 = sum(xb), sum(v * v for v in xb)
+    ssq = (sa2 - sa1 / na * sa1) + (sb2 - sb1 / nb * sb1)
+    t = (sa1 / na - sb1 / nb) / (
+        (ssq / (na + nb - 2) * (1 / na + 1 / nb)) ** 0.5
+    )
+    assert abs(r.student_t - t) <= 1e-9 * max(1.0, abs(t))
+
+
+def test_association_family_consistent(spark, sf_dir):
+    """theilsU / cramersVBiasCorrected / contingency over the same
+    contingency table: all in [0, 1], bias-corrected V <= raw V, and
+    the chi-squared intermediates agree across the family."""
+    from etl_ch_destination_spark.queries.aggregations_ch import (
+        agg_contingency_coef,
+        agg_cramers_v,
+        agg_cramers_v_bc,
+        agg_theils_u,
+    )
+
+    u = agg_theils_u(spark, sf_dir).collect()[0]
+    assert 0.0 <= u["theils_u_bits"] <= 1.0
+    assert u["sx_bits"] >= u["sxy_bits"] >= 0
+
+    v_bc = agg_cramers_v_bc(spark, sf_dir).collect()[0]
+    v = agg_cramers_v(spark, sf_dir).collect()[0]
+    c = agg_contingency_coef(spark, sf_dir).collect()[0]
+    assert 0.0 <= v_bc["cramers_v_bc"] <= 1.0
+    assert 0.0 <= c["contingency_c"] <= 1.0
+    assert v_bc["cramers_v_bc"] <= v["cramers_v"] + 1e-12
+    assert v_bc["chi2_e6"] == v["chi2_e6"] == c["chi2_e6"]
+    assert v_bc["n"] == u["n"] == c["n"]
+
+
+def test_theils_u_marginal_sum_identity(spark, sf_dir):
+    """Sx must equal the true marginal surprisal sum Σ_a r_a·bits(n div
+    r_a) — replayed driver-side from the raw contingency table (the
+    first form summed per-row-class via a min-column guard, which
+    silently drops marginals on sparse tables; the cell-wise identity
+    form cannot)."""
+    from etl_ch_destination_spark.catalog import load_table
+    from etl_ch_destination_spark.queries.aggregations_ch import agg_theils_u
+
+    e = load_table(spark, sf_dir, "events")
+    cells = (
+        e.groupBy(F.col("event_type").alias("a"), (F.col("user_id") % 4).alias("b"))
+        .agg(F.count(F.lit(1)).alias("o_ab"))
+        .collect()
+    )
+    n = sum(r["o_ab"] for r in cells)
+    r_a: dict = {}
+    for r in cells:
+        r_a[r["a"]] = r_a.get(r["a"], 0) + r["o_ab"]
+    want_sx = sum(ra * ((n // ra).bit_length() - 1) for ra in r_a.values())
+    got = agg_theils_u(spark, sf_dir).collect()[0]
+    assert got["sx_bits"] == want_sx
+    assert got["n"] == n
+
+
+def test_anova_oneway_matches_numpy_reference(spark, sf_dir):
+    """The ANOVA F statistic must match a float64 numpy re-derivation
+    from the same exact cents to ~1e-12 relative (the engines share
+    one pinned expression tree; numpy associates differently, hence a
+    tolerance rather than hex), with the classic identities: SSB ≥ 0,
+    SSW > 0, and SSB + SSW = total sum of squares."""
+    import numpy as np
+
+    from etl_ch_destination_spark.queries.aggregations_ch import (
+        ANOVA_GROUPS,
+        agg_anova_oneway,
+    )
+
+    row = agg_anova_oneway(spark, sf_dir).collect()[0]
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        "event_type",
+        (F.col("value").cast("decimal(12,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    groups = {
+        g: np.array(
+            [r["cents"] for r in ev.filter(F.col("event_type") == g).collect()],
+            dtype=np.float64,
+        )
+        for g in ANOVA_GROUPS
+    }
+    allv = np.concatenate(list(groups.values()))
+    n, k = len(allv), len(groups)
+    ssb = sum(len(v) * (v.mean() - allv.mean()) ** 2 for v in groups.values())
+    ssw = sum(((v - v.mean()) ** 2).sum() for v in groups.values())
+    f_ref = (ssb / (k - 1)) / (ssw / (n - k))
+    assert row["k"] == k and row["n_total"] == n
+    assert row["ss_between"] >= 0 and row["ss_within"] > 0
+    assert abs(row["f_stat"] - f_ref) <= 1e-9 * max(1.0, abs(f_ref))
+    total = ((allv - allv.mean()) ** 2).sum()
+    assert abs((row["ss_between"] + row["ss_within"]) - total) <= 1e-6 * total
+
+
+def test_kruskal_wallis_matches_scipy_style_reference(spark, sf_dir):
+    """H (tie-corrected) must match a from-scratch float64 rank-based
+    re-derivation (average ranks over the pooled sample) to ~1e-9
+    relative, with 0 < C <= 1 and H >= 0."""
+    import numpy as np
+
+    from etl_ch_destination_spark.queries.aggregations_ch import (
+        ANOVA_GROUPS,
+        agg_kruskal_wallis,
+    )
+
+    row = agg_kruskal_wallis(spark, sf_dir).collect()[0]
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        "event_type",
+        (F.col("value").cast("decimal(12,2)") * 100)
+        .cast("long")
+        .alias("cents"),
+    )
+    data = [(r["event_type"], r["cents"]) for r in ev.collect()]
+    allv = np.array([c for _, c in data], dtype=np.float64)
+    order = np.argsort(allv, kind="mergesort")
+    ranks = np.empty(len(allv))
+    sorted_v = allv[order]
+    i = 0
+    while i < len(sorted_v):
+        j = i
+        while j + 1 < len(sorted_v) and sorted_v[j + 1] == sorted_v[i]:
+            j += 1
+        ranks[order[i : j + 1]] = (i + j) / 2.0 + 1.0
+        i = j + 1
+    n = len(allv)
+    # ranks is row-aligned (the tie loop wrote through `order`)
+    by_g: dict[str, list[float]] = {}
+    for idx, (g, _) in enumerate(data):
+        by_g.setdefault(g, []).append(ranks[idx])
+    h = 12.0 / (n * (n + 1)) * sum(
+        (np.sum(v)) ** 2 / len(v) for v in map(np.array, by_g.values())
+    ) - 3 * (n + 1)
+    _, counts = np.unique(allv, return_counts=True)
+    c = 1 - np.sum(counts.astype(np.float64) ** 3 - counts) / (
+        float(n) ** 3 - n
+    )
+    assert set(by_g) == set(ANOVA_GROUPS)
+    assert row["k"] == len(ANOVA_GROUPS) and row["n_total"] == n
+    assert 0 < row["tie_correction"] <= 1
+    assert row["h_stat"] >= 0
+    assert abs(row["tie_correction"] - c) <= 1e-9
+    ref = h / c
+    assert abs(row["h_corrected"] - ref) <= 1e-9 * max(1.0, abs(ref))
+
+
+def test_stats_keys_degenerate_inputs_null_on_both_engines(spark):
+    """ADVICE r11: empty groups / all-tied values are exactly the
+    inputs the fixture never exercises — unguarded, ANSI Spark throws
+    DIVIDE_BY_ZERO while DuckDB quietly emits NULL. With the NULLIF
+    guards both engines must return the SAME row, NULLs included."""
+    import datetime as dt
+
+    from etl_ch_destination_spark.queries.aggregations_ch import (
+        agg_anova_oneway,
+        agg_kruskal_wallis,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+
+    # Case 1: only two of the five groups present (empty groups), all
+    # values IDENTICAL (zero within-variance, C = 0).
+    tied = degenerate_events_dir(
+        [
+            (1, t0, 1, "click", 5.0, "{}"),
+            (2, t0, 2, "click", 5.0, "{}"),
+            (3, t0, 3, "view", 5.0, "{}"),
+        ],
+    )
+    for key, fn in (("anova_oneway", agg_anova_oneway),
+                    ("kruskal_wallis", agg_kruskal_wallis)):
+        got = [tuple(r) for r in fn(spark, tied).collect()]
+        want = oracle_rows(key, tied)
+        assert got == want, (key, got, want)
+        # the degenerate statistic itself must be NULL, not Inf/NaN
+        assert got[0][-1] is None, (key, got)
+
+    # Case 2: all five groups present, all values tied — isolates the
+    # C=0 tie-correction path with every per-group term well-defined.
+    all_groups_tied = degenerate_events_dir(
+        [
+            (i, t0, i, g, 7.0, "{}")
+            for i, g in enumerate(
+                ["click", "error", "purchase", "signup", "view"] * 2
+            )
+        ],
+    )
+    got = [tuple(r) for r in agg_kruskal_wallis(spark, all_groups_tied).collect()]
+    want = oracle_rows("kruskal_wallis", all_groups_tied)
+    assert got == want, (got, want)
+    row = got[0]
+    assert row[3] == 0.0   # tie_correction C = 0 when every value ties
+    assert row[4] is None  # h_corrected = H/0 -> NULL on both engines

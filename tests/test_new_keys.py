@@ -169,38 +169,6 @@ def test_batch_etl_report_matches_source_totals(spark, sf_dir):
     assert got == want
 
 
-def test_student_ttest_matches_python_replay(spark, sf_dir):
-    """agg_student_ttest vs a textbook pooled-variance replay on the
-    collected cents values (statistics.stdev-free: exact integer
-    moments in Python, one float expression at the end)."""
-    from etl_ch_destination_spark.catalog import load_table
-    from etl_ch_destination_spark.queries.aggregations_ch import (
-        TT_GROUP_A,
-        TT_GROUP_B,
-        agg_student_ttest,
-    )
-
-    r = agg_student_ttest(spark, sf_dir).collect()[0]
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin(TT_GROUP_A, TT_GROUP_B)
-    )
-    rows = ev.select(
-        "event_type",
-        (F.col("value").cast("decimal(12,2)") * 100).cast("long").alias("x"),
-    ).collect()
-    xa = [row.x for row in rows if row.event_type == TT_GROUP_A]
-    xb = [row.x for row in rows if row.event_type == TT_GROUP_B]
-    na, nb = len(xa), len(xb)
-    assert (r.n_a, r.n_b, r.dof) == (na, nb, na + nb - 2)
-    sa1, sa2 = sum(xa), sum(v * v for v in xa)
-    sb1, sb2 = sum(xb), sum(v * v for v in xb)
-    ssq = (sa2 - sa1 / na * sa1) + (sb2 - sb1 / nb * sb1)
-    t = (sa1 / na - sb1 / nb) / (
-        (ssq / (na + nb - 2) * (1 / na + 1 / nb)) ** 0.5
-    )
-    assert abs(r.student_t - t) <= 1e-9 * max(1.0, abs(t))
-
-
 def test_ks_test_matches_brute_force_ecdf(spark, sf_dir):
     """agg_ks_test's cross-multiplied integer D numerator must equal a
     brute-force ECDF max-difference replay exactly."""

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import degenerate_events_dir, oracle_rows
+
 
 def test_triangle_approx_within_20pct_of_exact(spark, sf_dir):
     """DOULION (Tsourakakis et al., KDD'09) with p=1/4 is unbiased with
@@ -332,186 +334,6 @@ def test_week_modes_known_dates(spark):
     }
 
 
-def test_anova_oneway_matches_numpy_reference(spark, sf_dir):
-    """The ANOVA F statistic must match a float64 numpy re-derivation
-    from the same exact cents to ~1e-12 relative (the engines share
-    one pinned expression tree; numpy associates differently, hence a
-    tolerance rather than hex), with the classic identities: SSB ≥ 0,
-    SSW > 0, and SSB + SSW = total sum of squares."""
-    import numpy as np
-
-    from etl_ch_destination_spark.queries.aggregations_ch import (
-        ANOVA_GROUPS,
-        agg_anova_oneway,
-    )
-
-    row = agg_anova_oneway(spark, sf_dir).collect()[0]
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        (F.col("value").cast("decimal(12,2)") * 100)
-        .cast("long")
-        .alias("cents"),
-    )
-    groups = {
-        g: np.array(
-            [r["cents"] for r in ev.filter(F.col("event_type") == g).collect()],
-            dtype=np.float64,
-        )
-        for g in ANOVA_GROUPS
-    }
-    allv = np.concatenate(list(groups.values()))
-    n, k = len(allv), len(groups)
-    ssb = sum(len(v) * (v.mean() - allv.mean()) ** 2 for v in groups.values())
-    ssw = sum(((v - v.mean()) ** 2).sum() for v in groups.values())
-    f_ref = (ssb / (k - 1)) / (ssw / (n - k))
-    assert row["k"] == k and row["n_total"] == n
-    assert row["ss_between"] >= 0 and row["ss_within"] > 0
-    assert abs(row["f_stat"] - f_ref) <= 1e-9 * max(1.0, abs(f_ref))
-    total = ((allv - allv.mean()) ** 2).sum()
-    assert abs((row["ss_between"] + row["ss_within"]) - total) <= 1e-6 * total
-
-
-def test_kruskal_wallis_matches_scipy_style_reference(spark, sf_dir):
-    """H (tie-corrected) must match a from-scratch float64 rank-based
-    re-derivation (average ranks over the pooled sample) to ~1e-9
-    relative, with 0 < C <= 1 and H >= 0."""
-    import numpy as np
-
-    from etl_ch_destination_spark.queries.aggregations_ch import (
-        ANOVA_GROUPS,
-        agg_kruskal_wallis,
-    )
-
-    row = agg_kruskal_wallis(spark, sf_dir).collect()[0]
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_type",
-        (F.col("value").cast("decimal(12,2)") * 100)
-        .cast("long")
-        .alias("cents"),
-    )
-    data = [(r["event_type"], r["cents"]) for r in ev.collect()]
-    allv = np.array([c for _, c in data], dtype=np.float64)
-    order = np.argsort(allv, kind="mergesort")
-    ranks = np.empty(len(allv))
-    sorted_v = allv[order]
-    i = 0
-    while i < len(sorted_v):
-        j = i
-        while j + 1 < len(sorted_v) and sorted_v[j + 1] == sorted_v[i]:
-            j += 1
-        ranks[order[i : j + 1]] = (i + j) / 2.0 + 1.0
-        i = j + 1
-    n = len(allv)
-    # ranks is row-aligned (the tie loop wrote through `order`)
-    by_g: dict[str, list[float]] = {}
-    for idx, (g, _) in enumerate(data):
-        by_g.setdefault(g, []).append(ranks[idx])
-    h = 12.0 / (n * (n + 1)) * sum(
-        (np.sum(v)) ** 2 / len(v) for v in map(np.array, by_g.values())
-    ) - 3 * (n + 1)
-    _, counts = np.unique(allv, return_counts=True)
-    c = 1 - np.sum(counts.astype(np.float64) ** 3 - counts) / (
-        float(n) ** 3 - n
-    )
-    assert set(by_g) == set(ANOVA_GROUPS)
-    assert row["k"] == len(ANOVA_GROUPS) and row["n_total"] == n
-    assert 0 < row["tie_correction"] <= 1
-    assert row["h_stat"] >= 0
-    assert abs(row["tie_correction"] - c) <= 1e-9
-    ref = h / c
-    assert abs(row["h_corrected"] - ref) <= 1e-9 * max(1.0, abs(ref))
-
-
-def _degenerate_events_dir(rows):
-    # single FILE like the driver fixture (catalog.load_table sniffs
-    # the events footer with the single-file layout)
-    import os
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    tmp = tempfile.mkdtemp(prefix="degenerate_events")
-    tbl = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([r[4] for r in rows], pa.float64()),
-            "props": pa.array([r[5] for r in rows], pa.string()),
-        }
-    )
-    pq.write_table(tbl, os.path.join(tmp, "events.parquet"))
-    return tmp
-
-
-def _oracle_rows(key, sf_dir):
-    import os
-
-    import duckdb
-
-    from etl_ch_destination_spark.registry import all_oracles
-
-    con = duckdb.connect()
-    path = os.path.join(sf_dir, "events.parquet")
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')"
-    )
-    out = con.execute(all_oracles()["agg_" + key]).fetchall()
-    con.close()
-    return out
-
-
-def test_stats_keys_degenerate_inputs_null_on_both_engines(spark):
-    """ADVICE r11: empty groups / all-tied values are exactly the
-    inputs the fixture never exercises — unguarded, ANSI Spark throws
-    DIVIDE_BY_ZERO while DuckDB quietly emits NULL. With the NULLIF
-    guards both engines must return the SAME row, NULLs included."""
-    import datetime as dt
-
-    from etl_ch_destination_spark.queries.aggregations_ch import (
-        agg_anova_oneway,
-        agg_kruskal_wallis,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    # Case 1: only two of the five groups present (empty groups), all
-    # values IDENTICAL (zero within-variance, C = 0).
-    tied = _degenerate_events_dir(
-        [
-            (1, t0, 1, "click", 5.0, "{}"),
-            (2, t0, 2, "click", 5.0, "{}"),
-            (3, t0, 3, "view", 5.0, "{}"),
-        ],
-    )
-    for key, fn in (("anova_oneway", agg_anova_oneway),
-                    ("kruskal_wallis", agg_kruskal_wallis)):
-        got = [tuple(r) for r in fn(spark, tied).collect()]
-        want = _oracle_rows(key, tied)
-        assert got == want, (key, got, want)
-        # the degenerate statistic itself must be NULL, not Inf/NaN
-        assert got[0][-1] is None, (key, got)
-
-    # Case 2: all five groups present, all values tied — isolates the
-    # C=0 tie-correction path with every per-group term well-defined.
-    all_groups_tied = _degenerate_events_dir(
-        [
-            (i, t0, i, g, 7.0, "{}")
-            for i, g in enumerate(
-                ["click", "error", "purchase", "signup", "view"] * 2
-            )
-        ],
-    )
-    got = [tuple(r) for r in agg_kruskal_wallis(spark, all_groups_tied).collect()]
-    want = _oracle_rows("kruskal_wallis", all_groups_tied)
-    assert got == want, (got, want)
-    row = got[0]
-    assert row[3] == 0.0   # tie_correction C = 0 when every value ties
-    assert row[4] is None  # h_corrected = H/0 -> NULL on both engines
-
-
 def test_two_sample_keys_degenerate_inputs_null_on_both_engines(spark):
     """Round-12 generalization of the ADVICE r11 guard pass: the
     two-sample stats keys (welch/student t, KS) on a fixture with
@@ -526,7 +348,7 @@ def test_two_sample_keys_degenerate_inputs_null_on_both_engines(spark):
     )
 
     t0 = dt.datetime(2024, 1, 1)
-    tied = _degenerate_events_dir(
+    tied = degenerate_events_dir(
         [
             (1, t0, 1, "purchase", 3.0, "{}"),
             (2, t0, 2, "purchase", 3.0, "{}"),
@@ -537,7 +359,7 @@ def test_two_sample_keys_degenerate_inputs_null_on_both_engines(spark):
     for key, fn in (("welch_ttest", agg_welch_ttest),
                     ("student_ttest", agg_student_ttest)):
         got = [tuple(r) for r in fn(spark, tied).collect()]
-        want = _oracle_rows(key, tied)
+        want = oracle_rows(key, tied)
         assert got == want, (key, got, want)
         assert got[0][-1] is None, (key, got)  # statistic NULL, not Inf
 
@@ -566,11 +388,11 @@ def test_two_sample_keys_negative_rounded_variance_clamped(spark):
         rows.append((i, t0, i, "purchase", big, "{}"))
     for i in range(3, 6):
         rows.append((i, t0, i, "view", 7.0, "{}"))
-    d = _degenerate_events_dir(rows)
+    d = degenerate_events_dir(rows)
     for key, fn in (("welch_ttest", agg_welch_ttest),
                     ("student_ttest", agg_student_ttest)):
         got = [tuple(r) for r in fn(spark, d).collect()]
-        want = _oracle_rows(key, d)
+        want = oracle_rows(key, d)
         assert got == want, (key, got, want)
         stat = got[0][-1]
         assert stat is None or stat == stat, (key, got)  # never NaN

@@ -280,24 +280,6 @@ def test_textrank_mass_and_order(spark, sf_dir):
     assert rows[0]["rank"] == fps[0] / TR_SCALE
 
 
-def test_association_family_consistent(spark, sf_dir):
-    """theilsU / cramersVBiasCorrected / contingency over the same
-    contingency table: all in [0, 1], bias-corrected V <= raw V, and
-    the chi-squared intermediates agree across the family."""
-    u = _q("agg_theils_u", spark, sf_dir).collect()[0]
-    assert 0.0 <= u["theils_u_bits"] <= 1.0
-    assert u["sx_bits"] >= u["sxy_bits"] >= 0
-
-    v_bc = _q("agg_cramers_v_bc", spark, sf_dir).collect()[0]
-    v = _q("agg_cramers_v", spark, sf_dir).collect()[0]
-    c = _q("agg_contingency_coef", spark, sf_dir).collect()[0]
-    assert 0.0 <= v_bc["cramers_v_bc"] <= 1.0
-    assert 0.0 <= c["contingency_c"] <= 1.0
-    assert v_bc["cramers_v_bc"] <= v["cramers_v"] + 1e-12
-    assert v_bc["chi2_e6"] == v["chi2_e6"] == c["chi2_e6"]
-    assert v_bc["n"] == u["n"] == c["n"]
-
-
 def test_group_sample_caps_and_is_stable(spark, sf_dir):
     from etl_ch_destination_spark.queries.aggregations_ch import (
         GROUP_SAMPLE_K,
@@ -392,30 +374,6 @@ def test_tz_convert_offsets(spark, sf_dir):
         | (us("ny_ts") - us("ts") != -5 * 3600 * 1_000_000)
     ).count()
     assert bad == 0
-
-
-def test_theils_u_marginal_sum_identity(spark, sf_dir):
-    """Sx must equal the true marginal surprisal sum Σ_a r_a·bits(n div
-    r_a) — replayed driver-side from the raw contingency table (the
-    first form summed per-row-class via a min-column guard, which
-    silently drops marginals on sparse tables; the cell-wise identity
-    form cannot)."""
-    from etl_ch_destination_spark.catalog import load_table
-
-    e = load_table(spark, sf_dir, "events")
-    cells = (
-        e.groupBy(F.col("event_type").alias("a"), (F.col("user_id") % 4).alias("b"))
-        .agg(F.count(F.lit(1)).alias("o_ab"))
-        .collect()
-    )
-    n = sum(r["o_ab"] for r in cells)
-    r_a: dict = {}
-    for r in cells:
-        r_a[r["a"]] = r_a.get(r["a"], 0) + r["o_ab"]
-    want_sx = sum(ra * ((n // ra).bit_length() - 1) for ra in r_a.values())
-    got = _q("agg_theils_u", spark, sf_dir).collect()[0]
-    assert got["sx_bits"] == want_sx
-    assert got["n"] == n
 
 
 def test_prefix_dedup_groups_consistent(spark, sf_dir):

@@ -604,3 +604,20 @@ def test_post_blocks_ordinal_salt_preserves_duplicate_blocks(spark):
     assert sorted(r["token"] for r in salted_again) == sorted(
         r["token"] for r in salted
     )
+
+
+def test_scratch_root_sits_beside_the_package(monkeypatch, tmp_path):
+    """Without SPARK_GRAFT_SCRATCH the scratch root is the `.scratch`
+    beside this checkout's package, so a copy of the tree never stages
+    into another copy; the variable still wins when set."""
+    import os
+
+    import etl_ch_destination_spark
+    from etl_ch_destination_spark.catalog import scratch_dir
+
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH", raising=False)
+    pkg = os.path.dirname(os.path.abspath(etl_ch_destination_spark.__file__))
+    assert scratch_dir() == os.path.join(os.path.dirname(pkg), ".scratch")
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    assert scratch_dir("sub") == os.path.join(str(tmp_path), "sub")
