@@ -16,11 +16,9 @@ kept small so neither engine overflows 38 digits mid-expression.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-from etl_ch_destination_spark.catalog import load_table
 
 # Tight decimal shapes for the fixture money columns (FIXTURES.md domains).
 MONEY = "decimal(12,2)"  # prices, account balances
@@ -199,11 +197,17 @@ def contingency_margins(o: DataFrame) -> DataFrame:
 def chi2_term_e6() -> Column:
     """One cell's χ² term (o·n − r·c)² / (r·c·n), floored to millionths,
     over the `contingency_margins` columns. Every factor is widened to
-    decimal(38,0) before it multiplies, so neither product wraps int64
-    (o·n and r·c·n pass 2^63 near 10^10 events); the exact numerator and
-    denominator each round once to double, then one division and a
-    floor make the term an integer — the cell SUM is order-insensitive
-    where a raw double sum would drift."""
+    decimal(38,0) before it multiplies, so no product wraps int64 (for
+    the 5 × 4 event_type × bucket table r·c·n passes 2^63 near 6·10^6
+    events, o·n near 10^10); the exact numerator and denominator each
+    round once to double, then one division and a floor make the term
+    an integer — the cell SUM is order-insensitive where a raw double
+    sum would drift.
+
+    Remaining ceiling: the square stays decimal(38,0), so it needs
+    |o·n − r·c| < 10^19. A strongly associated table passes that near
+    10^10 events and then throws NUMERIC_VALUE_OUT_OF_RANGE under ANSI
+    (never a silently wrong term); r·c·n itself fits up to ~10^13."""
     o_ab, r_a, c_b, n = (
         F.col(c).cast("decimal(38,0)") for c in ("o_ab", "r_a", "c_b", "n")
     )
@@ -252,15 +256,14 @@ def returnflag_metric_rows(li: DataFrame) -> DataFrame:
     return m.select("l_returnflag", F.explode("__m").alias("metric", "__v"))
 
 
-def supplier_window_moments(spark: SparkSession, sf_dir: str, rows: int) -> DataFrame:
+def supplier_window_moments(li: DataFrame, rows: int) -> DataFrame:
     """(l_suppkey, l_orderkey, l_linenumber, n, sx, sy, sxx, syy, sxy):
-    exact int64 moments of x = quantity and y = price in cents over a
-    trailing `rows`-row frame per supplier. The frame order ends in
+    exact int64 moments of lineitem's x = quantity and y = price in
+    cents over a trailing `rows`-row frame per supplier. The frame order ends in
     (x, y), so the one duplicate (suppkey, shipdate, orderkey,
     linenumber) tuple at sf0.1 cannot order differently on the two
     engines; fully tied rows are frame-equivalent. One l_suppkey
     exchange, one sort, one WindowExec."""
-    li = load_table(spark, sf_dir, "lineitem")
     t = li.select(
         "l_suppkey",
         "l_orderkey",
@@ -289,20 +292,22 @@ def supplier_window_moments(spark: SparkSession, sf_dir: str, rows: int) -> Data
     )
 
 
-def nation_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+def nation_daily_revenue(
+    orders: DataFrame, customer: DataFrame, nation: DataFrame
+) -> DataFrame:
     """(nation, day, rev_cents): order revenue in exact cents per
     customer nation and order date. Fact→dim equi-joins (nation
     broadcast), then ONE hash aggregate to ~25·|days| rows — any window
     over the result never sees fact-table cardinality."""
-    o = load_table(spark, sf_dir, "orders").select(
+    o = orders.select(
         "o_custkey",
         "o_orderdate",
         (F.col("o_totalprice").cast("decimal(12,2)") * 100)
         .cast("bigint")
         .alias("cents"),
     )
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    c = customer.select("c_custkey", "c_nationkey")
+    n = nation.select("n_nationkey", "n_name")
     return (
         o.join(c, o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))

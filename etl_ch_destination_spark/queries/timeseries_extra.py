@@ -966,7 +966,9 @@ def ts_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     are frame-equivalent under any order, so this IS total for
     the computation). Plan: single hash exchange on l_suppkey, one sort, all
     six moments from ONE window frame (no self-join)."""
-    w = supplier_window_moments(spark, sf_dir, ROLL_CORR_ROWS)
+    w = supplier_window_moments(
+        load_table(spark, sf_dir, "lineitem"), ROLL_CORR_ROWS
+    )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     varx = n * F.col("sxx") - sx * sx
     vary = n * F.col("syy") - sy * sy
@@ -1392,7 +1394,11 @@ def ts_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     win_drawdown), then three window passes over the
     same tiny per-nation sort (two ROWS-frame prefix-style sums + one
     lag) — the window never sees fact cardinality."""
-    daily = nation_daily_revenue(spark, sf_dir)
+    daily = nation_daily_revenue(
+        load_table(spark, sf_dir, "orders"),
+        load_table(spark, sf_dir, "customer"),
+        load_table(spark, sf_dir, "nation"),
+    )
     w = Window.partitionBy("nation").orderBy("day")
     sums = daily.select(
         "nation",

@@ -316,7 +316,9 @@ def win_moving_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r7 three-SF sweep finding — see ts_rolling_corr). Plan: one l_suppkey exchange + one sort;
     all moments from a single WindowExec, regression is a scalar
     projection."""
-    w = supplier_window_moments(spark, sf_dir, REG_WINDOW_ROWS)
+    w = supplier_window_moments(
+        load_table(spark, sf_dir, "lineitem"), REG_WINDOW_ROWS
+    )
     n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
     varx = n * F.col("sxx") - sx * sx
     cov = n * F.col("sxy") - sx * sy
@@ -1178,7 +1180,11 @@ def win_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a running-max
     window over those tiny partitions: the window never sees fact-
     table cardinality, which is what makes the shape safe at scale."""
-    daily = nation_daily_revenue(spark, sf_dir)
+    daily = nation_daily_revenue(
+        load_table(spark, sf_dir, "orders"),
+        load_table(spark, sf_dir, "customer"),
+        load_table(spark, sf_dir, "nation"),
+    )
     w = (
         Window.partitionBy("nation")
         .orderBy("day")

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import degenerate_events_dir, oracle_rows
@@ -368,11 +369,13 @@ def test_cms_reader_roundtrip_and_guards(spark, sf_dir):
 
 
 def test_chi2_cells_do_not_wrap_int64_at_1e10_events(spark):
-    """The shared χ² cell on a 2×2 table holding 1.5e10 events: o·n and
-    r·c reach 8.1e19 and r·c·n 1.2e30, past int64 (an int64 product
-    throws ARITHMETIC_OVERFLOW under ANSI). Widened to decimal(38,0),
-    every term equals a Python replay of the same IEEE steps: exact
-    integers, one rounding each to double, one division, floor."""
+    """The shared χ² cell on a 2×2 table holding 1.5e10 events: o·n
+    reaches 9e19, r·c 8.1e19 and r·c·n 1.2e30, past int64 (an int64
+    product throws ARITHMETIC_OVERFLOW under ANSI). Widened to
+    decimal(38,0), every term equals a Python replay of the same IEEE
+    steps: exact integers, one rounding each to double, one division,
+    floor. The largest square, 8.1e37, sits below the 10^38 ceiling
+    that the next test crosses."""
     from etl_ch_destination_spark.queries._util import (
         chi2_term_e6,
         contingency_margins,
@@ -395,6 +398,25 @@ def test_chi2_cells_do_not_wrap_int64_at_1e10_events(spark):
     assert got == want == [
         66666666666666, 99999999999999, 99999999999999, 150000000000000
     ]
+
+
+def test_chi2_cell_past_decimal38_square_throws(spark):
+    """The shared χ² cell's remaining ceiling: the square stays
+    decimal(38,0), so it needs |o·n − r·c| < 10^19. The 1.5e10-event
+    table 6e9, 1.5e9, 1.5e9, 6e9 has o·n − r·c = 3.375e19 and a square
+    of 1.1e39; the cell throws NUMERIC_VALUE_OUT_OF_RANGE under ANSI
+    instead of returning a wrong term."""
+    from etl_ch_destination_spark.queries._util import (
+        chi2_term_e6,
+        contingency_margins,
+    )
+
+    g = 10**9 // 2
+    cells = [(0, 0, 12 * g), (0, 1, 3 * g), (1, 0, 3 * g), (1, 1, 12 * g)]
+    o = spark.createDataFrame(cells, "a int, b int, o_ab bigint")
+    terms = contingency_margins(o).select(chi2_term_e6().alias("t"))
+    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+        terms.collect()
 
 
 def test_student_ttest_matches_python_replay(spark, sf_dir):

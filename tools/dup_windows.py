@@ -8,21 +8,23 @@ least two `(` are hashed, so runs of bare names, brackets or `return`s
 do not count. A window is duplicated when its text occurs at two or more
 places (in one file or across files).
 
-Prints the number of duplicated windows, then how many of them touch
-each file and each pair of files. Stdlib only and deterministic:
+Scans every `*.py` under `etl_ch_destination_spark/` and prints the
+number of duplicated windows, then how many of them touch each file and
+each pair of files (every non-zero row; a file or pair not listed
+shares none). Stdlib only, deterministic, no options:
 
-    python tools/dup_windows.py [--root etl_ch_destination_spark] [--top 20]
+    python tools/dup_windows.py
 """
 
 from __future__ import annotations
 
-import argparse
 import ast
 import hashlib
 import itertools
 from collections import Counter, defaultdict
 from pathlib import Path
 
+ROOT = Path(__file__).resolve().parent.parent / "etl_ch_destination_spark"
 WINDOW = 6
 MIN_PARENS = 2
 
@@ -68,14 +70,7 @@ def scan(root: Path) -> dict[str, list[str]]:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--root", default=str(
-        Path(__file__).resolve().parent.parent / "etl_ch_destination_spark"))
-    ap.add_argument("--top", type=int, default=20,
-                    help="rows to print per table (0 = all)")
-    args = ap.parse_args()
-
-    dups = scan(Path(args.root))
+    dups = scan(ROOT)
     per_file: Counter[str] = Counter()
     per_pair: Counter[tuple[str, str]] = Counter()
     for files in dups.values():
@@ -83,14 +78,13 @@ def main() -> None:
         per_file.update(distinct)
         per_pair.update(itertools.combinations(distinct, 2))
 
-    top = args.top or None
     print(f"duplicated windows: {len(dups)}")
     print("\nper file:")
-    for f, n in sorted(per_file.items(), key=lambda kv: (-kv[1], kv[0]))[:top]:
+    for f, n in sorted(per_file.items(), key=lambda kv: (-kv[1], kv[0])):
         print(f"  {n:5d}  {f}")
     print("\nper file pair:")
     for (a, b), n in sorted(per_pair.items(),
-                            key=lambda kv: (-kv[1], kv[0]))[:top]:
+                            key=lambda kv: (-kv[1], kv[0])):
         print(f"  {n:5d}  {a} <-> {b}")
 
 
