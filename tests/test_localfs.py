@@ -1,6 +1,7 @@
 """The vendored local filesystem (session.get_spark binds ``file://`` to it):
 both Hadoop APIs resolve to it, what it creates has the stock modes, the
-sticky bit still lands, and the committed jar is the build of its sources."""
+sticky bit still lands, the jar (or its staged copy) comes first on the
+driver classpath, and the committed jar is the build of its sources."""
 
 from __future__ import annotations
 
@@ -10,8 +11,10 @@ import subprocess
 import sys
 import zipfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
+from etl_ch_destination_spark import appcds
 from etl_ch_destination_spark.session import LOCALFS_CONF, LOCALFS_JAR, get_spark
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -83,7 +86,7 @@ def test_set_permission_maps_every_bit_and_keeps_the_sticky_bit(spark, tmp_path)
     assert os.stat(target).st_mode & stat.S_ISVTX
 
 
-def test_get_spark_puts_the_jar_before_a_callers_classpath(spark, monkeypatch):
+def test_get_spark_puts_the_jar_before_a_callers_classpath(spark, monkeypatch, tmp_path):
     # the conftest session's JVM already holds the jar, so get_spark binds it
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", lambda self: self)
     extra = {"spark.driver.extraClassPath": "/caller/a.jar"}
@@ -95,6 +98,19 @@ def test_get_spark_puts_the_jar_before_a_callers_classpath(spark, monkeypatch):
     cluster = get_spark(master="spark://host:7077", extra_conf=extra)._options
     assert cluster["spark.driver.extraClassPath"] == "/caller/a.jar"
     assert not set(LOCALFS_CONF) & set(cluster)
+
+    # a JVM this call launches gets the jar's staged copy first, and the
+    # archive's flags before the caller's JVM options
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    monkeypatch.setattr(SparkContext, "_jvm", None)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    extra["spark.driver.extraJavaOptions"] = "-Dcaller=1"
+    fresh = get_spark(master="local[1]", extra_conf=extra)._options
+    assert fresh["spark.driver.extraClassPath"] == (
+        appcds.staged_jar(LOCALFS_JAR) + os.pathsep + "/caller/a.jar"
+    )
+    assert "-XX:ArchiveClassesAtExit=" in fresh["spark.driver.extraJavaOptions"]
+    assert fresh["spark.driver.extraJavaOptions"].endswith(" -Dcaller=1")
 
 
 def test_get_spark_in_a_jvm_started_without_the_jar_keeps_the_stock_binding(tmp_path):
